@@ -4,6 +4,18 @@ import org.apache.spark.sql.SparkSession
 /** Per-round benchmark: every registered query timed at
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout (driver contract). */
 object Bench {
+  /** An integer setting from the environment. A value that is not an
+    * integer (a typo, an empty string) falls back to `default` with one
+    * warning on stderr instead of aborting the run. */
+  private[graft] def intEnv(
+      name: String, default: Int, env: Map[String, String] = sys.env): Int =
+    env.get(name).fold(default) { raw =>
+      raw.toIntOption.getOrElse {
+        Console.err.println(s"Bench: $name=\"$raw\" is not an integer; using $default")
+        default
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -88,7 +100,7 @@ object Bench {
     // sweep numbers into corrected_total for a full round. 24 bounds a
     // worst-case contended sweep to ~2x while covering a full regime
     // shift; env-overridable for a deliberate full-retime pass.
-    val RETIME_CAP = sys.env.get("SPARK_GRAFT_RETIME_CAP").map(_.toInt).getOrElse(24)
+    val RETIME_CAP = intEnv("SPARK_GRAFT_RETIME_CAP", 24)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_local.json")
     val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", outPath)
     val prevExists = java.nio.file.Files.exists(java.nio.file.Paths.get(prevPath))
@@ -184,8 +196,8 @@ object Bench {
     // each bounds their noise at ~seconds of added sweep. Off with
     // SPARK_GRAFT_MINOF_REPS=0. Reporting-only, like the retime pass: the
     // headline `value` stays the raw sweep total.
-    val MINOF_COHORT = sys.env.get("SPARK_GRAFT_MINOF_COHORT").map(_.toInt).getOrElse(8)
-    val MINOF_REPS = sys.env.get("SPARK_GRAFT_MINOF_REPS").map(_.toInt).getOrElse(1)
+    val MINOF_COHORT = intEnv("SPARK_GRAFT_MINOF_COHORT", 8)
+    val MINOF_REPS = intEnv("SPARK_GRAFT_MINOF_REPS", 1)
     if (MINOF_REPS > 0 && MINOF_COHORT > 0) {
       val cohort = corrected.toSeq.filter(_._2 > 0).sortBy(-_._2).take(MINOF_COHORT)
       for ((name, _) <- cohort; r <- 1 to MINOF_REPS) {

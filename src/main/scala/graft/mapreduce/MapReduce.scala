@@ -221,7 +221,7 @@ object MapReduce {
     }
   }
 
-  /** Shared `groupByKey → flatMapGroups` path for the arbitrary-Scala
+  /** Shared grouped `flatMapGroups` path for the arbitrary-Scala
     * reduces. Projects to keys ++ data FIRST (the reference's assign does
     * this projection too, `src/Frames/MapReduce.hs:124`) — with an opaque
     * closure downstream, Catalyst cannot prune columns for us, so we must. */
@@ -236,17 +236,20 @@ object MapReduce {
     val projected = df.select((keys ++ extraCols).map(col): _*)
     val keySchema = StructType(keys.map(projected.schema(_)))
     val fullSchema = StructType(keySchema.fields ++ outSchema.fields)
-    val keyIdx = keys.map(projected.schema.fieldIndex).toArray
     val dataIdx = data.map(projected.schema.fieldIndex).toArray
     val dataSchema = StructType(data.map(projected.schema(_)))
 
     val keyEnc = Encoders.row(keySchema)
     val outEnc = Encoders.row(fullSchema)
 
+    // Group on the key COLUMNS, not a key closure: Catalyst groups the
+    // projected rows directly, with no AppendColumns step deserialising
+    // and re-serialising every row to compute the key. The value rows are
+    // the full projection — a value encoder over the data columns alone
+    // fails analysis (its deserializer must bind every input column).
     projected
-      .groupByKey { r: Row =>
-        new GenericRowWithSchema(keyIdx.map(r.get), keySchema): Row
-      }(keyEnc)
+      .groupBy(keys.map(col): _*)
+      .as[Row, Row](keyEnc, Encoders.row(projected.schema))
       .flatMapGroups { (k: Row, rows: Iterator[Row]) =>
         val dataRows = rows.map(r => new GenericRowWithSchema(dataIdx.map(r.get), dataSchema): Row)
         f(dataRows).map { cells =>

@@ -4,38 +4,48 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding tokenizer training and encoding (Sennrich et al.
-  * 2016 — the subword algorithm behind GPT/Llama-family vocabularies),
-  * distributed: the real version of the "BPE-ish regex" stand-in that
+  * 2016 — the subword algorithm behind GPT/Llama-family vocabularies):
+  * the real version of the "BPE-ish regex" stand-in that
   * `TextAnalysis.tokenCounts` uses for counting.
   *
   * Training is inherently iterative — merge r+1 depends on the corpus
-  * state after merge r — so the driver LOOPS, but each ROUND is a fixed
-  * two-job pipeline over the distributed word relation and commits up to
-  * `batchSize` merges (see [[trainMerges]] for the exactness proof):
-  *   1. pair counting: `flatMap` adjacent symbol pairs weighted by word
-  *      frequency → one partial-aggregated shuffle (vocabulary-sized, not
-  *      corpus-sized);
-  *   2. candidate selection: `orderBy(count desc, pair asc).limit(m+1)` —
-  *      distributed TakeOrdered, ships ≤ m+1 rows per partition; the
-  *      winning pairs (a few bytes) are the ONLY data that touches the
-  *      driver;
-  *   3. merge application: one narrow `map` over word symbol arrays
-  *      applying the whole batch.
-  * The corpus itself is touched ONCE (the initial word-count aggregate);
-  * every iteration runs over the word relation, whose size is the
-  * DISTINCT vocabulary. Lineage is cut with `localCheckpoint` every
-  * `checkpointEvery` merges (the d6 lesson: iterative plans otherwise
-  * grow superlinearly). In production BPE is trained on a corpus sample
-  * (standard practice — GPT-2's BPE saw ~40 GB); at 100 TB the sampling
-  * step (`mixtureSample` / `groupQuota`) feeds this trainer unchanged.
+  * state after merge r. The corpus itself is touched ONCE: one aggregate
+  * builds the checkpointed distinct-word relation ([[WordRelation]]), and
+  * every round runs over that relation, whose size is the DISTINCT
+  * vocabulary. [[trainMerges]] then picks where the rounds run from the
+  * relation's row count:
+  *   - at most `maxDistinctWords` words (the usual case — sampled BPE
+  *     training corpora hold a few million distinct words): the relation
+  *     is collected and the merge loop runs in driver memory with no job
+  *     per round — incremental pair counts plus a priority queue with
+  *     lazy invalidation, the Sennrich learn_bpe shape;
+  *   - above it: the driver LOOPS over a fixed two-job pipeline per ROUND
+  *     that commits up to `batchSize` merges (see [[trainMerges]] for the
+  *     exactness proof):
+  *     1. pair counting: `flatMap` adjacent symbol pairs weighted by word
+  *        frequency → one partial-aggregated shuffle (vocabulary-sized,
+  *        not corpus-sized);
+  *     2. candidate selection: `orderBy(count desc, pair asc).limit(m+1)`
+  *        — distributed TakeOrdered, ships ≤ m+1 rows per partition; the
+  *        winning pairs (a few bytes) are the ONLY data that touches the
+  *        driver;
+  *     3. merge application: one narrow `map` over word symbol arrays
+  *        applying the whole batch.
+  *     Lineage is cut with `localCheckpoint` every `checkpointEvery`
+  *     rounds (the d6 lesson: iterative plans otherwise grow
+  *     superlinearly).
+  * In production BPE is trained on a corpus sample (standard practice —
+  * GPT-2's BPE saw ~40 GB); at 100 TB the sampling step (`mixtureSample` /
+  * `groupQuota`) feeds this trainer unchanged.
   *
   * Determinism: ties in pair counts break lexicographically (count DESC,
   * pair ASC in CODE-POINT order — Spark's UTF-8 binary collation, which
   * the local loop's comparator matches explicitly; Java's UTF-16
   * `compareTo` would disagree on astral symbols) — integer counts +
-  * string compare, so the merge list is bit-identical on any
-  * partitioning/cluster (BpeSpec pins it against a single-machine
-  * reference implementation, including an astral tie case).
+  * string compare, so the merge list is bit-identical on either branch
+  * and any partitioning/cluster (BpeSpec pins both branches against a
+  * single-machine reference implementation, including an astral tie
+  * case).
   *
   * Words carry an end-of-word marker symbol `</w>` (the Sennrich
   * formulation) so merges can distinguish suffixes from infixes.
@@ -52,24 +62,21 @@ object Bpe {
   private[pipeline] def charSymbols(w: String): Seq[String] =
     w.codePoints().toArray.toSeq.map(cp => new String(Character.toChars(cp)))
 
-  private def wordRelation(df: DataFrame, textCol: String): Dataset[WordRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(explode(split(coalesce(col(textCol), lit("")), " ")).as("w"))
-      .where(col("w") =!= "")
-      .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .as[(String, Long)]
-      .map { case (w, n) => (charSymbols(w) :+ EOW, n) }
-  }
-
   /** Train `nMerges` merges. Returns the ranked merge list (driver-side:
     * a merge table IS driver-sized — ~50k entries in real vocabularies).
     *
-    * BATCHED merge selection: each round runs ONE pair-count shuffle and
-    * accepts up to `batchSize` merges from it, cutting the driver-
-    * sequential round count ~batchSize× (a 30k-merge vocabulary is ~1k
-    * rounds at the default instead of 60k jobs) while producing the
-    * EXACT sequential merge list. Why the acceptance rule is exact:
+    * Builds the checkpointed distinct-word relation once and counts it.
+    * Up to `maxDistinctWords` rows (default
+    * [[WordRelation.MaxDistinctWords]]), the merge loop runs on the
+    * driver, in memory; above it, the distributed batched loop below runs
+    * over the same checkpoint. Both yield the same list.
+    *
+    * The distributed branch selects merges in BATCHES: each round runs
+    * ONE pair-count shuffle and accepts up to `batchSize` merges from it,
+    * cutting the driver-sequential round count ~batchSize× (a 30k-merge
+    * vocabulary is ~1k rounds at the default instead of 60k jobs) while
+    * producing the EXACT sequential merge list. Why the acceptance rule
+    * is exact:
     *
     *   1. Candidates are scanned in (count DESC, pair ASC) order; a
     *      candidate is accepted while it shares NO symbol with any
@@ -93,22 +100,36 @@ object Bpe {
     * Worst case (all counts tied) the batch degenerates to one merge per
     * round — sequential behavior, never divergence. BpeSpec pins
     * bit-equality against the single-machine reference across batch
-    * sizes and randomized corpora. `checkpointEvery` counts ROUNDS
-    * (lineage grows one map per round).
-    *
-    * For REAL vocabulary targets (30k+ merges = hundreds of
-    * driver-sequential rounds even batched), prefer
-    * [[trainMergesLocal]]: same merge list, zero per-round job latency
-    * whenever the distinct-word relation fits the driver. */
+    * sizes and randomized corpora. */
   def trainMerges(
       df: DataFrame, textCol: String, nMerges: Int,
-      checkpointEvery: Int = 10, batchSize: Int = 32): Seq[(String, String)] = {
+      checkpointEvery: Int = 10, batchSize: Int = 32,
+      maxDistinctWords: Long = WordRelation.MaxDistinctWords): Seq[(String, String)] = {
     require(nMerges >= 0, "Bpe.trainMerges: nMerges must be >= 0")
     require(checkpointEvery >= 1, "Bpe.trainMerges: checkpointEvery must be >= 1")
     require(batchSize >= 1, "Bpe.trainMerges: batchSize must be >= 1")
+    require(maxDistinctWords >= 0, "Bpe.trainMerges: maxDistinctWords must be >= 0")
     val spark = df.sparkSession
     import spark.implicits._
-    var words = wordRelation(df, textCol).localCheckpoint()
+    val (words, nWords) = WordRelation.checkpointed(df, textCol)
+    if (nWords <= maxDistinctWords)
+      localMergeLoop(words.collect().map { case (w, n) => symbolRow(w, n) }, nMerges)
+    else
+      distributedMergeLoop(words.map { case (w, n) => symbolRow(w, n) },
+        nMerges, checkpointEvery, batchSize)
+  }
+
+  private def symbolRow(w: String, n: Long): WordRow = (charSymbols(w) :+ EOW, n)
+
+  /** The distributed batched loop behind [[trainMerges]], over the
+    * checkpointed word relation. `checkpointEvery` counts ROUNDS (lineage
+    * grows one map per round). */
+  private def distributedMergeLoop(
+      initial: Dataset[WordRow], nMerges: Int,
+      checkpointEvery: Int, batchSize: Int): Seq[(String, String)] = {
+    val spark = initial.sparkSession
+    import spark.implicits._
+    var words = initial
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var rounds = 0
     var exhausted = false
@@ -119,7 +140,7 @@ object Bpe {
       // the typed path round-trips every (pair, n) row through the serde
       // (the measured t21 lesson, NOTES.md r4). Integer sums and the same
       // (count desc, left, right) total order, so the merge list is
-      // unchanged (BpeSpec pins trainMerges ≡ trainMergesLocal); orderBy+
+      // unchanged (BpeSpec pins this branch ≡ the driver loop); orderBy+
       // limit stays the per-partition TakeOrderedAndProject.
       val top = words
         .flatMap { case (syms, n) =>
@@ -157,45 +178,7 @@ object Bpe {
     merges.toSeq
   }
 
-  /** Train merges with a DRIVER-LOCAL merge loop when the distinct-word
-    * relation fits a driver bound, else fall back to the distributed
-    * batched loop — the escape hatch for REAL vocabulary sizes.
-    *
-    * Why it exists: [[trainMerges]] is exact and distributed, but BPE is
-    * inherently sequential, so a real 30k-merge vocabulary still means
-    * hundreds of driver-coordinated rounds (each a full Spark job) even
-    * with batching — job-launch latency dominates. The (distinct-word,
-    * count) relation, however, is tiny relative to any corpus that needs
-    * Spark: sampled BPE training corpora (GPT-2 saw ~40 GB) hold a few
-    * million distinct words. So: ONE distributed aggregate builds the
-    * word relation (the corpus is never collected), and if its row count
-    * is within `maxDistinctWords` the merge loop runs entirely in driver
-    * memory with zero job launches — incremental pair counts plus a
-    * priority queue with lazy invalidation, the Sennrich learn_bpe
-    * shape — producing the EXACT same merge list (BpeSpec asserts
-    * local ≡ distributed ≡ reference, including tie-heavy corpora).
-    *
-    * The default bound (4M distinct words): a word row costs roughly
-    * chars + per-object overhead ≈ 100 B, and the pair-count/index maps
-    * another few hundred B per distinct pair (~2× words) — ≈ 1-2 GB at
-    * 4M words, conservative for default driver heaps. Above the bound
-    * the distributed loop takes over (one extra word-relation aggregate
-    * — corpus-touched-twice is the price of not guessing sizes). */
-  def trainMergesLocal(
-      df: DataFrame, textCol: String, nMerges: Int,
-      maxDistinctWords: Long = 4000000L,
-      checkpointEvery: Int = 10, batchSize: Int = 32): Seq[(String, String)] = {
-    require(nMerges >= 0, "Bpe.trainMergesLocal: nMerges must be >= 0")
-    require(maxDistinctWords >= 0, "Bpe.trainMergesLocal: maxDistinctWords must be >= 0")
-    val rel = wordRelation(df, textCol).persist()
-    try {
-      if (rel.count() > maxDistinctWords)
-        trainMerges(df, textCol, nMerges, checkpointEvery, batchSize)
-      else localMergeLoop(rel.collect(), nMerges)
-    } finally rel.unpersist()
-  }
-
-  /** The in-memory merge loop behind [[trainMergesLocal]]: incremental
+  /** The in-memory merge loop behind [[trainMerges]]: incremental
     * pair counts, a word index per pair, and a priority queue ordered
     * (count DESC, pair ASC) with lazy invalidation — a popped entry is
     * applied only if it matches the pair's CURRENT count (every count

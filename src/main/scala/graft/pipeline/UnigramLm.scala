@@ -13,27 +13,31 @@ import org.apache.spark.sql.functions._
   *
   * DETERMINISM BY CONSTRUCTION (the [[Bpe]] playbook): the E-step counts
   * are INTEGERS (word count × piece occurrences along the word's single
-  * best segmentation), so distributed partial sums are shuffle-order-
-  * invariant; every float the algorithm consumes (piece log-probs, the
-  * Viterbi DP) is derived from those integers by a fixed sequence of
-  * IEEE ops, and ties in the DP and in pruning break on explicit
-  * deterministic rules. Hence [[train]] (distributed E-step) and
-  * [[trainLocal]] (serial) produce the IDENTICAL model — spec-asserted —
-  * and a rerun on any partitioning reproduces it bit-for-bit. Unicode
+  * best segmentation), so partial sums are summation-order-invariant;
+  * every float the algorithm consumes (piece log-probs, the Viterbi DP)
+  * is derived from those integers by a fixed sequence of IEEE ops, and
+  * ties in the DP and in pruning break on explicit deterministic rules.
+  * Hence [[train]] produces the IDENTICAL model whether its E-steps run
+  * on the driver or distributed, on any partitioning, and identical to
+  * the serial reference [[trainLocal]] — spec-asserted. Unicode
   * contract: pieces are CODE-POINT sequences (`maxPieceLen` counts code
   * points, a surrogate pair is atomic, "single character" = one code
   * point, tie-breaks compare code-point order = Spark's UTF-8 binary
   * order) — so the guarantee holds on astral/emoji corpora too.
   *
-  * Scale shape: like BPE, training runs over the DISTINCT-WORD relation
-  * (vocab-sized, not corpus-sized) — one corpus shuffle builds it, then
-  * each EM round is ONE broadcast-model `mapPartitions` pass over the
-  * words whose model-sized integer count table aggregates partition-
-  * locally and merges driver-side with exact Long adds (no per-round
-  * Exchange — r14); the model itself (seed
-  * vocabulary, ≤ a few 100k pieces) is driver/broadcast-sized, the same
-  * justification as the IVF quantizer and the BPE merge table. Encoding
-  * is a broadcast-model narrow pass, no shuffle.
+  * Scale shape: like BPE, training runs over the checkpointed
+  * DISTINCT-WORD relation ([[WordRelation]]; vocab-sized, not
+  * corpus-sized) — one corpus shuffle builds it. Seed selection is always
+  * distributed (the substring table grows with the corpus). The EM rounds
+  * run where the relation's row count says: up to `maxDistinctWords`
+  * words, over the collected words in driver memory with no job per
+  * round; above it, each EM round is ONE broadcast-model `mapPartitions`
+  * pass over the words whose model-sized integer count table aggregates
+  * partition-locally and merges driver-side with exact Long adds (no
+  * per-round Exchange — r14). The model itself (seed vocabulary, ≤ a few
+  * 100k pieces) is driver/broadcast-sized, the same justification as the
+  * IVF quantizer and the BPE merge table. Encoding is a broadcast-model
+  * narrow pass, no shuffle.
   */
 object UnigramLm {
 
@@ -137,7 +141,7 @@ object UnigramLm {
     viterbi(word, logp, maxPieceLen).iterator.map(p => (p, n))
 
   /** Driver-side M-step + prune, shared VERBATIM by [[train]] and
-    * [[trainLocal]] so the two faces cannot drift: re-normalize counts to
+    * [[trainLocal]] so they cannot drift: re-normalize counts to
     * probs; when above target, keep the `keepFrac` fraction best pieces
     * by (count desc, piece asc in CODE-POINT order) but never drop a
     * single-code-point piece (they guarantee total segmentability —
@@ -206,46 +210,43 @@ object UnigramLm {
     finish(eStep(toLogp(counts)))
   }
 
-  /** Distributed training: the corpus collapses to its distinct-word
-    * relation once; every collect is MODEL-SIZED. E-step collects emit
+  /** Training: the corpus collapses to its checkpointed distinct-word
+    * relation once; every collect is MODEL-SIZED, except the word
+    * relation itself when it has at most `maxDistinctWords` rows (default
+    * [[WordRelation.MaxDistinctWords]]) — then the EM rounds run over the
+    * collected words on the driver, else distributed. E-step collects emit
     * only in-model pieces (Viterbi segments under the current vocab), and
-    * the seed step selects its top-`seedSize` pieces DISTRIBUTED — the
-    * substring-count relation (which grows with the corpus's distinct-
-    * substring space and would be a driver OOM at real scale) is
-    * aggregated and truncated cluster-side via `orderBy(count desc,
-    * piece asc).limit(seedSize)` ∪ single-char pieces BEFORE the collect,
-    * with the identical deterministic tie-break as [[seedSelect]]. */
+    * the seed step selects its top-`seedSize` pieces DISTRIBUTED on both
+    * branches — the substring-count relation (which grows with the
+    * corpus's distinct-substring space and would be a driver OOM at real
+    * scale) is aggregated and truncated cluster-side via `orderBy(count
+    * desc, piece asc).limit(seedSize)` ∪ single-char pieces BEFORE the
+    * collect, with the identical deterministic tie-break as
+    * [[seedSelect]]. */
   def train(
       df: DataFrame, textCol: String, vocabSize: Int,
       seedSize: Int = 500, maxPieceLen: Int = 8,
-      emIters: Int = 2, keepFrac: Double = 0.75, maxRounds: Int = 50): Seq[Piece] = {
+      emIters: Int = 2, keepFrac: Double = 0.75, maxRounds: Int = 50,
+      maxDistinctWords: Long = WordRelation.MaxDistinctWords): Seq[Piece] = {
     require(vocabSize >= 1 && seedSize >= vocabSize,
       "train: need vocabSize >= 1 and seedSize >= vocabSize")
+    require(maxDistinctWords >= 0, "train: maxDistinctWords must be >= 0")
     val spark = df.sparkSession
     import spark.implicits._
-    val words: Dataset[(String, Long)] = df
-      .select(explode(split(coalesce(col(textCol), lit("")), " ")).as("w"))
-      .where(col("w") =!= "")
-      .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .as[(String, Long)]
-    val wordsCkRaw = words.toDF().localCheckpoint().as[(String, Long)]
-    // r15: training is ~20 SEQUENTIAL driver-paced jobs over this
-    // vocab-sized relation, so per-job task-launch overhead — not data —
-    // is the floor (the r14 driver measured p19 FASTER at 8 cores than
-    // 32). Right-size the relation once: ~20k words per partition, capped
-    // at the session parallelism — scale-adaptive, so a real vocabulary
-    // still fans out to every core while a bench-scale one stops paying
-    // 19 × 32 mostly-empty task launches. The count() runs over blocks
-    // the eager checkpoint just materialized; coalesce is narrow (no
-    // shuffle) and partitioning never changes results: E-step counts are
-    // exact integer sums (order-free), spec-pinned == trainLocal.
-    val wordsCk = {
-      val nWords = wordsCkRaw.count()
-      val nPart = math.max(1L, math.min(
-        spark.sparkContext.defaultParallelism.toLong, nWords / 20000L + 1L)).toInt
-      if (nPart < wordsCkRaw.rdd.getNumPartitions) wordsCkRaw.coalesce(nPart)
-      else wordsCkRaw
-    }
+    val (wordsCkRaw, nWords) = WordRelation.checkpointed(df, textCol)
+    // r15: the seed step, and on the distributed branch ~20 E-steps, are
+    // SEQUENTIAL driver-paced jobs over this vocab-sized relation, so
+    // per-job task-launch overhead — not data — is the floor (the r14
+    // driver measured p19 FASTER at 8 cores than 32). Right-size the
+    // relation once: ~20k words per partition, capped at the session
+    // parallelism — scale-adaptive, so a real vocabulary still fans out
+    // to every core while a bench-scale one stops paying 19 × 32
+    // mostly-empty task launches. coalesce is narrow (no shuffle) and
+    // never raises the partition count, so it applies unconditionally;
+    // partitioning never changes results: E-step counts are exact integer
+    // sums (order-free), spec-pinned == trainLocal.
+    val wordsCk = wordsCkRaw.coalesce(math.max(1L, math.min(
+      spark.sparkContext.defaultParallelism.toLong, nWords / 20000L + 1L)).toInt)
     // r14 opt: E-step count tables are INTEGER sums of model-sized maps —
     // partition-local hash maps merged with exact Long adds are
     // bit-identical to the groupBy+collect they replace (integer addition
@@ -254,16 +255,11 @@ object UnigramLm {
     // merged result stays model-sized (in-model pieces only), so the
     // driver holds O(vocab), same as the collect before.
     def sumCounts(contrib: Dataset[(String, Long)]): Map[String, Long] =
-      contrib.rdd.mapPartitions { it =>
-        val m = new java.util.HashMap[String, Long]()
-        it.foreach { case (p, n) =>
-          m.merge(p, n, (a, b) => a + b)
-        }
-        Iterator(m)
-      }.fold(new java.util.HashMap[String, Long]()) { (a, b) =>
-        b.forEach((p, n) => a.merge(p, n, (x, y) => x + y))
-        a
-      }.asScala.toMap
+      contrib.rdd.mapPartitions(it => Iterator(tally(it)))
+        .fold(new java.util.HashMap[String, Long]()) { (a, b) =>
+          b.forEach((p, n) => a.merge(p, n, (x, y) => x + y))
+          a
+        }.asScala.toMap
     // Distributed seed selection: aggregate the (corpus-scale) substring
     // counts once, take top-seedSize by (count desc, piece asc) — a total
     // order, pieces being the distinct groupBy key — union ALL single-char
@@ -283,23 +279,38 @@ object UnigramLm {
         sel.as[(String, Long)].collect().toMap
       } finally substrCounts.unpersist()
     }
-    def eStep(logp: collection.Map[String, Double]): Map[String, Long] = {
-      val b = spark.sparkContext.broadcast(logp)
-      try sumCounts(wordsCk.mapPartitions(_.flatMap { case (w, n) =>
-        emContrib(w, n, b.value, maxPieceLen)
-      }))
-      // async unpersist, not the (blocking) destroy: the E-step action is
-      // complete, nothing reads the broadcast again — no reason to hold
-      // ~20 sequential rounds hostage to a cleanup RPC round-trip each
-      // (r15; driver-side metadata is reclaimed by the ContextCleaner)
-      finally b.unpersist(blocking = false)
-    }
+    val eStep: collection.Map[String, Double] => Map[String, Long] =
+      if (nWords <= maxDistinctWords) {
+        val words = wordsCkRaw.collect()
+        logp => tally(words.iterator.flatMap { case (w, n) =>
+          emContrib(w, n, logp, maxPieceLen)
+        }).asScala.toMap
+      } else { logp =>
+        val b = spark.sparkContext.broadcast(logp)
+        try sumCounts(wordsCk.mapPartitions(_.flatMap { case (w, n) =>
+          emContrib(w, n, b.value, maxPieceLen)
+        }))
+        // async unpersist, not the (blocking) destroy: the E-step action
+        // is complete, nothing reads the broadcast again — no reason to
+        // hold ~20 sequential rounds hostage to a cleanup RPC round-trip
+        // each (r15; driver-side metadata is reclaimed by the
+        // ContextCleaner)
+        finally b.unpersist(blocking = false)
+      }
     loop(seedCounts, eStep, vocabSize, maxRounds, emIters, keepFrac)
   }
 
-  /** Serial reference: the identical loop over a collected word list —
-    * the real-vocab escape hatch (word relations are vocab-sized) and
-    * the spec's ground truth for [[train]]. */
+  /** Integer piece counts summed with exact Long adds — summation order
+    * can never matter. */
+  private def tally(it: Iterator[(String, Long)]): java.util.HashMap[String, Long] = {
+    val m = new java.util.HashMap[String, Long]()
+    it.foreach { case (p, n) => m.merge(p, n, (a, b) => a + b) }
+    m
+  }
+
+  /** Serial reference: the identical loop over an in-memory word list,
+    * with seed selection and E-steps folded on one thread — the spec's
+    * ground truth for both branches of [[train]]. */
   def trainLocal(
       words: Seq[(String, Long)], vocabSize: Int,
       seedSize: Int = 500, maxPieceLen: Int = 8,

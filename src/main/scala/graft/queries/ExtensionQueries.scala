@@ -3074,15 +3074,16 @@ object ExtensionQueries {
     }
   }
 
-  /** Distributed BPE training (Sennrich et al. 2016) on the documents
-    * corpus — 20 merges, returned as the ranked merge table. Rows-only:
-    * the iterative argmax loop has no SQL analog; determinism (count
-    * DESC, pair ASC tie-break) and reference equivalence are pinned by
-    * BpeSpec instead. Training actions at query construction are
-    * index-build cost, same justification as the IVF quantizer.
-    * Deliberately stays on the DISTRIBUTED [[graft.pipeline.Bpe.trainMerges]]
-    * path so the gate exercises it; real-vocab users call
-    * `trainMergesLocal` (spec-asserted to yield the identical list). */
+  /** BPE training (Sennrich et al. 2016) on the documents corpus — 20
+    * merges, returned as the ranked merge table. Rows-only: the iterative
+    * argmax loop has no SQL analog; determinism (count DESC, pair ASC
+    * tie-break) and reference equivalence are pinned by BpeSpec instead.
+    * Training actions at query construction are index-build cost, same
+    * justification as the IVF quantizer. [[graft.pipeline.Bpe.trainMerges]]
+    * builds the distinct-word relation distributed and, since it is far
+    * below the driver bound here, runs the merge loop on the driver;
+    * TokenizerGateSpec trains this shape through both branches and pins
+    * them equal. */
   private def p8(s: SparkSession, dir: String): DataFrame = {
     val merges = bpeMerges(s, dir, nMerges = 20)
     // train-then-persist (the production train job's full shape) — lets
@@ -3109,7 +3110,9 @@ object ExtensionQueries {
     * documents corpus — vocab 40 over the word-soup alphabet. Rows-only:
     * iterative EM has no SQL analog; determinism, partitioning
     * invariance, and the distributed ≡ local equivalence are pinned by
-    * UnigramLmSpec (the p8 justification verbatim). */
+    * UnigramLmSpec (the p8 justification verbatim). Seed selection runs
+    * distributed; the EM rounds run on the driver, the word relation
+    * being far below the bound (TokenizerGateSpec pins both branches). */
   private def p19(s: SparkSession, dir: String): DataFrame = {
     val model = unigramModel(s, dir, vocabSize = 40)
     // train-then-persist is the production train job's full shape; the

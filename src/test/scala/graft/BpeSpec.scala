@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.Bpe
+import graft.pipeline.{Bpe, WordRelation}
 
-/** Distributed BPE vs a transparent single-machine reference
+/** Both branches of BPE training (driver loop, and distributed loop via
+  * `maxDistinctWords = 0`) vs a transparent single-machine reference
   * implementation — merge lists must be bit-identical (deterministic
   * tie-break), independent of partitioning; encoding must replay
   * training exactly on seen words and degrade to chars on unseen ones. */
@@ -46,15 +47,15 @@ class BpeSpec extends AnyFunSuite {
     val df = corpus.toDF("text")
     val expect = refTrain(corpus, 15)
     assert(expect.size == 15, "fixture must support 15 merges")
-    assert(Bpe.trainMerges(df, "text", 15, checkpointEvery = 4) == expect)
-    assert(Bpe.trainMerges(df.repartition(5), "text", 15) == expect)
+    assert(Bpe.trainMerges(df, "text", 15, checkpointEvery = 4, maxDistinctWords = 0) == expect)
+    assert(Bpe.trainMerges(df.repartition(5), "text", 15, maxDistinctWords = 0) == expect)
   }
 
   test("batched merge selection is exact: every batch size yields the sequential list") {
     val df = corpus.toDF("text")
     val expect = refTrain(corpus, 15)
     for (bs <- Seq(1, 2, 4, 8, 32))
-      assert(Bpe.trainMerges(df, "text", 15, batchSize = bs) == expect,
+      assert(Bpe.trainMerges(df, "text", 15, batchSize = bs, maxDistinctWords = 0) == expect,
         s"batchSize=$bs diverged from the sequential reference")
   }
 
@@ -68,15 +69,16 @@ class BpeSpec extends AnyFunSuite {
         .map(_ => ('a' + rnd.nextInt(3)).toChar).mkString)
       val text = words.mkString(" ")
       val expect = refTrain(Seq(text), 12)
-      val got = Bpe.trainMerges(Seq(Tuple1(text)).toDF("text"), "text", 12, batchSize = 8)
+      val got = Bpe.trainMerges(Seq(Tuple1(text)).toDF("text"), "text", 12,
+        batchSize = 8, maxDistinctWords = 0)
       assert(got == expect, s"seed=$seed: batched $got != sequential $expect")
     }
   }
 
-  test("trainMergesLocal: local loop == reference == distributed; tiny bound falls back") {
+  test("size gate: driver loop == reference == distributed branch") {
     val df = corpus.toDF("text")
     val expect = refTrain(corpus, 15)
-    assert(Bpe.trainMergesLocal(df, "text", 15) == expect,
+    assert(Bpe.trainMerges(df, "text", 15) == expect,
       "local merge loop diverged from the sequential reference")
     // tie-heavy randomized corpora — the lazy-invalidation PQ must make
     // exactly the textbook decisions under maximal count ties
@@ -86,21 +88,27 @@ class BpeSpec extends AnyFunSuite {
         .map(_ => ('a' + rnd.nextInt(3)).toChar).mkString)
       val text = words.mkString(" ")
       val expectR = refTrain(Seq(text), 12)
-      val got = Bpe.trainMergesLocal(Seq(Tuple1(text)).toDF("text"), "text", 12)
+      val got = Bpe.trainMerges(Seq(Tuple1(text)).toDF("text"), "text", 12)
       assert(got == expectR, s"seed=$seed: local $got != sequential $expectR")
     }
-    // a bound below the vocabulary size must fall back to the
-    // distributed loop — and still produce the same list
-    assert(Bpe.trainMergesLocal(df, "text", 15, maxDistinctWords = 1) == expect)
-    // more merges than the corpus supports: stops at exhaustion like ref
-    assert(Bpe.trainMergesLocal(df, "text", 10000) == refTrain(corpus, 10000))
+    // a bound below the vocabulary size takes the distributed loop —
+    // and still produces the same list
+    assert(Bpe.trainMerges(df, "text", 15, maxDistinctWords = 1) == expect)
+    // more merges than the corpus supports: both branches stop at
+    // exhaustion like ref
+    val all = refTrain(corpus, 10000)
+    assert(Bpe.trainMerges(df, "text", 10000) == all)
+    assert(Bpe.trainMerges(df, "text", 10000, maxDistinctWords = 1) == all)
   }
 
   test("training stops early when no adjacent pairs remain") {
     // single-char words + EOW: one merge each, then nothing left
-    val merges = Bpe.trainMerges(Seq("a b a").toDF("text"), "text", 50)
-    assert(merges.size < 50 && merges.nonEmpty)
-    assert(merges.contains(("a", Bpe.EOW)))
+    for (bound <- Seq(WordRelation.MaxDistinctWords, 0L)) {
+      val merges = Bpe.trainMerges(Seq("a b a").toDF("text"), "text", 50,
+        maxDistinctWords = bound)
+      assert(merges.size < 50 && merges.nonEmpty)
+      assert(merges.contains(("a", Bpe.EOW)))
+    }
   }
 
   test("encode replays training on seen words; unseen words degrade to chars+known merges") {
@@ -152,8 +160,8 @@ class BpeSpec extends AnyFunSuite {
     val smile = new String(Character.toChars(0x1F600))
     val corpus = Seq(s"${smile}a ${e000}b", s"${smile}a ${e000}b")
     val df = corpus.toDF("text")
-    val dist = Bpe.trainMerges(df, "text", 6)
-    val local = Bpe.trainMergesLocal(df, "text", 6)
+    val dist = Bpe.trainMerges(df, "text", 6, maxDistinctWords = 0)
+    val local = Bpe.trainMerges(df, "text", 6)
     assert(dist == local, s"dist=$dist local=$local")
     // and the merge symbols keep surrogate pairs whole
     assert(dist.flatMap(p => Seq(p._1, p._2)).forall(s =>

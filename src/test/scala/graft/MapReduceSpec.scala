@@ -112,6 +112,18 @@ class MapReduceSpec extends AnyFunSuite {
     val nullGroup = out.where(col("k").isNull).collect()
     assert(nullGroup.length == 1 && nullGroup.head.getDouble(1) == 3.0)
   }
+
+  test("reduceAndAddKey groups null keys as one group") {
+    val in = Seq[(java.lang.Double, Double)]((null, 1.0), (null, 2.0), (1.0, 3.0))
+      .toDF("k", "v")
+    val out = MapReduce(in, Unpack.NoOp, Assign.SplitOnKeys(Seq("k")),
+      Reduce.ReduceAndAddKey(
+        StructType(Seq(StructField("s", DoubleType))),
+        rows => Seq[Any](rows.map(_.getDouble(0)).sum)))
+    val nullGroup = out.where(col("k").isNull).collect()
+    assert(nullGroup.length == 1 && nullGroup.head.getDouble(1) == 3.0)
+    assert(out.count() == 2)
+  }
 }
 
 object MapReduceSpec {

@@ -2,9 +2,10 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
-import graft.pipeline.{Bpe, UnigramLm}
+import graft.pipeline.{Bpe, UnigramLm, WordRelation}
 
-/** Randomized distributed ≡ local parity for both tokenizer trainers on
+/** Randomized distributed ≡ driver-branch parity for both tokenizer
+  * trainers (the distributed branch forced with `maxDistinctWords = 0`) on
   * Unicode-hostile corpora: alphabets mixing ASCII, a 2-byte char, a
   * private-use BMP char (U+E000), and astral symbols (surrogate pairs)
   * maximize collation-tie and boundary-enumeration seams — the regime
@@ -39,19 +40,26 @@ object TokenizerUnicodeProps extends Properties("TokenizerUnicode") {
         .map { case (w, ws) => (w, ws.size.toLong) }.toSeq
       val local = UnigramLm.trainLocal(wordCounts, vocabSize = 5,
         seedSize = 7, maxPieceLen = 3, maxRounds = 6)
-      val dist = UnigramLm.train(
+      def train(bound: Long) = UnigramLm.train(
         words.map(Tuple1(_)).toDF("text").repartition(parts), "text",
-        vocabSize = 5, seedSize = 7, maxPieceLen = 3, maxRounds = 6)
-      Prop(dist == local) :| s"corpus=$words dist=$dist local=$local"
+        vocabSize = 5, seedSize = 7, maxPieceLen = 3, maxRounds = 6,
+        maxDistinctWords = bound)
+      val dist = train(0L)
+      val driver = train(WordRelation.MaxDistinctWords)
+      Prop(dist == local && driver == local) :|
+        s"corpus=$words dist=$dist driver=$driver local=$local"
     }
 
+  // "trainMergesLocal" names the driver-local loop, now reached through
+  // trainMerges' default size gate; the distributed branch is forced
+  // with maxDistinctWords = 0
   property("Bpe.trainMerges == trainMergesLocal on astral corpora, any partitioning") =
     Prop.forAll(corpusGen, Gen.oneOf(1, 5)) { (words, parts) =>
       // one row per word: repartition spreads real data, so the
       // partitioning dimension exercises the distributed aggregates
       val df = words.map(Tuple1(_)).toDF("text").repartition(parts)
-      val dist = Bpe.trainMerges(df, "text", 8)
-      val local = Bpe.trainMergesLocal(df, "text", 8)
+      val dist = Bpe.trainMerges(df, "text", 8, maxDistinctWords = 0)
+      val local = Bpe.trainMerges(df, "text", 8)
       val wholeCp = (dist.iterator ++ local.iterator)
         .flatMap(p => Iterator(p._1, p._2))
         .forall(_.codePoints().toArray.forall(cp => cp < 0xD800 || cp > 0xDFFF))

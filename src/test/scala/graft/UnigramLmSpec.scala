@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.UnigramLm
+import graft.pipeline.{UnigramLm, WordRelation}
 
 class UnigramLmSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -20,11 +20,12 @@ class UnigramLmSpec extends AnyFunSuite {
       .map { case (w, ws) => (w, ws.size.toLong) }.toSeq
     val local = UnigramLm.trainLocal(words, vocabSize = 12,
       seedSize = 50, maxPieceLen = 4)
-    for (parts <- Seq(1, 7)) {
+    // bound 0: distributed EM; the default bound: EM on the driver
+    for (parts <- Seq(1, 7); bound <- Seq(0L, WordRelation.MaxDistinctWords)) {
       val dist = UnigramLm.train(
         corpus.toDF("text").repartition(parts), "text", vocabSize = 12,
-        seedSize = 50, maxPieceLen = 4)
-      assert(dist == local, s"diverged at $parts partitions")
+        seedSize = 50, maxPieceLen = 4, maxDistinctWords = bound)
+      assert(dist == local, s"diverged at $parts partitions, bound $bound")
     }
     // vocab respects the target modulo the always-kept single characters
     val chars = local.map(_.piece).filter(_.length == 1).toSet
@@ -53,11 +54,11 @@ class UnigramLmSpec extends AnyFunSuite {
       .map { case (w, ws) => (w, ws.size.toLong) }.toSeq
     val local = UnigramLm.trainLocal(words, vocabSize = 6,
       seedSize = 8, maxPieceLen = 3)
-    for (parts <- Seq(1, 5)) {
+    for (parts <- Seq(1, 5); bound <- Seq(0L, WordRelation.MaxDistinctWords)) {
       val dist = UnigramLm.train(
         astral.toDF("text").repartition(parts), "text", vocabSize = 6,
-        seedSize = 8, maxPieceLen = 3)
-      assert(dist == local, s"diverged at $parts partitions")
+        seedSize = 8, maxPieceLen = 3, maxDistinctWords = bound)
+      assert(dist == local, s"diverged at $parts partitions, bound $bound")
     }
     // no piece ever contains an unpaired surrogate (pairs are atomic)
     assert(local.forall(_.piece.codePoints().toArray
