@@ -1,8 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
+import graft.core.SmallRelation
 import graft.text.TextFunctions._
 
 /** Deduplication operators for training-data pipelines (driver extension
@@ -19,6 +20,19 @@ import graft.text.TextFunctions._
   * cardinality scales with the corpus, so partitions stay bounded; a
   * pathological bucket (e.g. the empty document) is a salting candidate —
   * callers can pre-filter degenerate docs.
+  *
+  * Small inputs skip all of that: [[ngramJaccardPairs]], [[minhashLsh]]
+  * (and [[graft.text.Curation.decontaminateFuzzy]]) ask
+  * [[graft.core.SmallRelation.fits]] whether their input's plan estimate
+  * is within both the broadcast threshold and their kernel's measured
+  * ceiling ([[InTaskJoins.PpjoinMaxBytes]], [[InTaskJoins.LshMaxBytes]]).
+  * When it is, they build the same per-row inputs (token sets, shingle
+  * sets) with the same column expressions, `coalesce(1)` them and run an
+  * in-memory kernel ([[InTaskJoins]]: PPJoin over an inverted prefix
+  * index, MinHash-LSH over a band-key hash map) — one stage instead of
+  * 7–8 waves of shuffle stages. The result is still a lazy frame with the
+  * same schema and the same rows; above the gate the distributed plans
+  * below run unchanged.
   */
 object Dedup {
 
@@ -29,14 +43,30 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("text_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** One row per (doc, shingle): the exploded relational form all the
-    * shingle-based dedup variants build on. Shingles are per-doc distinct
-    * (set semantics). */
-  private def shingleRows(
+  /** One row per doc with at least `shingleN` tokens: (id, distinct word
+    * `shingleN`-gram shingles). The in-task kernels read these sets
+    * directly. */
+  private[graft] def shingleSets(
       df: DataFrame, idCol: String, textCol: String, shingleN: Int): DataFrame =
     df.select(col(idCol), tokens(col(textCol)).as("ws"))
       .where(size(col("ws")) >= shingleN)
-      .select(col(idCol), explode(wordShingles(col("ws"), shingleN)).as("shingle"))
+      .select(col(idCol), wordShingles(col("ws"), shingleN).as("shingles"))
+
+  /** One row per (doc, shingle): the exploded relational form all the
+    * distributed shingle-based dedup variants build on. Shingles are
+    * per-doc distinct (set semantics). */
+  private def shingleRows(
+      df: DataFrame, idCol: String, textCol: String, shingleN: Int): DataFrame =
+    shingleSets(df, idCol, textCol, shingleN)
+      .select(col(idCol), explode(col("shingles")).as("shingle"))
+
+  /** Unordered in-task pair rows (u, v, jaccard) → (id_a, id_b, jaccard)
+    * with `id_a < id_b` in Spark's order for the id type — the distributed
+    * plans' own predicate, so both branches order ids identically. */
+  private def orderPairs(uv: DataFrame): DataFrame =
+    uv.select(least(col("u"), col("v")).as("id_a"),
+        greatest(col("u"), col("v")).as("id_b"), col("jaccard"))
+      .where(col("id_a") < col("id_b"))
 
   /** Per-doc MinHash signature (mh0..mh{k-1}) + verification shingle set,
     * as ONE partial-agg shuffle over the exploded shingle rows. ONE md5
@@ -52,8 +82,11 @@ object Dedup {
     * caller reads it from two downstream branches — band keys and
     * verification sets — and Spark does not share plan subtrees across a
     * self-join: without the persist the whole shingle explode + shuffle
-    * would run twice. Shared by [[minhashLsh]] (within-corpus pairs) and
-    * [[graft.text.Curation.decontaminateFuzzy]] (cross-relation). */
+    * would run twice. Shared by the distributed branches of [[minhashLsh]]
+    * (within-corpus pairs) and [[graft.text.Curation.decontaminateFuzzy]]
+    * (cross-relation); their in-task branches (below
+    * [[graft.core.SmallRelation.fits]]) compute the same signatures and band
+    * keys bit for bit in [[InTaskJoins.lsh]] and never persist. */
   private[graft] def minhashDocAgg(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, k: Int): DataFrame = {
@@ -91,12 +124,32 @@ object Dedup {
     * array exprs can be re-evaluated per reference — the aggregate
     * formulation measured ~300× faster at sf0.1 and is also the shape that
     * distributes: every step is a codegen'd partial-aggregate shuffle on
-    * uniform hash keys, never a per-row mega-expression. */
+    * uniform hash keys, never a per-row mega-expression.
+    *
+    * When [[graft.core.SmallRelation.fits]] holds for `df` under
+    * [[InTaskJoins.LshMaxBytes]] (and the id is an atomic type), the
+    * shingle sets are built with the same expressions
+    * and the rest runs in one task ([[InTaskJoins.minhashPairs]]): the
+    * same signatures and band keys, candidates from a band-key hash map,
+    * each verified once with exact Jaccard — the same rows, no shuffle. */
   def minhashLsh(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 12, bands: Int = 4, rows: Int = 3,
       threshold: Double = 0.5): DataFrame = {
     require(bands * rows == k, s"minhashLsh: bands*rows must equal k ($bands*$rows != $k)")
+    val sets = shingleSets(df, idCol, textCol, shingleN)
+    val idType = sets.schema.fields.head.dataType
+    if (InTaskJoins.atomicKey(idType) && SmallRelation.fits(InTaskJoins.LshMaxBytes, df))
+      orderPairs(sets.coalesce(1)
+        .mapPartitions(InTaskJoins.minhashPairs(_, k, bands, rows, threshold))(
+          Encoders.row(InTaskJoins.pairSchema(idType)))
+        .toDF())
+    else distributedMinhashLsh(df, idCol, textCol, shingleN, k, bands, rows, threshold)
+  }
+
+  private def distributedMinhashLsh(
+      df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int, k: Int, bands: Int, rows: Int, threshold: Double): DataFrame = {
     val docAgg = minhashDocAgg(df, idCol, textCol, shingleN, k)
     val bandKeys = docAgg.select(
       col(idCol), posexplode(array(bandKeyCols(bands, rows): _*)).as(Seq("band", "band_key")))
@@ -422,7 +475,17 @@ object Dedup {
     * All `ceil(t·n)` bounds subtract a 1e-9 epsilon before rounding: in
     * doubles `10 * 0.9 == 9.000000000000002`, and a naive ceil would
     * shorten the prefix / tighten a bound and silently drop a borderline
-    * pair whose Jaccard is exactly the threshold. */
+    * pair whose Jaccard is exactly the threshold.
+    *
+    * When [[graft.core.SmallRelation.fits]] holds for the token-set
+    * relation under [[InTaskJoins.PpjoinMaxBytes]] (and every block column
+    * is atomic), the pair join runs in
+    * one task instead ([[InTaskJoins.ppjoin]]): the same prefix, length and
+    * positional filters over an in-memory inverted prefix index, the same
+    * verified rows, one stage. `rarestFirst` then only names the
+    * distributed branch's order. With `collapseExactDuplicates` the gate
+    * applies to the representatives' join. Ids identify docs: one row per
+    * id. */
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], threshold: Double,
@@ -463,6 +526,20 @@ object Dedup {
   }
 
   private def pairsFromTokenSets(
+      base: DataFrame, idCol: String,
+      blockCols: Seq[String], threshold: Double, rarestFirst: Boolean): DataFrame = {
+    val kernelIn = base.select(col(idCol) +: blockCols.map(col) :+ col("toks"): _*)
+    val types = kernelIn.schema.fields.map(_.dataType)
+    if (types.slice(1, blockCols.length + 1).forall(InTaskJoins.atomicKey) &&
+        SmallRelation.fits(InTaskJoins.PpjoinMaxBytes, base))
+      orderPairs(kernelIn.coalesce(1)
+        .mapPartitions(InTaskJoins.ppjoin(_, blockCols.length, threshold))(
+          Encoders.row(InTaskJoins.pairSchema(types.head)))
+        .toDF())
+    else distributedPairs(base, idCol, blockCols, threshold, rarestFirst)
+  }
+
+  private def distributedPairs(
       base: DataFrame, idCol: String,
       blockCols: Seq[String], threshold: Double, rarestFirst: Boolean): DataFrame = {
     val tokRows = base.select(col(idCol) +: blockCols.map(col) :+

@@ -224,7 +224,13 @@ object MapReduce {
   /** Shared grouped `flatMapGroups` path for the arbitrary-Scala
     * reduces. Projects to keys ++ data FIRST (the reference's assign does
     * this projection too, `src/Frames/MapReduce.hs:124`) — with an opaque
-    * closure downstream, Catalyst cannot prune columns for us, so we must. */
+    * closure downstream, Catalyst cannot prune columns for us, so we must.
+    *
+    * With no key columns every row is in one group: the rows are moved to
+    * a single partition and `f` runs once over all of them (Spark's
+    * grouped operators reject an empty grouping). An empty input yields no
+    * rows, as in the keyed path — the reference groups into a `Map`, which
+    * has no entry without rows. */
   private def grouped(
       df: DataFrame, keys: Seq[String], data: Seq[String], outSchema: StructType)(
       f: Iterator[Row] => Iterator[Seq[Any]]): DataFrame = {
@@ -239,22 +245,27 @@ object MapReduce {
     val dataIdx = data.map(projected.schema.fieldIndex).toArray
     val dataSchema = StructType(data.map(projected.schema(_)))
 
-    val keyEnc = Encoders.row(keySchema)
     val outEnc = Encoders.row(fullSchema)
+    val toData = (r: Row) => new GenericRowWithSchema(dataIdx.map(r.get), dataSchema): Row
 
-    // Group on the key COLUMNS, not a key closure: Catalyst groups the
-    // projected rows directly, with no AppendColumns step deserialising
-    // and re-serialising every row to compute the key. The value rows are
-    // the full projection — a value encoder over the data columns alone
-    // fails analysis (its deserializer must bind every input column).
-    projected
-      .groupBy(keys.map(col): _*)
-      .as[Row, Row](keyEnc, Encoders.row(projected.schema))
-      .flatMapGroups { (k: Row, rows: Iterator[Row]) =>
-        val dataRows = rows.map(r => new GenericRowWithSchema(dataIdx.map(r.get), dataSchema): Row)
-        f(dataRows).map { cells =>
-          new GenericRowWithSchema((k.toSeq ++ cells).toArray, fullSchema): Row
-        }
-      }(outEnc)
+    if (keys.isEmpty)
+      projected.repartition(1).mapPartitions { rows =>
+        if (rows.isEmpty) Iterator.empty
+        else f(rows.map(toData)).map(cells => new GenericRowWithSchema(cells.toArray, fullSchema): Row)
+      }(outEnc).toDF()
+    else
+      // Group on the key COLUMNS, not a key closure: Catalyst groups the
+      // projected rows directly, with no AppendColumns step deserialising
+      // and re-serialising every row to compute the key. The value rows are
+      // the full projection — a value encoder over the data columns alone
+      // fails analysis (its deserializer must bind every input column).
+      projected
+        .groupBy(keys.map(col): _*)
+        .as[Row, Row](Encoders.row(keySchema), Encoders.row(projected.schema))
+        .flatMapGroups { (k: Row, rows: Iterator[Row]) =>
+          f(rows.map(toData)).map { cells =>
+            new GenericRowWithSchema((k.toSeq ++ cells).toArray, fullSchema): Row
+          }
+        }(outEnc)
   }
 }

@@ -68,17 +68,20 @@ object RangeJoin {
     * evaluations from a few hundred thousand input rows) then runs
     * single-threaded — measured 5.6 s → sub-second at sf0.1 parallelism.
     * Conditional so it can never hurt at scale: only fires when the
-    * input's scan partitioning is below the session parallelism AND the
     * optimizer's size estimate says the exchange is pocket change
     * (≤ 16 MB/core); a 100 TB relation keeps its thousands of partitions
-    * and never pays a shuffle. Value-neutral: repartition changes row
-    * placement, never the row set. */
+    * and never pays a shuffle. An input already read from at least one
+    * file per core is left alone too (x36 over an 8-file copy of sf0.1
+    * on local[4]: 1.79 s without the exchange, 1.97 s with it, medians of
+    * 12). The file count stands
+    * in for the scan's partition count, which would build the input's RDD
+    * and, under AQE, run its upstream shuffles while the query is still
+    * being built; `inputFiles` reads only the cached file listing.
+    * Value-neutral: repartition changes row placement, never the row set. */
   private def spread(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val target = sc.defaultParallelism
+    val target = df.sparkSession.sparkContext.defaultParallelism
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (df.rdd.getNumPartitions < target &&
-        bytes <= BigInt(target.toLong * 16L * 1024 * 1024))
+    if (bytes <= BigInt(target.toLong * 16L * 1024 * 1024) && df.inputFiles.length < target)
       df.repartition(target)
     else df
   }

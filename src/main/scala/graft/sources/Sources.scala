@@ -153,7 +153,10 @@ object Sources {
     * file count uses `coalesce` (narrow, no shuffle); growing it — the
     * oversized-file split case — needs `repartition`'s shuffle, since
     * coalesce cannot increase partition count (it would silently write
-    * fewer files than reported). Reads through [[readParquetMergeSchema]]
+    * fewer files than reported). Coalesce is chosen only when the target
+    * is no smaller than `spark.sql.files.maxPartitionBytes`: a read split
+    * never holds more than that, so the scan then has at least as many
+    * splits as files to write. Reads through [[readParquetMergeSchema]]
     * so a schema-evolved directory keeps its late-added columns through
     * the rewrite (a plain read takes one footer's schema and would DROP
     * them — and incrementally-written directories are exactly the ones
@@ -173,7 +176,7 @@ object Sources {
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     val df = readParquetMergeSchema(spark, srcPath)
     val sized =
-      if (df.rdd.getNumPartitions >= nFiles) df.coalesce(nFiles)
+      if (targetFileBytes >= spark.sessionState.conf.filesMaxPartitionBytes) df.coalesce(nFiles)
       else df.repartition(nFiles)
     sized.write.mode(SaveMode.Overwrite).parquet(destPath)
     nFiles

@@ -1,7 +1,10 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+
+import graft.core.SmallRelation
 
 import TextFunctions._
 
@@ -502,7 +505,15 @@ object Curation {
     * sets are broadcast (benchmarks are MBs, corpora TBs), so the corpus
     * is scanned once for signatures — one partial-agg shuffle of shingle
     * rows — and never shuffled for the join. Returns one row per
-    * contaminated corpus doc: (idCol, n_bench_matches, max_jaccard). */
+    * contaminated corpus doc: (idCol, n_bench_matches, max_jaccard).
+    *
+    * When [[graft.core.SmallRelation.fits]] holds for corpus and benchmark
+    * together under [[graft.dedup.InTaskJoins.LshMaxBytes]] (and both ids
+    * are atomic), both sides' shingle sets are built
+    * with the same expressions and run in one task through the LSH kernel
+    * [[graft.dedup.Dedup.minhashLsh]] uses ([[graft.dedup.InTaskJoins]]):
+    * benchmark band keys in a hash map, each corpus doc's candidates
+    * verified with exact Jaccard, the same output rows. */
   def decontaminateFuzzy(
       corpus: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String,
@@ -510,6 +521,31 @@ object Curation {
       threshold: Double = 0.5): DataFrame = {
     require(bands * rows == k,
       s"decontaminateFuzzy: bands*rows must equal k ($bands*$rows != $k)")
+    import graft.dedup.Dedup.shingleSets
+    import graft.dedup.InTaskJoins
+    val cs = shingleSets(corpus, idCol, textCol, shingleN)
+    val bs = shingleSets(benchmark, idCol, textCol, shingleN)
+    val (cType, bType) = (cs.schema.fields.head.dataType, bs.schema.fields.head.dataType)
+    if (InTaskJoins.atomicKey(cType) && InTaskJoins.atomicKey(bType) &&
+        SmallRelation.fits(InTaskJoins.LshMaxBytes, corpus, benchmark)) {
+      // one relation (is_bench, corpus id, bench id, shingles) so a single
+      // task sees both sides
+      val both = cs.select(lit(false), col(idCol), lit(null).cast(bType), col("shingles"))
+        .unionAll(bs.select(lit(true), lit(null).cast(cType), col(idCol), col("shingles")))
+      val outSchema = StructType(Seq(StructField(cs.schema.fields.head.name, cType),
+        StructField("n_bench_matches", LongType, nullable = false),
+        StructField("max_jaccard", DoubleType)))
+      both.coalesce(1)
+        .mapPartitions(InTaskJoins.decontaminate(_, k, bands, rows, threshold))(
+          Encoders.row(outSchema))
+        .toDF()
+    } else distributedDecontaminateFuzzy(
+      corpus, benchmark, idCol, textCol, shingleN, k, bands, rows, threshold)
+  }
+
+  private def distributedDecontaminateFuzzy(
+      corpus: DataFrame, benchmark: DataFrame, idCol: String, textCol: String,
+      shingleN: Int, k: Int, bands: Int, rows: Int, threshold: Double): DataFrame = {
     import graft.dedup.Dedup.{bandKeyCols, minhashDocAgg}
     val ca = minhashDocAgg(corpus, idCol, textCol, shingleN, k)
     val ba = minhashDocAgg(benchmark, idCol, textCol, shingleN, k)

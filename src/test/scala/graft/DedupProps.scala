@@ -33,7 +33,9 @@ object DedupProps extends Properties("Dedup") {
         .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
         .toDF("doc_id", "text")
         .withColumn("blk", org.apache.spark.sql.functions.lit(0))
-      val got = Dedup.ngramJaccardPairs(df, "doc_id", "text", Seq("blk"), t,
+      // both branches of the size gate: the in-task PPJoin kernel (these
+      // fixtures fit) and the forced distributed plan
+      def got = Dedup.ngramJaccardPairs(df, "doc_id", "text", Seq("blk"), t,
         rarestFirst = rarest, collapseExactDuplicates = collapse)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val sets = docs.map(_.toSet).zipWithIndex
@@ -42,7 +44,9 @@ object DedupProps extends Properties("Dedup") {
         j = (sa & sb).size.toDouble / (sa | sb).size
         if j >= t
       } yield (ia.toLong, ib.toLong)).toSet
-      Prop(got == want) :| s"got=$got want=$want docs=$docs t=$t"
+      val (inTask, dist) = (got, TestSpark.distributed(got))
+      Prop(inTask == want && dist == want) :|
+        s"inTask=$inTask distributed=$dist want=$want docs=$docs t=$t"
     }
 
   // --- winnowed exact-substring dedup (d8) ---

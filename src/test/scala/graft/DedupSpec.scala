@@ -29,18 +29,22 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("minhashLsh finds exact and near dups, not unrelated docs") {
-    val pairs = Dedup.minhashLsh(docs, "doc_id", "text", threshold = 0.3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((0L, 1L)), "exact dup pair must be found")
-    assert(pairs.contains((2L, 3L)), "near dup pair must be found")
-    assert(!pairs.exists(p => p._1 == 5L || p._2 == 5L), "unrelated doc must not pair")
+    TestSpark.onBothBranches {
+      val pairs = Dedup.minhashLsh(docs, "doc_id", "text", threshold = 0.3)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairs.contains((0L, 1L)), "exact dup pair must be found")
+      assert(pairs.contains((2L, 3L)), "near dup pair must be found")
+      assert(!pairs.exists(p => p._1 == 5L || p._2 == 5L), "unrelated doc must not pair")
+    }
   }
 
   test("minhash jaccard values: 1.0 for identical docs, high for near dups") {
-    val j = Dedup.minhashLsh(docs, "doc_id", "text", threshold = 0.3)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    assert(j((0L, 1L)) == 1.0)
-    assert(j((2L, 3L)) > 0.5 && j((2L, 3L)) < 1.0)
+    TestSpark.onBothBranches {
+      val j = Dedup.minhashLsh(docs, "doc_id", "text", threshold = 0.3)
+        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+      assert(j((0L, 1L)) == 1.0)
+      assert(j((2L, 3L)) > 0.5 && j((2L, 3L)) < 1.0)
+    }
   }
 
   test("simhashPairs: identical docs at hamming 0; near dups within budget; unrelated out") {
@@ -57,11 +61,27 @@ class DedupSpec extends AnyFunSuite {
 
   test("ngramJaccardPairs with blocking") {
     val blocked = docs.withColumn("blk", lit(1))
-    val pairs = Dedup.ngramJaccardPairs(blocked, "doc_id", "text", Seq("blk"), 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((0L, 1L)))
-    assert(pairs.contains((2L, 3L)))
-    assert(!pairs.contains((4L, 5L)))
+    TestSpark.onBothBranches {
+      val pairs = Dedup.ngramJaccardPairs(blocked, "doc_id", "text", Seq("blk"), 0.8)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairs.contains((0L, 1L)))
+      assert(pairs.contains((2L, 3L)))
+      assert(!pairs.contains((4L, 5L)))
+    }
+  }
+
+  test("ngramJaccardPairs: NaN and -0.0 blocks match like SQL equi-join keys") {
+    // Spark normalizes NaN and -0.0 in join keys: NaN blocks pair with
+    // each other, -0.0 with 0.0; a null block never matches
+    val text = "the quick brown fox jumps over the lazy dog"
+    val blocked = Seq[(Long, java.lang.Double)](
+      (0L, Double.NaN), (1L, Double.NaN), (2L, -0.0), (3L, 0.0), (4L, null), (5L, null))
+      .toDF("doc_id", "blk").withColumn("text", lit(text))
+    TestSpark.onBothBranches {
+      val pairs = Dedup.ngramJaccardPairs(blocked, "doc_id", "text", Seq("blk"), 0.8)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairs == Set((0L, 1L), (2L, 3L)))
+    }
   }
 
   test("embeddingCosinePairs finds the planted near-identical vector pair") {

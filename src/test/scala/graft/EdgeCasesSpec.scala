@@ -18,22 +18,26 @@ class EdgeCasesSpec extends AnyFunSuite {
 
   test("dedup operators on an empty corpus return empty, not errors") {
     assert(Dedup.exact(emptyDocs, "doc_id", "text").count() == 0)
-    assert(Dedup.minhashLsh(emptyDocs, "doc_id", "text").count() == 0)
     assert(Dedup.simhashPairs(emptyDocs, "doc_id", "text").count() == 0)
-    assert(Dedup.ngramJaccardPairs(
-      emptyDocs.withColumn("blk", lit(0)), "doc_id", "text", Seq("blk"), 0.5).count() == 0)
+    TestSpark.onBothBranches {
+      assert(Dedup.minhashLsh(emptyDocs, "doc_id", "text").count() == 0)
+      assert(Dedup.ngramJaccardPairs(
+        emptyDocs.withColumn("blk", lit(0)), "doc_id", "text", Seq("blk"), 0.5).count() == 0)
+    }
   }
 
   test("shingle-based dedup silently excludes too-short and empty documents") {
     // doc 2 ("") and doc 3 ("x") have < 3 tokens → no shingles → excluded
-    assert(Dedup.minhashLsh(docs, "doc_id", "text").count() == 0)
+    TestSpark.onBothBranches(assert(Dedup.minhashLsh(docs, "doc_id", "text").count() == 0))
     assert(Dedup.simhashPairs(docs, "doc_id", "text").count() == 0)
   }
 
   test("fuzzy decontamination: empty benchmark or empty corpus flags nothing") {
     import graft.text.Curation
-    assert(Curation.decontaminateFuzzy(docs, emptyDocs, "doc_id", "text").count() == 0)
-    assert(Curation.decontaminateFuzzy(emptyDocs, docs, "doc_id", "text").count() == 0)
+    TestSpark.onBothBranches {
+      assert(Curation.decontaminateFuzzy(docs, emptyDocs, "doc_id", "text").count() == 0)
+      assert(Curation.decontaminateFuzzy(emptyDocs, docs, "doc_id", "text").count() == 0)
+    }
   }
 
   test("CMS on an empty frame yields no rows; single-row frame estimates exactly 1") {

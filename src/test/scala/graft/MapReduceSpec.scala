@@ -124,6 +124,35 @@ class MapReduceSpec extends AnyFunSuite {
     assert(nullGroup.length == 1 && nullGroup.head.getDouble(1) == 3.0)
     assert(out.count() == 2)
   }
+
+  test("general Reduce with no keys: one group over all rows, one result row") {
+    val sumY = Reduce.ReduceAndAddKey(
+      StructType(Seq(StructField("sum_y", DoubleType))),
+      rows => Seq[Any](rows.map(_.getDouble(0)).sum))
+    val out = MapReduce(df, Unpack.NoOp, Assign.KeysAndData(Nil, Seq("y")), sumY)
+    assert(out.columns.toSeq == Seq("sum_y"))
+    assert(out.collect().map(_.getDouble(0)).toSeq == Seq(100.0))
+    val recs = MapReduce(df, Unpack.NoOp, Assign.KeysAndData(Nil, Seq("x")),
+      Reduce.MakeRecsWithKey(
+        StructType(Seq(StructField("n", IntegerType))),
+        rows => Iterator.single(Seq[Any](rows.size))))
+    assert(recs.collect().map(_.getInt(0)).toSeq == Seq(4))
+    val recsM = MapReduce(df, Unpack.NoOp, Assign.KeysAndData(Nil, Seq("x")),
+      Reduce.MakeRecsWithKeyM[Int](
+        StructType(Seq(StructField("n", IntegerType))),
+        () => 10,
+        (scale, rows) => Iterator.single(Seq[Any](rows.size * scale))))
+    assert(recsM.collect().map(_.getInt(0)).toSeq == Seq(40))
+  }
+
+  test("general Reduce with no keys over an empty input yields no rows") {
+    val out = MapReduce(df, Unpack.FilterRow(col("x") > 100.0),
+      Assign.KeysAndData(Nil, Seq("y")),
+      Reduce.ReduceAndAddKey(
+        StructType(Seq(StructField("sum_y", DoubleType))),
+        rows => Seq[Any](rows.map(_.getDouble(0)).sum)))
+    assert(out.count() == 0)
+  }
 }
 
 object MapReduceSpec {

@@ -49,7 +49,9 @@ object MinhashProps extends Properties("MinhashLsh") {
     Prop.forAll(corpusGen) { docs =>
       val df = docs.zipWithIndex.map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
         .toDF("doc_id", "text")
-      val got = Dedup.minhashLsh(df, "doc_id", "text", shingleN, k, bands, rows, threshold)
+      // both branches of the size gate: the in-task LSH kernel (these
+      // fixtures fit) and the forced distributed plan
+      def got = Dedup.minhashLsh(df, "doc_id", "text", shingleN, k, bands, rows, threshold)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
       val sets = docs.zipWithIndex.collect {
@@ -67,6 +69,7 @@ object MinhashProps extends Properties("MinhashLsh") {
         j = (sa.toSet & sb.toSet).size.toDouble / (sa.toSet | sb.toSet).size
         if j >= threshold
       } yield (ia, ib, j)).toSet
-      Prop(got == want) :| s"got=$got want=$want"
+      val (inTask, dist) = (got, TestSpark.distributed(got))
+      Prop(inTask == want && dist == want) :| s"inTask=$inTask distributed=$dist want=$want"
     }
 }

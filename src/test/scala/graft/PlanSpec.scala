@@ -65,7 +65,8 @@ class PlanSpec extends AnyFunSuite {
 
   test("dedup candidate joins are equi-joins on bucket keys, never cartesian") {
     for (name <- Seq("d3_dedup_minhash_lsh", "d4_dedup_simhash", "d2_dedup_ngram_jaccard")) {
-      val p = plan(q(name))
+      // the distributed plans: sf0.001 is below the in-task size gate
+      val p = TestSpark.distributed(plan(q(name)))
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
         s"$name pair join is not an equi-join:\n$p")
     }
@@ -163,7 +164,9 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("t18 fuzzy decontamination: benchmark bands and sets broadcast, no cartesian") {
-    val p = plan(q("t18_decontamination_fuzzy"))
+    // the distributed plan (explicit broadcast hints still apply with the
+    // threshold off); sf0.001 is below the in-task size gate
+    val p = TestSpark.distributed(plan(q("t18_decontamination_fuzzy")))
     assert(p.contains("BroadcastHashJoin"), s"benchmark side not broadcast:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"), p)
   }

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.{Bpe, UnigramLm}
@@ -19,34 +15,11 @@ class TokenizerGateSpec extends AnyFunSuite {
   private val dir = "perfbench/data/sf0.1"
   private lazy val docs = spark.read.parquet(s"$dir/documents.parquet").select("text")
 
-  /** Jobs started while `body` runs, under a job group of its own so that
-    * jobs from anywhere else never count. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"tokenizer-gate-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "tokenizer gate job count")
-    try {
-      body
-      ListenerBusDrain(sc)
-      jobs.get()
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   /** Runs a query the way the benchmark does: memoized models cleared,
     * the frame written to the noop sink. */
   private def queryJobs(name: String): Int = {
     ExtensionQueries.clearArtifactCaches()
-    jobsOf(SparkEntry.queries(name)(spark, dir)
+    TestSpark.jobsOf(SparkEntry.queries(name)(spark, dir)
       .write.format("noop").mode("overwrite").save())
   }
 
