@@ -1,81 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: every registered query timed at
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout (driver contract). */
 object Bench {
-  /** An integer setting from the environment. A value that is not an
-    * integer (a typo, an empty string) falls back to `default` with one
-    * warning on stderr instead of aborting the run. */
-  private[graft] def intEnv(
-      name: String, default: Int, env: Map[String, String] = sys.env): Int =
-    env.get(name).fold(default) { raw =>
-      raw.toIntOption.getOrElse {
-        Console.err.println(s"Bench: $name=\"$raw\" is not an integer; using $default")
-        default
-      }
-    }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: a single logged WARN stack (round 9: x38's
-    // FileStreamSink.hasMetadata glob probe logs a swallowed exception
-    // WITH its trace) burns most of the driver's ~2000-char log tail and
-    // can decapitate the parseable compact line below. Bench's own
-    // failure reporting goes through System.err directly, not log4j.
-    spark.sparkContext.setLogLevel("ERROR")
-    // Warm up executor threads, codegen, and the parquet reader paths once
-    // so the first timed query doesn't absorb JVM startup.
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).collect()
-    // Materialize the at-rest tokenizer artifacts before the sweep:
-    // encode-face queries (p9/p20/p22/p23) must measure their documented
-    // load-shape in the sweep AND in any retime — not pay a one-time
-    // ensure-train in whichever of them happens to sort first.
-    graft.queries.ExtensionQueries.seedArtifacts(spark, sfDir)
-    // shared by the main sweep and the retimed pass so both measure the
-    // SAME regime: release the previous query's operator-persisted
-    // branches AND the memoized artifacts first — a leaked cache could
-    // satisfy a later query's identical subtree (CacheManager matches
-    // canonicalized plans), and p9 would otherwise ride p8's memoized BPE
-    // training — both flatter the later number. Failures report -1
-    // (never a plausible elapsed time) and are logged either way.
-    // Consumer = the built-in noop sink, NOT count(): under count()
-    // Catalyst prunes every operator whose output the count does not
-    // reference — a window query degenerates to a scan-count (x2's whole
-    // Window+Sort+Exchange vanished, which is how the custom as-of node
-    // got misread as "7x slower" in round 9). The noop write materializes
-    // every output row of the query AS REGISTERED, so the sweep times the
-    // work a consumer of the result would actually cause. Switched in
-    // round 10 — totals before/after are not comparable (the note field
-    // says so in-band).
-    def timeQuery(name: String, tag: String): Double = {
-      CacheRegistry.unpersistAll()
-      graft.queries.ExtensionQueries.clearArtifactCaches()
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      catch {
-        case e: Throwable =>
-          System.err.println(s"[bench:$tag] $name FAILED: ${e.getMessage}")
-          -1.0
-      }
-    }
+    val spark = Harness.session(Harness.cpus())
+    Harness.warm(spark, sfDir)
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
-      name -> timeQuery(name, "sweep")
+      name -> Harness.time(spark, sfDir, name, "sweep")
     }
     // Self-certifying variance pass: this host's sweeps carry roving
     // 10-30x per-query drag spikes (NOTES.md), and two rounds of review
@@ -100,7 +35,7 @@ object Bench {
     // sweep numbers into corrected_total for a full round. 24 bounds a
     // worst-case contended sweep to ~2x while covering a full regime
     // shift; env-overridable for a deliberate full-retime pass.
-    val RETIME_CAP = intEnv("SPARK_GRAFT_RETIME_CAP", 24)
+    val RETIME_CAP = Harness.intEnv("SPARK_GRAFT_RETIME_CAP", 24)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_local.json")
     val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", outPath)
     val prevExists = java.nio.file.Files.exists(java.nio.file.Paths.get(prevPath))
@@ -181,7 +116,7 @@ object Bench {
             suspects.drop(RETIME_CAP).map(_._1).mkString("deferred=[", ",", "]"))
         val batch = suspects.take(RETIME_CAP).map(_._1)
         batch.foreach { name =>
-          val r = timeQuery(name, s"retimed-p$pass")
+          val r = Harness.time(spark, sfDir, name, s"retimed-p$pass")
           allRetimed += (name -> r)
           val cur = corrected(name)
           if (r >= 0 && cur >= 0 && r < cur) corrected(name) = r
@@ -196,12 +131,12 @@ object Bench {
     // each bounds their noise at ~seconds of added sweep. Off with
     // SPARK_GRAFT_MINOF_REPS=0. Reporting-only, like the retime pass: the
     // headline `value` stays the raw sweep total.
-    val MINOF_COHORT = intEnv("SPARK_GRAFT_MINOF_COHORT", 8)
-    val MINOF_REPS = intEnv("SPARK_GRAFT_MINOF_REPS", 1)
+    val MINOF_COHORT = Harness.intEnv("SPARK_GRAFT_MINOF_COHORT", 8)
+    val MINOF_REPS = Harness.intEnv("SPARK_GRAFT_MINOF_REPS", 1)
     if (MINOF_REPS > 0 && MINOF_COHORT > 0) {
       val cohort = corrected.toSeq.filter(_._2 > 0).sortBy(-_._2).take(MINOF_COHORT)
       for ((name, _) <- cohort; r <- 1 to MINOF_REPS) {
-        val t = timeQuery(name, s"minof-$r")
+        val t = Harness.time(spark, sfDir, name, s"minof-$r")
         allRetimed += (name -> t)
         val cur = corrected(name)
         if (t >= 0 && cur >= 0 && t < cur) corrected(name) = t

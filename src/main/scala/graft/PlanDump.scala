@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (round 14 optimization): dump `.explain("formatted")` for the
   * named queries to `<outDir>/<query>_<tag>.txt` and print an isolated
   * noop-sink timing for each — the guide §1 measure-first loop in one
-  * command. Same session shape as Bench (master/local partitions/UTC).
+  * command. Same session and timing as Bench ([[Harness]]).
   *
   * Usage: runMain graft.PlanDump <outDir> <tag> <query...>
   *        (tag is `before`/`after`; queries default to a standard set)
@@ -17,18 +15,8 @@ object PlanDump {
     val names = if (args.length > 2) args.drop(2).toSeq
       else Seq("x34_pagerank", "s11_bm25_topk", "t28_dsir", "x36_interval_overlap")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).collect()
-    graft.queries.ExtensionQueries.seedArtifacts(spark, sfDir)
+    val spark = Harness.session(Harness.cpus())
+    Harness.warm(spark, sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) {
       CacheRegistry.unpersistAll()
@@ -58,25 +46,15 @@ object PlanDump {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$outDir/${name}_$tag.txt"),
         planTxt.getBytes("UTF-8"))
-      // Timed run = Bench's regime exactly: caches cleared, then fn
-      // APPLICATION inside the timed region (several operators do eager
-      // work — localCheckpoint iterations, registry/table writes — at
-      // construction), then the noop sink. This host carries roving
-      // 10-30x drag spikes (NOTES.md), so PLANDUMP_REPS (default 3)
-      // repeats each timing and the MIN is the signal — the least-dragged
-      // observation is the closest to the query's true cost.
-      // clamped: PLANDUMP_REPS=0 would make els.min throw (ADVICE r14).
-      // Rep 1 is Bench-cold; later reps run with warm page cache/JIT, so
-      // the printed per-rep list keeps the first observation visible.
-      val reps = math.max(1, sys.env.getOrElse("PLANDUMP_REPS", "3").toInt)
-      val els = (1 to reps).map { _ =>
-        CacheRegistry.unpersistAll()
-        graft.queries.ExtensionQueries.clearArtifactCaches()
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      // Timed runs = Bench's regime exactly (Harness.time). This host
+      // carries roving 10-30x drag spikes (NOTES.md), so PLANDUMP_REPS
+      // (default 3, at least 1) repeats each timing and the MIN is the
+      // signal — the least-dragged observation is the closest to the
+      // query's true cost. Rep 1 is Bench-cold; later reps run with warm
+      // page cache/JIT, so the printed per-rep list keeps the first
+      // observation visible.
+      val reps = math.max(1, Harness.intEnv("PLANDUMP_REPS", 3))
+      val els = (1 to reps).map(_ => Harness.time(spark, sfDir, name, "plandump"))
       val el = els.min
       println(f"PLANDUMP $name%-40s min $el%8.3f s of ${els.map(e => f"$e%.2f").mkString("/")} -> $outDir/${name}_$tag.txt")
       spark.sparkContext.setJobDescription(null)

@@ -31,10 +31,6 @@ object Aggregation {
   def keyMap(from: String, to: String)(f: Column => Column): KeyRecode =
     KeyRecode(Seq(from), Seq(to -> f(col(from))))
 
-  /** A multi-column recode (general form of `RecordKeyMap`). */
-  def keyMapN(consumed: Seq[String])(produced: (String, Column)*): KeyRecode =
-    KeyRecode(consumed, produced.toSeq)
-
   /** ≙ `combineKeyAggregations` (reference
     * `src/Frames/Aggregation.hs:68-74`): product of two recoders over
     * disjoint column sets. */

@@ -69,14 +69,10 @@ object Dedup {
       .where(col("id_a") < col("id_b"))
 
   /** Per-doc MinHash signature (mh0..mh{k-1}) + verification shingle set,
-    * as ONE partial-agg shuffle over the exploded shingle rows. ONE md5
-    * per shingle; the k per-seed hashes are a multiply-mod universal
-    * family over its 32-bit prefix:
-    *   mh_s = (A_s·h32 + B_s) mod P,  P = 4294967291 (largest prime<2^32),
-    *   A_s ∈ [1, 2^31) so A_s·h32 + B_s < 2^63 — no overflow, identical
-    *   wrap-free arithmetic in any engine (the oracle repeats it).
-    * k md5 calls per shingle (the naive seeded-hash scheme) was the
-    * dominant cost of the whole operator at sf0.1.
+    * as ONE partial-agg shuffle over the exploded shingle rows, in the
+    * [[MinHash]] family: one md5 per shingle (k md5 calls per shingle, the
+    * naive seeded-hash scheme, was the dominant cost of the whole operator
+    * at sf0.1).
     *
     * The result is persisted (memory-and-disk, spillable) because every
     * caller reads it from two downstream branches — band keys and
@@ -91,24 +87,12 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, k: Int): DataFrame = {
     val sh = shingleRows(df, idCol, textCol, shingleN)
-    val sh32 = sh.select(col(idCol), col("shingle"),
-      conv(substring(md5(col("shingle")), 1, 8), 16, 10).cast("long").as("h32"))
-    val P = 4294967291L
-    val sigCols = (0 until k).map { s =>
-      val a = ((s * 2654435761L) % 2147483647L) + 1L
-      val b = (s * 2246822519L) % P
-      min((lit(a) * col("h32") + lit(b)) % lit(P)).as(s"mh$s")
-    }
+    val sh32 = sh.select(col(idCol), col("shingle"), MinHash.h32(col("shingle")).as("h32"))
+    val sigCols = MinHash.signatureAggs(k, col("h32"))
     sh32.groupBy(col(idCol))
       .agg(sigCols.head, sigCols.tail :+ collect_set(col("shingle")).as("shingles"): _*)
       .transform(graft.CacheRegistry.persisted(_))
   }
-
-  /** LSH band keys (band b = seeds [b*rows, (b+1)*rows)) as static column
-    * expressions over a [[minhashDocAgg]] row. */
-  private[graft] def bandKeyCols(bands: Int, rows: Int): Seq[Column] =
-    (0 until bands).map(b =>
-      md5(concat_ws("|", (b * rows until (b + 1) * rows).map(i => col(s"mh$i")): _*)))
 
   /** MinHash + LSH near-duplicate pairs.
     *
@@ -152,7 +136,7 @@ object Dedup {
       shingleN: Int, k: Int, bands: Int, rows: Int, threshold: Double): DataFrame = {
     val docAgg = minhashDocAgg(df, idCol, textCol, shingleN, k)
     val bandKeys = docAgg.select(
-      col(idCol), posexplode(array(bandKeyCols(bands, rows): _*)).as(Seq("band", "band_key")))
+      col(idCol), posexplode(array(MinHash.bandKeyCols(bands, rows): _*)).as(Seq("band", "band_key")))
     val a = bandKeys.select(col("band"), col("band_key"), col(idCol).as("id_a"))
     val b = bandKeys.select(col("band"), col("band_key"), col(idCol).as("id_b"))
     val cand = a.join(b, Seq("band", "band_key"))
@@ -170,7 +154,7 @@ object Dedup {
   // ------------------------------------------- incremental (band registry)
 
   /** (id, band, band_key) LSH band rows — the same hash family as
-    * [[minhashDocAgg]] + [[bandKeyCols]] (and so verified by the same
+    * [[minhashDocAgg]] + [[MinHash.bandKeyCols]] (and so verified by the same
     * oracle CTEs as d3/st4) but WITHOUT the verification shingle set or
     * the persist: the registry path never verifies jaccard, so collecting
     * per-doc shingle sets would be pure shuffle weight. One md5 per
@@ -182,17 +166,11 @@ object Dedup {
     require(bands * rows == k,
       s"minhashBandRows: bands*rows must equal k ($bands*$rows != $k)")
     val sh32 = shingleRows(df, idCol, textCol, shingleN)
-      .select(col(idCol),
-        conv(substring(md5(col("shingle")), 1, 8), 16, 10).cast("long").as("h32"))
-    val P = 4294967291L
-    val sigCols = (0 until k).map { s =>
-      val a = ((s * 2654435761L) % 2147483647L) + 1L
-      val b = (s * 2246822519L) % P
-      min((lit(a) * col("h32") + lit(b)) % lit(P)).as(s"mh$s")
-    }
+      .select(col(idCol), MinHash.h32(col("shingle")).as("h32"))
+    val sigCols = MinHash.signatureAggs(k, col("h32"))
     sh32.groupBy(col(idCol)).agg(sigCols.head, sigCols.tail: _*)
       .select(col(idCol),
-        posexplode(array(bandKeyCols(bands, rows): _*)).as(Seq("band", "band_key")))
+        posexplode(array(MinHash.bandKeyCols(bands, rows): _*)).as(Seq("band", "band_key")))
   }
 
   /** Build (or rebuild) the persistent minhash band registry from a full
@@ -468,7 +446,8 @@ object Dedup {
     *    total), prefixes are uniform-random tokens; more candidates
     *    survive to verification, which the length/positional filters then
     *    bound. Right when tokenization dominates verification.
-    * Measured at 10× sf0.1 (ScaleProbe corpus): rarest-first ~24 s vs md5
+    * Measured at 10× sf0.1 (count()-era fixture, OPTIMIZATION_r14.md;
+    * see SCALE.md's provenance note): rarest-first ~24 s vs md5
     * order ~38 s — candidate selectivity beats the saved shuffles once the
     * corpus is large, hence the default.
     *
@@ -840,8 +819,8 @@ object Dedup {
 
   /** The narrow (id, band, bucket) banding relation of
     * [[embeddingLshPairs]], exposed so candidate VOLUME is auditable on
-    * its own (the ScaleProbe cd rows join it against itself to count
-    * candidates without paying the cosine verify). */
+    * its own (the constant-density rows in SCALE.md join it against
+    * itself to count candidates without paying the cosine verify). */
   def embeddingLshBands(
       df: DataFrame, idCol: String, vecCol: String,
       bands: Int, rowsPerBand: Int, dims: Int): DataFrame = {
@@ -864,8 +843,8 @@ object Dedup {
     * >= 1 of `bands` bands with 1-(1-2^-rowsPerBand)^bands, so at FIXED
     * width the random-collision floor makes candidates quadratic in the
     * corpus; `rowsPerBand = ceil(log2(n)) + margin` keeps the expected
-    * bucket size O(1) and candidates linear (measured: the ScaleProbe
-    * PROBE-LSH-AUTO cd row). The wider band's sharper per-band S-curve
+    * bucket size O(1) and candidates linear (measured: SCALE.md, round 10,
+    * d18 band-bits floor). The wider band's sharper per-band S-curve
     * targets HIGH-similarity pairs, so recall is budgeted by `bands` at
     * the near-dup thresholds this face is for (cos >= ~0.9; a pair at
     * angle theta survives a band with (1-theta/pi)^rowsPerBand, recall =

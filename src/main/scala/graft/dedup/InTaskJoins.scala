@@ -151,8 +151,6 @@ private[graft] object InTaskJoins {
 
   // --------------------------------------------------------- MinHash-LSH
 
-  private val P = 4294967291L
-
   /** One relation's docs for [[lsh]]: shingle sets merged per id (as the
     * distributed `groupBy(id)` merges repeated ids), null ids dropped
     * (they can never pass the distributed plans' id comparison or id
@@ -171,41 +169,37 @@ private[graft] object InTaskJoins {
       }
   }
 
-  /** Shingle → dense id, with the 32-bit hash of each distinct shingle:
-    * the first 4 bytes of `md5(shingle)` read unsigned — the same value as
-    * `conv(substring(md5(shingle), 1, 8), 16, 10)` in `Dedup.minhashDocAgg`. */
+  /** Shingle → dense id, with the [[MinHash.h32]] of each distinct shingle. */
   final class ShingleDict {
     private val md5 = MessageDigest.getInstance("MD5")
     private val ids = mutable.HashMap.empty[String, Int]
     val h32 = mutable.ArrayBuffer.empty[Long]
     def intern(s: String): Int = ids.getOrElseUpdate(s, {
-      val d = md5.digest(s.getBytes(StandardCharsets.UTF_8))
-      h32 += ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+      h32 += MinHash.h32(md5.digest(s.getBytes(StandardCharsets.UTF_8)))
       h32.length - 1
     })
   }
 
-  /** Band key of one doc: (band, the md5 of the band's `|`-joined decimal
-    * signature values) — `Dedup.bandKeyCols` bit for bit, with
-    * `mh_s = min((a_s·h32 + b_s) mod P)` over the doc's shingles. */
+  /** Band keys of one doc: (band, the md5 of [[MinHash.bandString]]) —
+    * `MinHash.bandKeyCols` bit for bit, with the signature computed from
+    * the seeds `a`/`b` of [[MinHash.seeds]] over the doc's shingles. */
   private def bandKeys(
       set: mutable.HashSet[Int], dict: ShingleDict, md5: MessageDigest,
-      k: Int, bands: Int, rows: Int): Array[(Int, Seq[Byte])] = {
+      a: Array[Long], b: Array[Long], bands: Int, rows: Int): Array[(Int, Seq[Byte])] = {
+    val k = a.length
     val sig = Array.fill(k)(Long.MaxValue)
     set.foreach { sh =>
       val h = dict.h32(sh)
       var s = 0
       while (s < k) {
-        val a = ((s * 2654435761L) % 2147483647L) + 1L
-        val b = (s * 2246822519L) % P
-        val v = (a * h + b) % P
+        val v = (a(s) * h + b(s)) % MinHash.P
         if (v < sig(s)) sig(s) = v
         s += 1
       }
     }
-    Array.tabulate(bands) { b =>
-      val str = (b * rows until (b + 1) * rows).map(i => sig(i).toString).mkString("|")
-      (b, md5.digest(str.getBytes(StandardCharsets.UTF_8)).toSeq)
+    Array.tabulate(bands) { band =>
+      val str = MinHash.bandString(sig, band, rows)
+      (band, md5.digest(str.getBytes(StandardCharsets.UTF_8)).toSeq)
     }
   }
 
@@ -228,12 +222,13 @@ private[graft] object InTaskJoins {
       emit: (Int, Int, Double) => Unit): Unit = {
     val md5 = MessageDigest.getInstance("MD5")
     val self = probe eq build
-    val buildKeys = build.sets.map(bandKeys(_, dict, md5, k, bands, rows))
+    val (a, b) = MinHash.seeds(k)
+    val buildKeys = build.sets.map(bandKeys(_, dict, md5, a, b, bands, rows))
     val buckets = mutable.HashMap.empty[(Int, Seq[Byte]), mutable.ArrayBuffer[Int]]
     buildKeys.indices.foreach(d => buildKeys(d).foreach(key =>
       buckets.getOrElseUpdate(key, mutable.ArrayBuffer.empty[Int]) += d))
     probe.sets.indices.foreach { p =>
-      val keys = if (self) buildKeys(p) else bandKeys(probe.sets(p), dict, md5, k, bands, rows)
+      val keys = if (self) buildKeys(p) else bandKeys(probe.sets(p), dict, md5, a, b, bands, rows)
       val cand = mutable.HashSet.empty[Int]
       keys.foreach(key => buckets.get(key).foreach(cand ++= _))
       // within one relation each pair once, from its later doc

@@ -3025,8 +3025,9 @@ object ExtensionQueries {
       cat
     }
 
-  /** Dev hook (ScaleProbe): drop memoized artifacts so a timed run pays
-    * full cost — mirrors `spark.catalog.clearCache()` for persist(). */
+  /** Timing hook ([[graft.Harness.time]]): drop memoized artifacts so a
+    * timed run pays full cost — mirrors `spark.catalog.clearCache()` for
+    * persist(). */
   private[graft] def clearArtifactCaches(): Unit = {
     bpeMergeCache.clear()
     unigramModelCache.clear()
@@ -3046,7 +3047,7 @@ object ExtensionQueries {
     unigramModelAtRest(s, dir, vocabSize = 40)
     // s12's inverted index: build once here so the swept s12 measures
     // the PROBE (the read-side pruning claim), not the index build —
-    // ScaleProbe bm25 prices the build separately
+    // SCALE.md's BM25 build-vs-probe rows price the build separately
     invertedIndexAtRest(s, dir)
     ()
   }
@@ -3993,8 +3994,8 @@ object ExtensionQueries {
     * 10.3 s it read as "indexed BM25 is 3x slower than in-memory s11"
     * when the build was ~90% of that. [[seedArtifacts]] materializes it
     * before the bench sweep (same discipline as the tokenizer
-    * artifacts); build-vs-probe is priced separately and honestly by
-    * `ScaleProbe bm25` (SCALE.md). */
+    * artifacts); build-vs-probe is priced separately in SCALE.md (round
+    * 11, BM25 build-vs-probe attribution). */
   private val invIndexLock = new Object
   private def invertedIndexAtRest(s: SparkSession, dir: String): String = {
     val idx = Q.tmpArtifactPath("s12", dir)

@@ -1349,7 +1349,8 @@ class GraftShardScan(
       rootMeta.equalityDeletes.map(d =>
         (d.column, new File(path, d.name).getPath, d.seq)),
       // option("columnarRead", "false") is the operational escape hatch
-      // (and the ScaleProbe A/B control); merge-on-read delete vectors
+      // (and the A/B control of SCALE.md's columnar batch-read rows);
+      // merge-on-read delete vectors
       // are handled INSIDE the batch reader since round 13 (deselected
       // like filter misses), so they no longer force the row path
       allowColumnar = columnarOption)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.dedup.MinHash
+
 /** Structured Streaming surface (SURVEY §2.10: the reference's fold model —
   * incremental step + associative merge — is exactly Spark's streaming
   * partial-aggregation contract, so the batch agg layer runs on streams
@@ -263,25 +265,17 @@ object Streaming {
     // Band keys computed PER ROW with higher-order functions (the batch
     // d3 operator aggregates signatures across exploded shingle rows
     // instead — fine there, but here it would add a second stateful
-    // stage to the streaming query). Same hash family as d3, so the
-    // same oracle CTEs verify it: one md5 per shingle, k multiply-mod
-    // minhashes over its 32-bit prefix, band key = md5 of the band's
-    // joined signature slice.
-    val P = 4294967291L
+    // stage to the streaming query). Same hash family as d3
+    // (graft.dedup.MinHash), so the same oracle CTEs verify it.
     // tokens as a real column: element_at inside the shingle lambda would
     // otherwise re-evaluate split() once per element access
     val withH32 = docs
       .withColumn("__toks", tokens(col(textCol)))
       .where(size(col("__toks")) >= shingleN)
-      .withColumn("h32s", transform(wordShingles(col("__toks"), shingleN), sh =>
-        conv(substring(md5(sh), 1, 8), 16, 10).cast("long")))
-    def mh(s: Int): Column = {
-      val a = ((s * 2654435761L) % 2147483647L) + 1L
-      val b = (s * 2246822519L) % P
-      array_min(transform(col("h32s"), h => (lit(a) * h + lit(b)) % lit(P)))
-    }
-    val bandKeyCols = (0 until bands).map(b =>
-      md5(concat_ws("|", (b * rows until (b + 1) * rows).map(mh): _*)))
+      .withColumn("h32s", transform(wordShingles(col("__toks"), shingleN), sh => MinHash.h32(sh)))
+    val hashes = MinHash.hashes(k)
+    val bandKeyCols = MinHash.bandKeys(bands, rows)(s =>
+      array_min(transform(col("h32s"), hashes(s))))
     val exploded = withH32
       .withColumn("band_key", explode(array(bandKeyCols: _*)))
     if (docs.isStreaming)
@@ -333,13 +327,5 @@ object Streaming {
       .agg(min(struct(ordered: _*)).as("__first"))
       .select(keyCols.map(col) ++ (orderCols ++ payloadCols).map(c =>
         col(s"__first.$c").as(c)): _*)
-  }
-
-  /** Convenience: run a streaming DataFrame to a named in-memory sink and
-    * block until the available data is processed (test/dev harness). */
-  def runToMemorySink(df: DataFrame, name: String, mode: OutputMode): Unit = {
-    val q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
-    q.processAllAvailable()
-    q.stop()
   }
 }

@@ -546,7 +546,8 @@ object Curation {
   private def distributedDecontaminateFuzzy(
       corpus: DataFrame, benchmark: DataFrame, idCol: String, textCol: String,
       shingleN: Int, k: Int, bands: Int, rows: Int, threshold: Double): DataFrame = {
-    import graft.dedup.Dedup.{bandKeyCols, minhashDocAgg}
+    import graft.dedup.Dedup.minhashDocAgg
+    import graft.dedup.MinHash.bandKeyCols
     val ca = minhashDocAgg(corpus, idCol, textCol, shingleN, k)
     val ba = minhashDocAgg(benchmark, idCol, textCol, shingleN, k)
     val bandCols = bandKeyCols(bands, rows)

@@ -46,14 +46,6 @@ object TextFunctions {
     transform(sequence(lit(0), lit(k - 1)), s =>
       array_min(transform(shingles, sh => seededHash(sh, s))))
 
-  /** LSH banding: split a k-length signature into `bands` bands of `rows`
-    * rows; each band key is the md5 of the band's concatenated hashes. Two
-    * documents are candidates iff they share a band key (standard
-    * MinHash-LSH: P[candidate] = 1-(1-s^rows)^bands for true Jaccard s). */
-  def lshBandKeys(signature: Column, bands: Int, rows: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      md5(concat_ws("|", slice(signature, b * lit(rows) + lit(1), lit(rows)))))
-
   /** Exact Jaccard similarity of two pre-distinct arrays, as a double. */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") /
