@@ -253,23 +253,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
   }
 
   /** Schema evolution, METADATA-ONLY in all four directions (no file is
-    * touched): shard files are self-describing since format v2 (a
-    * column header — [[ShardFormat.Magic]]), so ADD COLUMN null-fills
-    * old files at read time and DROP COLUMN byte-skips the stored bytes
-    * by the header's type tag. Since format v4 ([[ShardFormat.MagicV4]])
-    * columns carry FIELD IDS, which adds:
+    * touched): shard files are self-describing (a column header —
+    * [[ShardFormat.MagicV4]]), so ADD COLUMN null-fills old files at
+    * read time and DROP COLUMN byte-skips the stored bytes by the
+    * header's type tag. Header columns carry FIELD IDS, which adds:
     *   - RENAME COLUMN: a manifest-only commit — the column keeps its
     *     id, the manifest's id→name entry changes, per-file stats keys
     *     are re-keyed to the new name, and the old name joins
-    *     [[ShardFormat.Manifest.aliases]] so pre-v4 (name-keyed) files
+    *     [[ShardFormat.Manifest.aliases]] so name-keyed bloom sidecars
     *     keep resolving. Time travel serves the old name from the old
     *     snapshot. The old name stays RESERVED (re-adding it would make
     *     old files' stored bytes ambiguous).
     *   - ALTER COLUMN TYPE, widening only (int→long, float→double):
     *     files keep their stored width; the reader widens at emit.
-    *     Refused while any v1 (headerless) file exists — a positional
-    *     decode under the widened type would misread its bytes; compact
-    *     first (which rewrites v1 to v4), then widen.
     * The manifest swap is a normal commit: version bump, new
     * time-travel snapshot (VERSION AS OF before the ALTER reads the old
     * schema), generation KEPT (no entries vanished). Refused: narrowing
@@ -290,8 +286,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // names no column may take: metadata/CDF columns the readers serve
     val reserved = Set("_shard_file", "_pos",
       "_change_type", "_commit_version", "_commit_timestamp")
-    // mutable evolution state; ids materialize on first use so pre-v4
-    // manifests only gain explicit ids when an ALTER actually commits
+    // mutable evolution state; ids materialize on first use so a
+    // manifest only gains explicit ids when an ALTER actually commits
     var sch = m.schema
     var tomb = m.droppedColumns
     var ids = m.fieldIdsOrPositional.toVector
@@ -378,7 +374,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
               "that column's bytes under it")
         }
         sch = StructType(sch.fields.updated(i, sch.fields(i).copy(name = to)))
-        // old name resolves pre-v4 files to the id; renaming BACK to a
+        // old name resolves name-keyed sidecars to the id; renaming BACK to a
         // name the same id once had un-reserves it (it is current again)
         aliases = aliases - to + (from -> ids(i))
         // the manifest stays self-consistent under the CURRENT names:
@@ -418,21 +414,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
               s"${upd.newDataType.sql} — only lossless widenings (int->long, " +
               "float->double) are supported; anything else would need a " +
               "table rewrite to stay honest")
-          // v1 files are HEADERLESS — they decode positionally by the
-          // table schema, so widening would misread their stored bytes.
-          // One 8-byte read per manifest file, only on this rare ALTER.
-          files.foreach { fe =>
-            val f = new File(dir, fe.name)
-            val hdr = new Array[Byte](ShardFormat.MagicV1.length)
-            val in = new java.io.FileInputStream(f)
-            try { in.read(hdr): Unit } finally in.close()
-            require(!java.util.Arrays.equals(hdr, ShardFormat.MagicV1),
-              s"graftshard: cannot widen '$c' — shard file '${fe.name}' is " +
-                "format v1 (headerless; it decodes positionally by the table " +
-                "schema and would misread under the widened type). Compact " +
-                "the table first (compaction rewrites v1 files to v4), then " +
-                "widen")
-          }
           sch = StructType(sch.fields.updated(i, sch.fields(i).copy(dataType = upd.newDataType)))
         }
       case other => throw new UnsupportedOperationException(

@@ -231,9 +231,8 @@ object GraftShardMaintenance {
     // this, the routine OPTIMIZE pass would rewrite a deflate table RAW
     // and the at-rest saving would silently evaporate
     val codec = m.compression.getOrElse("none")
-    // compaction is the format-upgrade path: output is always v4 under
-    // the manifest's field ids, and inputs resolve through the alias
-    // map (pre-rename files) / id map (post-rename v4 files)
+    // output is written under the manifest's field ids; inputs resolve
+    // through the same id map
     val ids = ShardFormat.writeFieldIds(Some(m), schema)
     val resolve = m.resolution
     // bloom sidecars regenerate with the rewrite (the property is the

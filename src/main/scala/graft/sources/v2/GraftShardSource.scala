@@ -1707,7 +1707,7 @@ class GraftShardReaderFactory(
   }
 
   /** COLUMNAR reads for the scan shapes that dominate a curation pass:
-    * the v3/v4 format is already columnar at rest (per-column chunks
+    * the shard format is already columnar at rest (per-column chunks
     * per row group), so the scan decodes each group straight into
     * column vectors — one tight loop per column, zero per-value boxing,
     * and Spark's whole-stage codegen consumes the batch without a
@@ -1718,11 +1718,16 @@ class GraftShardReaderFactory(
     * `array<float>` embedding projections (the float payload decodes
     * into an ArrayType vector). The columnar reader also handles a
     * pushed LIMIT cap, merge-on-read delete vectors, live equality
-    * deletes, and the `_shard_file`/`_pos` metadata columns — the ONLY
-    * things that force the row path now are a projected or filtered
-    * column whose type the batch decoder doesn't cover (maps, structs,
-    * decimals) and the `columnarRead=false` escape hatch. Pinned by
-    * GraftShardColumnarReadSpec and the randomized source props. */
+    * deletes, and the `_shard_file`/`_pos` metadata columns. Every type
+    * a shard file can store has a batch decoder: [[ShardFormat.supported]]
+    * refuses maps and structs at write time, and decimals up to
+    * precision 18 (the only ones it stores) decode into long-backed
+    * vectors — so the type checks below are a guard, not a route. The
+    * ONE thing that forces the row path is the `columnarRead=false`
+    * option, which stays as the operational escape hatch and as the
+    * row-path reference the tests compare the batch reader against.
+    * Pinned by GraftShardColumnarReadSpec and the randomized source
+    * props. */
   override def supportColumnarReads(partition: InputPartition): Boolean =
     allowColumnar && partition.isInstanceOf[ShardFilesPartition] &&
       required.fields.forall { f =>
@@ -1750,18 +1755,14 @@ class GraftShardReaderFactory(
 
 /** Batch reader over a partition's shard files (see
   * [[GraftShardReaderFactory.supportColumnarReads]] for the admission
-  * rules): v3/v4 files decode whole row groups column-at-a-time into
-  * reused `OnHeapColumnVector`s; a legacy v1/v2 file in the same
-  * partition decodes through the row path into the same vectors —
-  * correct, not fast, and exactly the rewrite-pending tail compaction
-  * retires.
+  * rules): every file decodes whole row groups column-at-a-time into
+  * reused `OnHeapColumnVector`s through [[ShardFormat.ShardReader.nextBatch]].
   *
   * One SELECTION pass unifies everything row-level:
   *  - absorbed filters (static + runtime) run the row reader's own
   *    compiled evaluators over the staged batch;
   *  - merge-on-read delete-vector ordinals deselect rows via a single
-  *    sorted pointer walking the monotone batch ordinals (row-era
-  *    files apply the DV at fill time instead);
+  *    sorted pointer walking the monotone batch ordinals;
   *  - live equality deletes anti-filter over eq-only staging columns
   *    (fileSeq < delete.seq, like the row reader).
   * An all-match batch is exposed ZERO-COPY; survivors otherwise
@@ -1935,10 +1936,10 @@ class GraftShardColumnarPartitionReader(
     }
   }
   private val selected = new Array[Boolean](capacity)
-  // physical ordinals of the staged rows (row-era fills them per row;
-  // columnar batches derive them from the batch start) — the _pos
-  // currency, and what keeps it exact under DV/filter compaction
-  private val posBuf = new Array[Long](capacity)
+  // physical ordinal of the current batch's first staged row: staged
+  // row r is ordinal batchStart + r — the _pos currency, and what keeps
+  // it exact under DV/filter compaction
+  private var batchStart = 0L
 
   private val groupSkip: ShardFormat.GroupStats => Boolean =
     ShardFilters.groupSkipper(pushed)
@@ -2141,48 +2142,6 @@ class GraftShardColumnarPartitionReader(
       while (k < nNulls) { staging(s).putNull(nullRows(k)); k += 1 }
     }
   }
-  // boxed puts for the legacy row-path fallback (widening already
-  // happened in the row decode — values arrive as the TABLE's types)
-  private val boxedPut: Array[(Int, Any) => Unit] =
-    readTypes.zipWithIndex.map { case (dt, s) =>
-      dt match {
-        case LongType => (r: Int, v: Any) => staging(s).putLong(r, v.asInstanceOf[Long])
-        case _: DecimalType => (r: Int, v: Any) =>
-          staging(s).putLong(r, v.asInstanceOf[Decimal].toUnscaledLong)
-        case IntegerType => (r: Int, v: Any) => staging(s).putInt(r, v.asInstanceOf[Int])
-        case DoubleType => (r: Int, v: Any) => staging(s).putDouble(r, v.asInstanceOf[Double])
-        case FloatType => (r: Int, v: Any) => staging(s).putFloat(r, v.asInstanceOf[Float])
-        case BooleanType => (r: Int, v: Any) => staging(s).putBoolean(r, v.asInstanceOf[Boolean])
-        case StringType => (r: Int, v: Any) => {
-          val b = v.asInstanceOf[UTF8String].getBytes
-          staging(s).putByteArray(r, b, 0, b.length): Unit
-        }
-        case BinaryType => (r: Int, v: Any) => {
-          val b = v.asInstanceOf[Array[Byte]]
-          staging(s).putByteArray(r, b, 0, b.length): Unit
-        }
-        case ArrayType(FloatType, _) => (r: Int, v: Any) => {
-          val a = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toFloatArray
-          val child = staging(s).arrayData()
-          val start = child.appendFloats(a.length, a, 0)
-          staging(s).putArray(r, start, a.length)
-        }
-        case ArrayType(IntegerType, _) => (r: Int, v: Any) => {
-          val a = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray
-          val child = staging(s).arrayData()
-          val start = child.appendInts(a.length, a, 0)
-          staging(s).putArray(r, start, a.length)
-        }
-        case ArrayType(LongType, _) => (r: Int, v: Any) => {
-          val a = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray
-          val child = staging(s).arrayData()
-          val start = child.appendLongs(a.length, a, 0)
-          staging(s).putArray(r, start, a.length)
-        }
-        case other => throw new IllegalStateException(
-          s"graftshard: columnar reader admitted unsupported type ${other.sql}")
-      }
-    }
   // typed compaction copies, one per OUTPUT position: (staging row,
   // output row) — metadata positions synthesize from the reader state
   private val compactPut: Array[(Int, Int) => Unit] =
@@ -2193,7 +2152,7 @@ class GraftShardColumnarPartitionReader(
           val b = fileNameBytes
           output(j).putByteArray(o, b, 0, b.length): Unit
         }
-        case -2 => (r: Int, o: Int) => output(j).putLong(o, posBuf(r))
+        case -2 => (r: Int, o: Int) => output(j).putLong(o, batchStart + r)
         case s =>
           val st = staging(s)
           val out = output(j)
@@ -2257,8 +2216,6 @@ class GraftShardColumnarPartitionReader(
 
   private var fileIdx = -1
   private var reader: ShardFormat.ShardReader = _
-  private var rowEra = false
-  private val rowValues = new Array[Any](readCols.length)
   private var current: ColumnarBatch = _
   private var fileNameBytes: Array[Byte] = Array.emptyByteArray
   // merge-on-read: sorted delete-vector ordinals of the current file;
@@ -2280,7 +2237,6 @@ class GraftShardColumnarPartitionReader(
           fileNameBytes = f.getName.getBytes(java.nio.charset.StandardCharsets.UTF_8)
           reader = new ShardFormat.ShardReader(
             f, fullSchema, readIndices, groupSkip, resolve)
-          rowEra = !reader.columnarFile
           dv = files(fileIdx)._3
             .map(d => ShardFormat.readDeleteVector(new File(d)))
             .getOrElse(Array.emptyLongArray)
@@ -2291,45 +2247,16 @@ class GraftShardColumnarPartitionReader(
             else eqSets.collect { case (slot, set, seq) if fileSeq < seq => (slot, set) }
         }
       } else {
-        var n = -1
-        if (rowEra) {
-          resetStaging()
-          var r = 0
-          var more = true
-          while (r < capacity && { more = reader.next(rowValues); more }) {
-            // merge-on-read: a delete-vector ordinal is skipped at fill
-            // time (the reader's ordinal counts skipped-group rows too)
-            val pos = reader.ordinal
-            while (dvIdx < dv.length && dv(dvIdx) < pos) dvIdx += 1
-            if (dvIdx < dv.length && dv(dvIdx) == pos) dvIdx += 1
-            else {
-              var s = 0
-              while (s < rowValues.length) {
-                val v = rowValues(s)
-                if (v == null) staging(s).putNull(r) else boxedPut(s)(r, v)
-                s += 1
-              }
-              posBuf(r) = pos
-              r += 1
-            }
-          }
-          if (!more) reader = null
-          n = if (r > 0) r else -1
-        } else {
-          resetStaging()
-          n = reader.nextBatch { rows =>
-            require(rows <= capacity,
-              s"graftshard: row group of $rows rows exceeds the vector " +
-                s"capacity $capacity — not written by this library's writer")
-            sink
-          }
-          if (n < 0) reader = null
+        resetStaging()
+        val n = reader.nextBatch { rows =>
+          require(rows <= capacity,
+            s"graftshard: row group of $rows rows exceeds the vector " +
+              s"capacity $capacity — not written by this library's writer")
+          sink
         }
+        if (n < 0) reader = null
         if (n > 0) {
-          // row-era batches already applied the DV at fill time (eq
-          // deletes evaluate over the STAGED vectors either way)
-          val dvHere = !rowEra && dv.nonEmpty
-          if (evals.isEmpty && !dvHere && activeEq.isEmpty && !hasMeta) {
+          if (evals.isEmpty && dv.isEmpty && activeEq.isEmpty && !hasMeta) {
             // every row survives: expose the staged vectors zero-copy,
             // truncated to the limit's remainder (a prefix subset is a
             // valid partial LIMIT answer — Spark's Limit finishes)
@@ -2339,21 +2266,16 @@ class GraftShardColumnarPartitionReader(
             current = stagingBatch
             return true
           }
-          if (!rowEra) {
-            // columnar batch ordinals are [start, start+n)
-            val start = reader.ordinal - n + 1
-            var r = 0
-            while (r < n) { posBuf(r) = start + r; r += 1 }
-          }
+          // batch ordinals are [start, start+n)
+          batchStart = reader.ordinal - n + 1
           // unified selection: absorbed predicates AND merge-on-read
           // delete ordinals deselect staged rows the same way
           var kept = n
           java.util.Arrays.fill(selected, 0, n, true)
-          if (dvHere) {
-            val start = posBuf(0)
-            while (dvIdx < dv.length && dv(dvIdx) < start) dvIdx += 1
-            while (dvIdx < dv.length && dv(dvIdx) < start + n) {
-              selected((dv(dvIdx) - start).toInt) = false
+          if (dv.nonEmpty) {
+            while (dvIdx < dv.length && dv(dvIdx) < batchStart) dvIdx += 1
+            while (dvIdx < dv.length && dv(dvIdx) < batchStart + n) {
+              selected((dv(dvIdx) - batchStart).toInt) = false
               kept -= 1
               dvIdx += 1
             }
@@ -3022,7 +2944,7 @@ object ShardFilters {
 
   /** True when a file's bloom sidecar PROVES no row can match some
     * probe. Sidecar column names are write-time names — resolved
-    * through the alias map exactly like pre-v4 file headers. */
+    * through the alias map. */
   def bloomSkipsFile(
       probes: Array[(String, Array[Long])],
       sidecar: Option[String],
@@ -3037,7 +2959,7 @@ object ShardFilters {
       }
     }
 
-  /** Within-file group skipping: a v3+ row group whose header stats
+  /** Within-file group skipping: a row group whose header stats
     * prove no row can match is dropped whole — the SAME [[mayContain]]
     * that prunes files from the manifest, over a synthetic one-group
     * FileEntry, so the two levels cannot drift. */

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** On-disk format for the `graftshard` DataSourceV2 connector
-  * ([[GraftShardSource]]): row-oriented binary shard files plus one
+  * ([[GraftShardSource]]): columnar binary shard files plus one
   * JSON `_graft_manifest.json` that is the SINGLE source of truth for
   * what the table contains — schema, committed file list, and per-file
   * column statistics (row count, min/max/null-count for integral
@@ -43,60 +43,34 @@ import org.apache.spark.unsafe.types.UTF8String
   * manifest-list shape), which none of the reader/writer contracts
   * here preclude.
   *
-  * File encoding (big-endian throughout). v3 (current writer): magic,
-  * self-describing column header (count, then type tag + name per
-  * column), then COLUMNAR row groups until EOF — each group is
-  * [rowCount:4B][per column in header order: chunkBytes:4B, null
-  * bitmap (ceil(rows/8), bit set = null), packed non-null values].
-  * Values: long/double 8B, int/float 4B, boolean 1B, string/binary 4B
-  * length + bytes, float-array 4B count + 4B per element. Column
-  * pruning skips unwanted chunks with ONE skip per column per group —
-  * on an object store, a ranged GET never issued — where the v2 row
-  * layout ([rowBitmap][fields...] per record, same value encodings,
-  * still read-supported) paid a per-row per-field length parse to step
-  * over unwanted columns. Physical row order is identical in both
-  * formats (the `_pos`/delete-vector contract); compaction rewrites
-  * upgrade v2 files to v3 as a side effect.
+  * File encoding (big-endian throughout), format v4 — the only format
+  * written and the only one read: magic, self-describing column header
+  * (count, then type tag, field id and name per column), then COLUMNAR
+  * row groups until EOF — each group is [rowCount:4B][group stats][per
+  * column in header order: codec:1B, storedBytes:4B, rawBytes:4B, the
+  * chunk: null bitmap (ceil(rows/8), bit set = null), then the packed
+  * non-null values, encoded by the chunk's codec]. Raw values:
+  * long/double 8B, int/float 4B, boolean 1B, string/binary 4B length +
+  * bytes, float-array 4B count + 4B per element. Column pruning skips
+  * unwanted chunks with ONE skip per column per group — on an object
+  * store, a ranged GET never issued. Physical row order is the
+  * `_pos`/delete-vector contract.
   */
 object ShardFormat {
 
-  // v2 (round 11): files are SELF-DESCRIBING — a column header (name +
-  // type tag per stored column) follows the magic, which is what makes
-  // ADD/DROP COLUMN metadata-only operations: a reader under the
-  // current table schema projects any file's columns by NAME, null-
-  // fills added columns old files lack, and byte-skips dropped columns
-  // whose type the table no longer knows (the header remembers it).
-  val Magic: Array[Byte] = "GRFTSHD2".getBytes(StandardCharsets.US_ASCII)
-  // v1 (rounds ≤ 10): the same row layout as v2 but with NO column
-  // header — the table schema IS the file layout. Still READ-supported
-  // so pre-v2 tables are not stranded: a v1 file decodes under the
-  // current table schema, exactly its original contract (v1 tables
-  // predate schema evolution, so the schema cannot have drifted under
-  // them — ADD/DROP COLUMN arrived with the self-describing v2 header).
-  // Compaction rewrites v1 files to v3 like any other file.
-  val MagicV1: Array[Byte] = "GRFTSHD1".getBytes(StandardCharsets.US_ASCII)
-  // v3 (round 11, later): COLUMNAR row groups — same self-describing
-  // header, then groups of [rowCount][per column: chunkBytes, null
-  // bitmap, packed non-null values]. Column pruning now skips whole
-  // chunks (ONE skip per column per group — at 100 TB on an object
-  // store, a ranged GET the reader never issues) where the v2 row
-  // layout paid a per-row, per-field length parse to step over
-  // unwanted columns. Readers serve every version (the reader
-  // dispatches on the magic), so existing tables keep working and
-  // compaction upgrades them file by file.
-  val MagicV3: Array[Byte] = "GRFTSHD3".getBytes(StandardCharsets.US_ASCII)
-  // v4 (round 12): v3's columnar layout with FIELD IDS in the column
-  // header — [tag, fieldId, name] per column (the name stays as a
-  // debugging aid). Readers resolve v4 columns BY ID against the
-  // manifest's id→name map ([[Manifest.fieldIds]]), which is what makes
-  // RENAME COLUMN a manifest-only commit (Iceberg's field-id
-  // indirection): old files keep their bytes and their ids; only the
-  // manifest's id→name entry changes. Pre-v4 files keep resolving by
-  // name through [[Manifest.aliases]] (every PAST name of a live id),
-  // so mixed tables work file-by-file and compaction upgrades them.
-  // Type widening (int→long, float→double) rides the same header: the
-  // file keeps its STORED type; the reader decodes the stored width and
-  // widens to the table type at emit — per-file, zero rewrite.
+  // The v4 magic. The self-describing header ([tag, fieldId, name] per
+  // column; the name is a debugging aid) is what makes ADD/DROP COLUMN
+  // metadata-only: a reader under the current table schema projects any
+  // file's columns, null-fills added columns old files lack, and
+  // byte-skips dropped columns whose type the table no longer knows.
+  // Readers resolve columns BY ID against the manifest's id→name map
+  // ([[Manifest.fieldIds]]), which is what makes RENAME COLUMN a
+  // manifest-only commit (Iceberg's field-id indirection): old files
+  // keep their bytes and their ids; only the manifest's id→name entry
+  // changes. Type widening (int→long, float→double) rides the same
+  // header: the file keeps its STORED type; the reader decodes the
+  // stored width and widens to the table type at emit — per-file, zero
+  // rewrite. A file with any other magic fails to open.
   val MagicV4: Array[Byte] = "GRFTSHD4".getBytes(StandardCharsets.US_ASCII)
   // group flush thresholds: bounded writer/reader memory (one group
   // buffered at a time), large enough that chunk skips amortize
@@ -379,7 +353,7 @@ object ShardFormat {
     * [[FileEntry.bloom]] — the delete-vector pattern): magic, column
     * count, then per column [name:UTF][k:4B][words:4B][words×8B].
     * Column names are the WRITE-TIME names; readers map them through
-    * [[ColumnResolution.aliases]], exactly like pre-v4 file headers. */
+    * [[ColumnResolution.aliases]]. */
   def writeBloomSidecar(file: File, cols: Seq[(String, Bloom)]): Unit = {
     val out = new DataOutputStream(
       new BufferedOutputStream(new FileOutputStream(file), 1 << 16))
@@ -624,15 +598,16 @@ object ShardFormat {
       // indirection (format v4): a column's id is assigned once (at
       // CREATE or ADD COLUMN) and never reused; v4 file headers key
       // columns by id, so a rename only edits this manifest's id→name
-      // mapping. Nil = positional 1..n (pre-v4 manifests never renamed,
-      // so position IS identity for them); materialized to an explicit
+      // mapping. Nil = positional 1..n (a table no ALTER has touched
+      // never renamed, so position IS identity for it); materialized to an explicit
       // list by the first ALTER that needs it
       fieldIds: Seq[Int] = Nil,
       // high-water mark for id assignment; ids of dropped columns are
       // retired forever (0 = derive from fieldIds/positional)
       lastFieldId: Int = 0,
-      // every PAST name of a field id (RENAME appends old→id): pre-v4
-      // files key columns by NAME, so a renamed column's old files
+      // every PAST name of a field id (RENAME appends old→id): bloom
+      // sidecars key columns by their write-time NAME, and so does a
+      // reader given no field ids, so a renamed column's old names
       // resolve through this map. Names stay reserved even after the
       // id is dropped — re-ADDing one would make old files' stored
       // bytes ambiguous between the old column and the new one
@@ -869,7 +844,7 @@ object ShardFormat {
     * file's self-described columns map onto the table schema under
     * renames (aliases: past name → current name) and v4 field ids
     * (fieldIds: parallel to the table schema). Empty = resolve by name
-    * only (no renames ever happened — the pre-v4 behavior). */
+    * only (right when no rename ever happened). */
   final case class ColumnResolution(
       aliases: Map[String, String],
       fieldIds: Array[Int])
@@ -1361,7 +1336,7 @@ object ShardFormat {
     b
   }
 
-  /** Per-column group buffer for the v3 writer: a null bitmap over the
+  /** Per-column group buffer for the shard writer: a null bitmap over the
     * group's rows plus the packed non-null values. */
   private final class ColBuf {
     var bitmap = new Array[Byte](GroupMaxRows / 8)
@@ -1388,7 +1363,7 @@ object ShardFormat {
       allNull: Map[String, Long],
       strStats: Map[String, (String, String, Long)] = Map.empty)
 
-  /** Writes one shard file (format v3, columnar row groups); the
+  /** Writes one shard file (format v4, columnar row groups); the
     * caller feeds [[InternalRow]]s in the full table schema. Rows are
     * buffered per column and flushed as a group at [[GroupMaxRows]] /
     * [[GroupMaxBytes]] — bounded memory, one group in flight. Not
@@ -1422,7 +1397,7 @@ object ShardFormat {
       new BufferedOutputStream(new FileOutputStream(file), 1 << 20))
     out.write(MagicV4)
     // self-describing column header: the file, not the manifest, is the
-    // truth about its own layout (see the Magic/MagicV4 notes). The id
+    // truth about its own layout (see the MagicV4 note). The id
     // is the durable identity (rename-proof); the name is a debug aid.
     out.writeShort(fields.length)
     schema.fields.zipWithIndex.foreach { case (f, i) =>
@@ -1874,18 +1849,18 @@ object ShardFormat {
 
   /** Sequential reader over one shard file, decoding only the columns
     * in `readIndices` (indices into the TABLE schema, ascending); other
-    * columns are skipped — v3/v4 files skip a whole column CHUNK with
-    * one seek-sized skip per row group (the columnar IO win), v2 files
-    * byte-skip field by field. Emits value arrays positionally aligned
-    * with `readIndices`, in physical row order for ALL formats (the
-    * `_pos` / delete-vector contract).
+    * columns are skipped a whole column CHUNK at a time, one seek-sized
+    * skip per row group (the columnar IO win). Emits values in physical
+    * row order (the `_pos` / delete-vector contract). Only format v4
+    * ([[MagicV4]]) is read; any other magic fails with an IOException
+    * naming the file.
     *
     * The file's OWN column header drives decoding (schema evolution):
     * a wanted table column the file lacks (added after the file was
     * written) is null-filled; a file column the table no longer has
     * (dropped) is skipped using the header's type tag. Column matching:
-    * v4 headers resolve BY FIELD ID against `resolve.fieldIds` (rename-
-    * proof); pre-v4 headers resolve by name, with `resolve.aliases`
+    * BY FIELD ID against `resolve.fieldIds` (rename-proof) when the
+    * caller passes them; otherwise by name, with `resolve.aliases`
     * mapping a renamed column's past names to its current one. When
     * both sides have a column, the types must agree OR widen losslessly
     * (int→long, float→double — the file's stored width is decoded and
@@ -1894,7 +1869,7 @@ object ShardFormat {
       file: File,
       schema: StructType,
       readIndices: Array[Int],
-      // group-skip test over a group's header stats (v3+ only): true =
+      // group-skip test over a group's header stats: true =
       // no row in the group can match the scan's absorbed predicates —
       // all its chunks are skipped unread. Callers that depend on
       // DENSE ordinals must keep the default and count rows themselves,
@@ -1903,46 +1878,40 @@ object ShardFormat {
       resolve: ColumnResolution = ColumnResolution.empty) {
     private val in = new DataInputStream(
       new BufferedInputStream(new FileInputStream(file), 1 << 20))
-    private val (isColumnar, isV1, isV4) = {
-      val hdr = new Array[Byte](Magic.length)
-      in.readFully(hdr)
-      if (java.util.Arrays.equals(hdr, MagicV4)) (true, false, true)
-      else if (java.util.Arrays.equals(hdr, MagicV3)) (true, false, false)
-      else if (java.util.Arrays.equals(hdr, Magic)) (false, false, false)
-      else if (java.util.Arrays.equals(hdr, MagicV1)) (false, true, false)
-      else throw new java.io.IOException(
-        s"graftshard: bad magic in $file — not a shard file")
+    locally {
+      val hdr = new Array[Byte](MagicV4.length)
+      val complete =
+        try { in.readFully(hdr); true }
+        catch { case _: EOFException => false }
+      if (!complete || !java.util.Arrays.equals(hdr, MagicV4)) {
+        in.close()
+        throw new java.io.IOException(
+          s"graftshard: bad magic in $file — not a shard file (only shard " +
+            "format v4 is read)")
+      }
     }
-    // v1 is headerless — the table schema is the layout. v1 predates
-    // both renames (no names stored, so they cannot bite) and widening
-    // (the ALTER path refuses widening while v1 files exist, because a
-    // positional decode under the widened type would misread the bytes).
     // decode switches run on PHYSICAL types (a timestamp file column
     // decodes through every long path); resolution below compares
     // physical-vs-physical, which also makes the mapping total
-    private val fields: Array[StructField] =
-      if (isV1) schema.fields.map(f => f.copy(dataType = physicalOf(f.dataType)))
-      else {
-        val n = in.readUnsignedShort()
-        Array.fill(n) {
-          val tag = in.readByte()
-          val dt =
-            if (tag == 11)
-              DecimalType(in.readUnsignedByte(), in.readUnsignedByte())
-            else physicalOf(typeOfTag(tag))
-          if (isV4) { fileIdsBuf += in.readInt() }
-          StructField(in.readUTF(), dt)
-        }
+    private val header: Array[(StructField, Int)] =
+      Array.fill(in.readUnsignedShort()) {
+        val tag = in.readByte()
+        val dt =
+          if (tag == 11)
+            DecimalType(in.readUnsignedByte(), in.readUnsignedByte())
+          else physicalOf(typeOfTag(tag))
+        val id = in.readInt()
+        (StructField(in.readUTF(), dt), id)
       }
-    private lazy val fileIdsBuf = scala.collection.mutable.ArrayBuffer.empty[Int]
-    private val bitmapBytes = (fields.length + 7) / 8
+    private val fields: Array[StructField] = header.map(_._1)
+    private val fileIds: Array[Int] = header.map(_._2)
     // file-column index -> index into the TABLE schema, -1 when the
     // table no longer has the column (dropped — skip by stored type)
     private val target: Array[Int] = {
       val tableIdx = schema.fieldNames.zipWithIndex.toMap
-      if (isV4 && resolve.fieldIds.nonEmpty) {
+      if (resolve.fieldIds.nonEmpty) {
         val byId = resolve.fieldIds.zipWithIndex.toMap
-        fileIdsBuf.toArray.map(id => byId.getOrElse(id, -1))
+        fileIds.map(id => byId.getOrElse(id, -1))
       } else fields.map { f =>
         tableIdx.get(resolve.aliases.getOrElse(f.name, f.name)) match {
           case Some(ti) => ti
@@ -1989,14 +1958,12 @@ object ShardFormat {
         case (ti, o) if !present.contains(ti) => o
       }
     }
-    private val bitmap = new Array[Byte](bitmapBytes)
 
-    // ---- v3 group state: one group's RAW chunk bytes in flight for the
+    // ---- group state: one group's RAW chunk bytes in flight for the
     // wanted columns (others were skipped as whole chunks at load
     // time); values decode lazily per row from per-column cursors — no
-    // staging arrays, so full-width decode allocates exactly what v2
-    // did (the boxed values) and narrow decode allocates only the
-    // wanted chunks
+    // staging arrays, so the row path allocates only the boxed values
+    // and narrow decode allocates only the wanted chunks
     private var gRows = 0
     private var gRow = 0
     private val gChunk = new Array[Array[Byte]](fields.length)
@@ -2031,13 +1998,27 @@ object ShardFormat {
 
     /** Reads the next record into `values` (length = readIndices.length,
       * nulls as null); returns false at clean EOF. */
-    def next(values: Array[Any]): Boolean =
-      if (isColumnar) nextV3(values) else nextV2(values)
-
-    /** Whether this FILE stores whole row groups (v3/v4) — the batch
-      * decode's precondition; row-era files (v1/v2) must go through
-      * [[next]]. */
-    def columnarFile: Boolean = isColumnar
+    def next(values: Array[Any]): Boolean = {
+      if (gRow >= gRows && !loadGroup()) return false
+      var ms = 0
+      while (ms < missingSlots.length) { values(missingSlots(ms)) = null; ms += 1 }
+      var i = 0
+      while (i < fields.length) {
+        val s = slot(i)
+        if (s >= 0) {
+          // a mixed consumer (nextBatch then next — documented as never)
+          // still reads correctly: reconstruct the cell layout on demand
+          if (gDict(i) != null) materializeDict(i)
+          if (gKept(i) != 0) materializeKept(i)
+          val isNull = (gChunk(i)(gRow >> 3) & (1 << (gRow & 7))) != 0
+          values(s) = if (isNull) null else decodeOne(gCursor(i), fields(i), widen(i))
+        }
+        i += 1
+      }
+      gRow += 1
+      physOrdinal += 1
+      true
+    }
 
     /** COLUMNAR batch decode: loads the next row group and writes its
       * wanted columns into the sink COLUMN-AT-A-TIME — one tight loop
@@ -2048,9 +2029,6 @@ object ShardFormat {
       * (so the caller can size/reset its vectors); returns n, or -1 at
       * clean EOF. Never mix with [[next]] on the same reader. */
     def nextBatch(begin: Int => BatchSink): Int = {
-      require(isColumnar,
-        s"graftshard: nextBatch on a row-era (v1/v2) file $file — callers " +
-          "must route such files through next()")
       batchConsumer = true
       if (gRow >= gRows && !loadGroup()) return -1
       val start = gRow
@@ -2596,28 +2574,6 @@ object ShardFormat {
     private var intScratch: Array[Int] = Array.emptyIntArray
     private var longScratch: Array[Long] = Array.emptyLongArray
 
-    private def nextV3(values: Array[Any]): Boolean = {
-      if (gRow >= gRows && !loadGroup()) return false
-      var ms = 0
-      while (ms < missingSlots.length) { values(missingSlots(ms)) = null; ms += 1 }
-      var i = 0
-      while (i < fields.length) {
-        val s = slot(i)
-        if (s >= 0) {
-          // a mixed consumer (nextBatch then next — documented as never)
-          // still reads correctly: reconstruct the cell layout on demand
-          if (gDict(i) != null) materializeDict(i)
-          if (gKept(i) != 0) materializeKept(i)
-          val isNull = (gChunk(i)(gRow >> 3) & (1 << (gRow & 7))) != 0
-          values(s) = if (isNull) null else decodeOne(gCursor(i), fields(i), widen(i))
-        }
-        i += 1
-      }
-      gRow += 1
-      physOrdinal += 1
-      true
-    }
-
     private def loadGroup(): Boolean = {
       while (true) {
         val rows =
@@ -2762,37 +2718,6 @@ object ShardFormat {
           new GenericArrayData(a)
         case other => throw new IllegalStateException(s"unreachable: $other (${field.name})")
       }
-
-    private def nextV2(values: Array[Any]): Boolean = {
-      try in.readFully(bitmap)
-      catch { case _: EOFException => in.close(); return false }
-      physOrdinal += 1
-      var ms = 0
-      while (ms < missingSlots.length) { values(missingSlots(ms)) = null; ms += 1 }
-      var i = 0
-      while (i < fields.length) {
-        val isNull = (bitmap(i >> 3) & (1 << (i & 7))) != 0
-        if (isNull) {
-          if (slot(i) >= 0) values(slot(i)) = null
-        } else if (slot(i) >= 0) {
-          values(slot(i)) = decodeOne(in, fields(i), widen(i))
-        } else {
-          fields(i).dataType match {
-            case LongType | DoubleType => in.skipFully(8)
-            case _: DecimalType => in.skipFully(8)
-            case IntegerType | FloatType => in.skipFully(4)
-            case BooleanType => in.skipFully(1)
-            case StringType | BinaryType => in.skipFully(in.readInt().toLong)
-            case ArrayType(FloatType | IntegerType, _) =>
-              in.skipFully(in.readInt().toLong * 4)
-            case ArrayType(LongType, _) => in.skipFully(in.readInt().toLong * 8)
-            case dt => throw new IllegalStateException(s"unreachable: $dt")
-          }
-        }
-        i += 1
-      }
-      true
-    }
 
     def close(): Unit = in.close()
 

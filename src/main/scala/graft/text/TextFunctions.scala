@@ -32,20 +32,6 @@ object TextFunctions {
       concat_ws(" ", (0 until n).map(o => element_at(toks, i + lit(o))): _*)))
   }
 
-  /** A deterministic family of hash functions indexed by `seed`:
-    * h_seed(x) = md5(x ⧺ "#" ⧺ seed), compared lexicographically.
-    * A keyed md5 is an independent uniform permutation proxy per seed —
-    * exactly what MinHash needs — and is reproducible in any engine. */
-  def seededHash(value: Column, seed: Column): Column =
-    md5(concat(value, lit("#"), seed.cast("string")))
-
-  /** MinHash signature: for each of `k` seeds, the minimum seeded hash over
-    * the shingle set. One pass over the shingles per seed, all inside
-    * codegen; signature length k is a plan-time constant. */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)), s =>
-      array_min(transform(shingles, sh => seededHash(sh, s))))
-
   /** Exact Jaccard similarity of two pre-distinct arrays, as a double. */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") /

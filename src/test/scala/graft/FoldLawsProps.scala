@@ -57,13 +57,4 @@ object FoldLawsProps extends Properties("FoldLaws") {
         .collect().map(_.getLong(0))
       fp(0) == fp(1) && fp(0) >= 0L && fp(0) < (1L << 16)
     }
-
-  property("minhash signatures of equal shingle sets are equal") =
-    Prop.forAll(tokenGen) { toks =>
-      val text = toks.mkString(" ")
-      val sigs = Seq(text, text).toDF("t")
-        .select(TextFunctions.minhashSignature(TextFunctions.tokens(col("t")), 6).as("s"))
-        .collect().map(_.getSeq[String](0))
-      sigs(0) == sigs(1) && sigs(0).length == 6
-    }
 }

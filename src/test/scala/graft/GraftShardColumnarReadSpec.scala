@@ -6,15 +6,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.v2.ShardFormat
-
 /** Columnar batch reads ([[graft.sources.v2.GraftShardReaderFactory
-  * .supportColumnarReads]]): scans decode v3/v4 row groups
-  * column-at-a-time into reused vectors — since round 13 INCLUDING
-  * filters, metadata columns, embeddings, merge-on-read delete
-  * vectors, live equality deletes, and pushed LIMITs (the row path
-  * remains only for legacy v1/v2 files and the columnarRead=false
-  * hatch). Pins: the batch path is byte-exact vs the row path across
+  * .supportColumnarReads]]): scans decode shard row groups
+  * column-at-a-time into reused vectors — INCLUDING filters, metadata
+  * columns, embeddings, merge-on-read delete vectors, live equality
+  * deletes, and pushed LIMITs (the row path remains only behind the
+  * columnarRead=false option, which these tests use as the reference).
+  * Pins: the batch path is byte-exact vs the row path across
   * every scalar type, null pattern, and chunk codec (incl. the
   * round-14 kept-encoded dictionary/RLE/delta forms and the bulk
   * whole-group decode); it ACTUALLY engages (ColumnarToRow in the
@@ -255,7 +253,7 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
     assert(t.where(col("k") === "nope").count() == 0)
   }
 
-  test("rename and int->long widening resolve inside the batch decode; legacy files fall back in place") {
+  test("rename and int->long widening resolve inside the batch decode") {
     spark.sql("CREATE NAMESPACE colcat.evo")
     spark.sql("CREATE TABLE colcat.evo.t (id BIGINT, n INT) USING graftshard")
     spark.range(0, 100).select(col("id"), col("id").cast("int").as("n"))
@@ -272,31 +270,6 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
     val want = (0L until 100L).map(id => (id, id)) ++
       (100L until 200L).map(id => (id, id + 3000000000L))
     assert(got.toSeq == want)
-
-    // a v1-era file next to v3 appends: the mixed partition still reads
-    // exactly (the legacy file row-decodes into the same vectors)
-    val dir = tmp()
-    new java.io.File(dir).mkdirs()
-    val f = new java.io.File(dir, "v1.shard")
-    val out = new java.io.DataOutputStream(new java.io.FileOutputStream(f))
-    out.write("GRFTSHD1".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    out.writeByte(0x00); out.writeLong(3L)
-    val hi = "hi".getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    out.writeInt(hi.length); out.write(hi)
-    out.close()
-    ShardFormat.writeManifest(dir, ShardFormat.Manifest(
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("s", org.apache.spark.sql.types.StringType))),
-      generation = "v1", files = Seq(ShardFormat.FileEntry("v1.shard", f.length(), 1L,
-        stats = Map("id" -> ((3L, 3L, 0L))), allNull = Map.empty)),
-      version = 1L, createdAtMs = 1L, operation = "append"))
-    Seq((10L, "x10"), (11L, "x11")).toDF("id", "s")
-      .coalesce(1).write.format("graftshard").mode("append").save(dir)
-    val mixed = spark.read.format("graftshard").load(dir)
-    assert(plan(mixed).contains("ColumnarToRow"))
-    assert(mixed.collect().map(r => (r.getLong(0), r.getString(1))).toSet ==
-      Set((3L, "hi"), (10L, "x10"), (11L, "x11")))
   }
 
   test("equality deletes (upsert ingestion) stay columnar and match the row path") {

@@ -9,12 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.v2.ShardFormat
 
-/** Shard format v3 (columnar row groups): multi-group roundtrip,
-  * delete-vector ordinals crossing group boundaries, and the pinned
-  * v2 LEGACY read path — a v2 file is hand-encoded byte by byte here
-  * (the writer only emits v3), so the compatibility contract is tested
-  * against the format spec, not against a writer that no longer
-  * exists. */
+/** Shard format v4 (columnar row groups): multi-group roundtrip,
+  * delete-vector ordinals crossing group boundaries, group skipping,
+  * the chunk codecs, and the reader's refusal of corrupt chunks and of
+  * any file magic other than v4 — the corrupt files are hand-encoded
+  * byte by byte against the format spec. */
 class GraftShardColumnarSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -62,54 +61,6 @@ class GraftShardColumnarSpec extends AnyFunSuite {
     finally spark.conf.unset("spark.graftshard.rowLevel.mode")
     val left = spark.table("colcat.g.t").select("id").collect().map(_.getLong(0)).toSet
     assert(left == (0L until n.toLong).filterNot(_ % 3 == 1).toSet)
-  }
-
-  test("v2 legacy files read back exactly (hand-encoded against the format spec)") {
-    val dir = tmp()
-    new File(dir).mkdirs()
-    // one v2 file: columns (id: long, s: string, m: int nullable)
-    val f = new File(dir, "legacy.shard")
-    val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(f)))
-    out.write("GRFTSHD2".getBytes(StandardCharsets.US_ASCII))
-    out.writeShort(3)
-    out.writeByte(0); out.writeUTF("id") // tag 0 = long
-    out.writeByte(5); out.writeUTF("s")  // tag 5 = string
-    out.writeByte(1); out.writeUTF("m")  // tag 1 = int
-    // row 0: (7, "ab", 42)         bitmap 0x00
-    out.writeByte(0x00)
-    out.writeLong(7L)
-    val ab = "ab".getBytes(StandardCharsets.UTF_8)
-    out.writeInt(ab.length); out.write(ab)
-    out.writeInt(42)
-    // row 1: (8, null, null)       bitmap bits 1,2 set = 0x06
-    out.writeByte(0x06)
-    out.writeLong(8L)
-    out.close()
-    // manifest over it (stats for id so pruning surfaces stay sound)
-    ShardFormat.writeManifest(dir, ShardFormat.Manifest(
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("s", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("m", org.apache.spark.sql.types.IntegerType))),
-      generation = "legacy00",
-      files = Seq(ShardFormat.FileEntry("legacy.shard", f.length(), 2L,
-        stats = Map("id" -> ((7L, 8L, 0L)), "m" -> ((42L, 42L, 1L))),
-        allNull = Map.empty)),
-      version = 1L, createdAtMs = 1L, operation = "append"))
-    val t = spark.read.format("graftshard").load(dir)
-    val rows = t.collect().map(r => (r.getLong(0),
-      if (r.isNullAt(1)) null else r.getString(1),
-      if (r.isNullAt(2)) null else Int.box(r.getInt(2)))).toSet
-    assert(rows == Set((7L, "ab", Int.box(42)), (8L, null, null)))
-    // pruned v2 read: the per-field byte-skip path
-    assert(t.select("m").collect().map(r =>
-      if (r.isNullAt(0)) null else Int.box(r.getInt(0))).toSet == Set(Int.box(42), null))
-    // a v3 append lands next to the v2 file; both formats serve one scan
-    spark.range(100, 103).select(col("id"),
-        concat(lit("x"), col("id")).as("s"), col("id").cast("int").as("m"))
-      .coalesce(1)
-      .write.format("graftshard").mode("append").save(dir)
-    assert(spark.read.format("graftshard").load(dir).count() == 5)
   }
 
   test("group skipping: sorted multi-group file drops groups whole; ordinals stay exact") {
@@ -237,50 +188,14 @@ class GraftShardColumnarSpec extends AnyFunSuite {
     assert(e.getMessage.contains("unknown compression"), e.getMessage)
   }
 
-  test("v1 legacy files (headerless, pre-v2) read back under the table schema") {
-    val dir = tmp()
-    new File(dir).mkdirs()
-    // v1: magic then rows — NO column header; the table schema IS the layout
-    val f = new File(dir, "v1.shard")
-    val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(f)))
-    out.write("GRFTSHD1".getBytes(StandardCharsets.US_ASCII))
-    // row 0: (3, "hi")  bitmap 0x00
-    out.writeByte(0x00)
-    out.writeLong(3L)
-    val hi = "hi".getBytes(StandardCharsets.UTF_8)
-    out.writeInt(hi.length); out.write(hi)
-    // row 1: (4, null)  bitmap bit 1 = 0x02
-    out.writeByte(0x02)
-    out.writeLong(4L)
-    out.close()
-    ShardFormat.writeManifest(dir, ShardFormat.Manifest(
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("s", org.apache.spark.sql.types.StringType))),
-      generation = "v1legacy",
-      files = Seq(ShardFormat.FileEntry("v1.shard", f.length(), 2L,
-        stats = Map("id" -> ((3L, 4L, 0L))), allNull = Map.empty)),
-      version = 1L, createdAtMs = 1L, operation = "append"))
-    val t = spark.read.format("graftshard").load(dir)
-    val rows = t.collect().map(r =>
-      (r.getLong(0), if (r.isNullAt(1)) null else r.getString(1))).toSet
-    assert(rows == Set((3L, "hi"), (4L, null)))
-    // pruned v1 read uses the same per-field byte-skip as v2
-    assert(t.select("id").collect().map(_.getLong(0)).toSet == Set(3L, 4L))
-    // a v3 append next to it: one scan serves all three format versions
-    spark.range(10, 12).select(col("id"), concat(lit("x"), col("id")).as("s"))
-      .coalesce(1).write.format("graftshard").mode("append").save(dir)
-    assert(spark.read.format("graftshard").load(dir).count() == 4)
-  }
-
   test("a corrupt/truncated deflate chunk raises instead of spinning forever") {
     val dir = tmp()
     new File(dir).mkdirs()
     val f = new File(dir, "corrupt.shard")
     val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(f)))
-    out.write("GRFTSHD3".getBytes(StandardCharsets.US_ASCII))
+    out.write(ShardFormat.MagicV4)
     out.writeShort(1)
-    out.writeByte(5); out.writeUTF("s") // tag 5 = string
+    out.writeByte(5); out.writeInt(1); out.writeUTF("s") // tag 5 = string, field id 1
     out.writeInt(1)    // group rows
     out.writeByte(0)   // no group stats claim
     // chunk: a VALID deflate stream truncated mid-way — the inflater
@@ -490,9 +405,9 @@ class GraftShardColumnarSpec extends AnyFunSuite {
     new File(dir).mkdirs()
     val f = new File(dir, "delta-corrupt.shard")
     val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(f)))
-    out.write("GRFTSHD3".getBytes(StandardCharsets.US_ASCII))
+    out.write(ShardFormat.MagicV4)
     out.writeShort(1)
-    out.writeByte(0); out.writeUTF("id") // tag 0 = long
+    out.writeByte(0); out.writeInt(1); out.writeUTF("id") // tag 0 = long, field id 1
     out.writeInt(2)    // group rows
     out.writeByte(0)   // no group stats claim
     // codec 4 chunk: count says 2 longs but only one varint follows
@@ -517,9 +432,9 @@ class GraftShardColumnarSpec extends AnyFunSuite {
     new File(dir).mkdirs()
     val f = new File(dir, "rle-corrupt.shard")
     val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(f)))
-    out.write("GRFTSHD3".getBytes(StandardCharsets.US_ASCII))
+    out.write(ShardFormat.MagicV4)
     out.writeShort(1)
-    out.writeByte(0); out.writeUTF("id") // tag 0 = long
+    out.writeByte(0); out.writeInt(1); out.writeUTF("id") // tag 0 = long, field id 1
     out.writeInt(4)    // group rows
     out.writeByte(0)   // no group stats claim
     // codec 3 chunk claiming 4 longs (rawLen 1+32) but carrying a run
@@ -551,5 +466,23 @@ class GraftShardColumnarSpec extends AnyFunSuite {
         org.apache.spark.sql.types.StructType(Seq.empty), Array.empty)
     }
     assert(e.getMessage.contains("bad magic"), e.getMessage)
+    // the retired formats fail the same way, naming the file: a v1 file
+    // (headerless) and v2/v3 files with a well-formed one-column header
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType)))
+    for (v <- 1 to 3) {
+      val old = new File(dir, s"v$v.shard")
+      val out = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(old)))
+      out.write(s"GRFTSHD$v".getBytes(StandardCharsets.US_ASCII))
+      if (v > 1) { out.writeShort(1); out.writeByte(0); out.writeUTF("id") }
+      out.writeByte(0x00); out.writeLong(7L) // one v1/v2 row: bitmap, value
+      out.close()
+      val ev = intercept[java.io.IOException] {
+        new ShardFormat.ShardReader(old, schema, Array(0))
+      }
+      assert(ev.getMessage.contains("bad magic") &&
+        ev.getMessage.contains(old.getPath) &&
+        ev.getMessage.contains("only shard format v4 is read"), ev.getMessage)
+    }
   }
 }

@@ -11,8 +11,8 @@ import graft.sources.v2.ShardFormat
   * directions, carried by the self-describing shard files: ADD COLUMN
   * null-fills old files at read time, DROP COLUMN byte-skips stored
   * bytes by the header's type tag, RENAME COLUMN edits only the
-  * manifest (format v4 field ids; pre-v4 files resolve through the
-  * alias map), and widening (int→long, float→double) decodes the
+  * manifest (the file header's field ids), and widening (int→long,
+  * float→double) decodes the
   * file's stored width and widens at emit. Pins: no file is rewritten,
   * time travel preserves the pre-ALTER schema and names, the
   * drop-then-re-add and rename-name-reuse resurrection traps are
@@ -208,102 +208,6 @@ class GraftShardSchemaEvolutionSpec extends AnyFunSuite {
       spark.sql("ALTER TABLE evcat.widen.t ALTER COLUMN n TYPE INT")
     }
     assert(e.getMessage.toLowerCase.contains("not supported"), e.getMessage)
-  }
-
-  test("pre-v4 files (name-keyed v2/v3 headers) resolve through the alias map after a rename+widen") {
-    import java.io.{BufferedOutputStream, DataOutputStream, FileOutputStream, File}
-    import java.nio.charset.StandardCharsets
-    import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft_alias").toString
-    new File(dir).mkdirs()
-    // v2 row-format file: columns (id BIGINT, old_n INT), rows (1,10),(2,20)
-    val f2 = new File(dir, "old-v2.shard")
-    val o2 = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(f2)))
-    o2.write("GRFTSHD2".getBytes(StandardCharsets.US_ASCII))
-    o2.writeShort(2)
-    o2.writeByte(0); o2.writeUTF("id")    // tag 0 = long
-    o2.writeByte(1); o2.writeUTF("old_n") // tag 1 = int
-    o2.writeByte(0x00); o2.writeLong(1L); o2.writeInt(10)
-    o2.writeByte(0x00); o2.writeLong(2L); o2.writeInt(20)
-    o2.close()
-    // v3 columnar file: same columns, one group, one row (3, 30), WITH
-    // group stats (keyed by the OLD name inside the file — the reader
-    // must serve them under the current name for group skipping)
-    val f3 = new File(dir, "old-v3.shard")
-    val o3 = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(f3)))
-    o3.write("GRFTSHD3".getBytes(StandardCharsets.US_ASCII))
-    o3.writeShort(2)
-    o3.writeByte(0); o3.writeUTF("id")
-    o3.writeByte(1); o3.writeUTF("old_n")
-    o3.writeInt(1) // group rows
-    o3.writeByte(1); o3.writeLong(3L); o3.writeLong(3L); o3.writeLong(0L)   // id stats
-    o3.writeByte(1); o3.writeLong(30L); o3.writeLong(30L); o3.writeLong(0L) // old_n stats
-    // id chunk: codec 0, bitmap(1B) + long
-    o3.writeByte(0); o3.writeInt(9); o3.writeInt(9)
-    o3.writeByte(0x00); o3.writeLong(3L)
-    // old_n chunk: bitmap(1B) + int
-    o3.writeByte(0); o3.writeInt(5); o3.writeInt(5)
-    o3.writeByte(0x00); o3.writeInt(30)
-    o3.close()
-    // the manifest AFTER "RENAME old_n TO n; ALTER n TYPE BIGINT": the
-    // current name/type with the old name aliased to the same field id
-    ShardFormat.writeManifest(dir, ShardFormat.Manifest(
-      StructType(Seq(StructField("id", LongType), StructField("n", LongType))),
-      generation = "alias",
-      files = Seq(
-        ShardFormat.FileEntry("old-v2.shard", f2.length(), 2L,
-          stats = Map("id" -> ((1L, 2L, 0L)), "n" -> ((10L, 20L, 0L))), allNull = Map.empty),
-        ShardFormat.FileEntry("old-v3.shard", f3.length(), 1L,
-          stats = Map("id" -> ((3L, 3L, 0L)), "n" -> ((30L, 30L, 0L))), allNull = Map.empty)),
-      version = 1L, createdAtMs = 1L, operation = "append",
-      fieldIds = Seq(1, 2), lastFieldId = 2, aliases = Map("old_n" -> 2)))
-    val t = spark.read.format("graftshard").load(dir)
-    assert(t.schema.fieldNames.toSeq == Seq("id", "n"))
-    assert(t.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
-      Set((1L, 10L), (2L, 20L), (3L, 30L)))
-    // pushed filter on the CURRENT name: file skipping from re-keyed
-    // manifest stats + group-stat canonicalization inside the v3 file
-    assert(t.where(col("n") === 20L).collect().map(_.getLong(0)).toSeq == Seq(2L))
-    assert(t.where(col("n") === 30L).collect().map(_.getLong(0)).toSeq == Seq(3L))
-    // a v4 append joins the mix: one scan serves v2+v3+v4 name eras
-    spark.range(100, 102).select(col("id"), (col("id") * 2).as("n"))
-      .coalesce(1).write.format("graftshard").mode("append").save(dir)
-    assert(spark.read.format("graftshard").load(dir).count() == 5)
-    assert(spark.read.format("graftshard").load(dir)
-      .agg(sum(col("n"))).collect()(0).getLong(0) == 10L + 20L + 30L + 200L + 202L)
-  }
-
-  test("widening refuses while v1 (headerless) files exist; compaction upgrades, then it works") {
-    import java.io.{BufferedOutputStream, DataOutputStream, FileOutputStream, File}
-    import java.nio.charset.StandardCharsets
-    import org.apache.spark.sql.types._
-    spark.sql("CREATE NAMESPACE evcat.v1w")
-    spark.sql("CREATE TABLE evcat.v1w.t (id BIGINT, n INT) USING graftshard")
-    spark.sql("INSERT INTO evcat.v1w.t VALUES (1, 10)")
-    val dir = s"$warehouse/v1w/t"
-    // plant a v1 file next to the v4 one: positional layout (id, n)
-    val f1 = new File(dir, "legacy-v1.shard")
-    val o1 = new DataOutputStream(new BufferedOutputStream(new FileOutputStream(f1)))
-    o1.write("GRFTSHD1".getBytes(StandardCharsets.US_ASCII))
-    o1.writeByte(0x00); o1.writeLong(2L); o1.writeInt(20)
-    o1.close()
-    val m = ShardFormat.readManifest(dir).get
-    ShardFormat.writeManifest(dir, m.copy(
-      files = m.files :+ ShardFormat.FileEntry("legacy-v1.shard", f1.length(), 1L,
-        stats = Map("id" -> ((2L, 2L, 0L)), "n" -> ((20L, 20L, 0L))), allNull = Map.empty),
-      version = m.version + 1, operation = "append"))
-    assert(spark.table("evcat.v1w.t").count() == 2)
-    // widening would misread the v1 file's positional bytes — refused
-    val e = intercept[Exception] {
-      spark.sql("ALTER TABLE evcat.v1w.t ALTER COLUMN n TYPE BIGINT")
-    }
-    assert(e.getMessage.contains("v1") && e.getMessage.toLowerCase.contains("compact"), e.getMessage)
-    // compaction rewrites v1 to v4 under the UN-widened schema; then the
-    // widen is safe and the old values read back widened
-    graft.sources.v2.GraftShardMaintenance.compact(spark, dir, targetBytes = 1L << 20)
-    spark.sql("ALTER TABLE evcat.v1w.t ALTER COLUMN n TYPE BIGINT")
-    assert(spark.table("evcat.v1w.t").collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
-      Set((1L, 10L), (2L, 20L)))
   }
 
   test("evolved column: stats-based surfaces stay sound (no pruning lies, aggregates refuse)") {

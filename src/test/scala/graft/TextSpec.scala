@@ -45,14 +45,6 @@ class TextSpec extends AnyFunSuite {
     assert(r.getDouble(0) == 1.0 && r.getDouble(1) == 0.0)
   }
 
-  test("minhashSignature is deterministic and k-long") {
-    val df = Seq("spark scala engine").toDF("text")
-    val sig = df.select(TextFunctions.minhashSignature(
-      TextFunctions.tokens(col("text")), 8).as("sig")).collect().head.getSeq[String](0)
-    assert(sig.length == 8)
-    assert(sig.forall(_.matches("[0-9a-f]{32}")))
-  }
-
   test("simhash: equal inputs equal fingerprints; bits bounded") {
     val df = Seq(("a b c a", "a b c a"), ("x y z w", "a b c a")).toDF("t1", "t2")
     val rows = df.select(
