@@ -1,6 +1,14 @@
 package graft.queries
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** One driver-checkable query: a Spark implementation plus (when the
   * semantics are SQL-expressible) the equivalent DuckDB oracle SQL. Column
@@ -30,14 +38,57 @@ final case class Q(
     oracle: Option[String])
 
 object Q {
+  /** Table `name` of the testdata directory `dir`. The schema comes from
+    * [[footerSchema]] on the driver: `s.read.parquet(path)` infers it in a
+    * Spark job (`ParquetUtils.mergeSchemasInParallel`, a job even for one
+    * file), about a third of the jobs a parity query runs at benchmark
+    * scale. Nothing is cached across calls, so every timed query still
+    * reads its footer.
+    *
+    * Both confs are set on every call, before the footer is read: the
+    * converter takes `nanosAsLong` from the session conf, and sessions not
+    * built by [[graft.Harness.session]] (the benchmark's, the specs') do
+    * not set it. events.parquet has carried TIMESTAMP(NANOS) (BIGINT under
+    * the legacy flag) and TIMESTAMP(MICROS) (TIMESTAMP_NTZ) across testdata
+    * generations; Streaming.epochSeconds adapts per schema. UTC makes naive
+    * timestamps match DuckDB's epoch_ns interpretation. */
   def table(s: SparkSession, dir: String, name: String): DataFrame = {
-    // events.parquet has carried TIMESTAMP(NANOS) (read back as BIGINT via
-    // the legacy flag) and TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ) across
-    // driver testdata generations; Streaming.epochSeconds adapts per schema.
-    // Pin UTC so naive timestamps match DuckDB's epoch_ns interpretation.
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     s.conf.set("spark.sql.session.timeZone", "UTC")
-    s.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    footerSchema(s, path).fold(s.read.parquet(path))(s.read.schema(_).parquet(path))
+  }
+
+  /** The schema `s.read.parquet(path)` infers with `mergeSchema=false`,
+    * built on the driver with no job, when `path` is one file or a flat
+    * directory: the footer of the first data file by path (the one file
+    * inference reads) through the session's converter, so the Spark
+    * row-metadata key, `nanosAsLong`, INT96 and TIMESTAMP_NTZ inference
+    * apply as they do there. `listed` is Spark's leaf filter. None for a
+    * missing path (a glob included), subdirectories, summary files or no
+    * data file: Spark's own read handles those. */
+  private[graft] def footerSchema(s: SparkSession, path: String): Option[StructType] = {
+    val conf = s.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val status =
+      try fs.getFileStatus(p)
+      catch { case _: FileNotFoundException => return None }
+    def listed(n: String) = !(n.startsWith(".") || n.endsWith("._COPYING_") ||
+      n.startsWith("_") && !n.contains("=") &&
+        !n.startsWith("_metadata") && !n.startsWith("_common_metadata"))
+    val file =
+      if (!status.isDirectory) Some(status)
+      else {
+        val leaves = fs.listStatus(p).filter(c => listed(c.getPath.getName))
+        if (leaves.exists(c => c.isDirectory || c.getPath.getName.startsWith("_"))) None
+        else leaves.sortBy(_.getPath.toString).headOption
+      }
+    file.map { f =>
+      val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
+        new ParquetToSparkSchemaConverter(s.sessionState.conf))
+    }
   }
 
   /** Scratch path for an in-plan at-rest artifact (index, tokenizer

@@ -15,7 +15,7 @@ import graft.text.Curation
   * ceiling (the full table for d2, a 500-doc slice for all three) the
   * in-task branch returns exactly the rows of the forced-distributed
   * branch, Jaccard bits included; building a frame runs no job; d2 written
-  * runs at most 2 jobs; above a kernel's ceiling a raised broadcast
+  * runs at most 1 job; above a kernel's ceiling a raised broadcast
   * threshold still selects the distributed plan; and a 1-byte threshold
   * selects the distributed plans. */
 class CandidateJoinGateSpec extends AnyFunSuite {
@@ -82,7 +82,7 @@ class CandidateJoinGateSpec extends AnyFunSuite {
       assert(got == bits(dist))
     }
 
-  test("building each operator runs no job; d2 written in-task runs <= 2 jobs") {
+  test("building each operator runs no job; d2 written in-task runs <= 1 job") {
     for ((shape, op) <- shapes) {
       var df: DataFrame = null
       assert(TestSpark.jobsOf { df = op(slice) } == 0, shape)
@@ -90,7 +90,7 @@ class CandidateJoinGateSpec extends AnyFunSuite {
     }
     val jobs = TestSpark.jobsOf(SparkEntry.queries("d2_dedup_ngram_jaccard")(spark, dir)
       .write.format("noop").mode("overwrite").save())
-    assert(jobs <= 2, s"d2 ran $jobs jobs")
+    assert(jobs <= 1, s"d2 ran $jobs jobs")
   }
 
   test("above a kernel's ceiling a raised broadcast threshold still selects the distributed plan") {

@@ -205,7 +205,7 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
     assert(proj.collect().map(_.getLong(0)).toSeq == Seq(124L))
   }
 
-  test("array<float> embeddings decode columnar, with nulls, filters, and legacy files") {
+  test("array<float> embeddings decode columnar, with nulls and filters") {
     val dir = tmp()
     spark.range(0, 200)
       .select(col("id"),

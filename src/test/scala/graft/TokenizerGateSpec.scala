@@ -23,22 +23,22 @@ class TokenizerGateSpec extends AnyFunSuite {
       .write.format("noop").mode("overwrite").save())
   }
 
-  test("BPE, p8's shape: driver branch == distributed branch; p8 runs <= 10 jobs") {
+  test("BPE, p8's shape: driver branch == distributed branch; p8 runs <= 7 jobs") {
     val local = Bpe.trainMerges(docs, "text", 20)
     val dist = Bpe.trainMerges(docs, "text", 20, maxDistinctWords = 0)
     assert(local.size == 20)
     assert(local == dist)
     val jobs = queryJobs("p8_bpe_train")
-    assert(jobs <= 10, s"p8 ran $jobs jobs")
+    assert(jobs <= 7, s"p8 ran $jobs jobs")
   }
 
-  test("Unigram-LM, p19's shape: driver EM == distributed EM; p19 runs <= 16 jobs") {
+  test("Unigram-LM, p19's shape: driver EM == distributed EM; p19 runs <= 10 jobs") {
     def train(bound: Long) = UnigramLm.train(docs, "text", vocabSize = 40,
       seedSize = 200, maxPieceLen = 6, maxDistinctWords = bound)
     val local = train(graft.pipeline.WordRelation.MaxDistinctWords)
     assert(local.nonEmpty)
     assert(local == train(0L))
     val jobs = queryJobs("p19_unigram_train")
-    assert(jobs <= 16, s"p19 ran $jobs jobs")
+    assert(jobs <= 10, s"p19 ran $jobs jobs")
   }
 }
