@@ -580,24 +580,6 @@ object Dedup {
       .where(col("jaccard") >= threshold)
   }
 
-  /** Duplicate-cluster canonicalization: given near-dup PAIRS, compute
-    * connected components and label every member with the minimum id of
-    * its cluster — the id to keep. Min-label propagation WITH pointer
-    * jumping: each round takes the min over (own label, neighbors' labels,
-    * label-of-label). The neighbor step moves a label one hop; the jump
-    * step (`lab → lab(lab)`, path halving from the union-find literature)
-    * lets labels traverse already-labelled chains in one round, so long
-    * chains converge in O(log diameter) rounds instead of O(diameter) —
-    * on a 100 TB corpus each round is a full shuffle, and halving the
-    * round count is the dominant lever. Lineage is truncated per round
-    * (`localCheckpoint`) so plans stay bounded; data never leaves the
-    * cluster, the driver only orchestrates rounds.
-    * Returns (id, canonical_id) for every id appearing in `pairs`. */
-  /** @param checkpointer how to truncate lineage each round. The default
-    *   `localCheckpoint` stores blocks on executors — fine in one
-    *   session; a long-lived 100 TB job should pass
-    *   `_.checkpoint()` (with `sparkContext.setCheckpointDir`) so rounds
-    *   survive executor loss. */
   /** Exact-substring duplicate detection via winnowing — the scalable form
     * of Lee et al. 2022's exact-substring dedup ("Deduplicating Training
     * Data Makes Language Models Better", which uses a suffix array on a
@@ -640,6 +622,25 @@ object Dedup {
       .where(col("n_shared_fps") >= minShared)
   }
 
+  /** Duplicate-cluster canonicalization: given near-dup PAIRS, compute
+    * connected components and label every member with the minimum id of
+    * its cluster — the id to keep. Min-label propagation WITH pointer
+    * jumping: each round takes the min over (own label, neighbors' labels,
+    * label-of-label). The neighbor step moves a label one hop; the jump
+    * step (`lab → lab(lab)`, path halving from the union-find literature)
+    * lets labels traverse already-labelled chains in one round, so long
+    * chains converge in O(log diameter) rounds instead of O(diameter) —
+    * on a 100 TB corpus each round is a full shuffle, and halving the
+    * round count is the dominant lever. Lineage is truncated per round
+    * (`localCheckpoint`) so plans stay bounded; data never leaves the
+    * cluster, the driver only orchestrates rounds.
+    * Returns (id, canonical_id) for every id appearing in `pairs`.
+    *
+    * @param checkpointer how to truncate lineage each round. The default
+    *   `localCheckpoint` stores blocks on executors — fine in one
+    *   session; a long-lived 100 TB job should pass
+    *   `_.checkpoint()` (with `sparkContext.setCheckpointDir`) so rounds
+    *   survive executor loss. */
   def canonicalize(
       pairs: DataFrame, maxIter: Int = 20,
       checkpointer: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.analysis.TypeCoercion
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.types._
@@ -72,27 +72,19 @@ object AsOfJoin {
   private def gapWithin(gap: Column, tol: Double, tt: DataType): Column =
     gap <= lit(tol).cast(tt)
 
-  /** @param left        event/probe side (all its columns are kept)
-    * @param right       state/quote side
-    * @param leftKey     equality key column on `left`
-    * @param rightKey    equality key column on `right`
-    * @param leftTime    epoch-comparable time column on `left`
-    * @param rightTime   epoch-comparable time column on `right`
-    * @param rightPayload right columns to attach (must not collide with
-    *                    left column names)
-    * @param rightTieBreak orders right rows sharing (key, time); the LAST
-    *                    by this ordering wins (deterministic results)
-    * @param tolerance   max allowed leftTime - rightTime gap (in the
-    *                    normalized time units — see [[gapWithin]]); the
-    *                    as-of winner is the CLOSEST candidate, so
-    *                    filtering it is exact, not a fallback search
-    */
-  def backward(
+  /** The shared prologue of [[backward]] and [[nearest]]: one union of
+    * both sides tagged with the equality key `__k`, the normalized time
+    * `__t` (widened to one type, also returned) and `__side` (right 0
+    * sorts before left 1 at equal time), each side null-padded to the
+    * other's columns, with the window ordering the union is scanned
+    * under (partitioned by key, ordered by time, side, then the tie
+    * columns, also returned). */
+  private def taggedUnion(
       left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTime: String, rightTime: String,
-      rightPayload: Seq[String], rightTieBreak: Seq[String] = Nil,
-      tolerance: Option[Double] = None): DataFrame = {
+      rightPayload: Seq[String], rightTieBreak: Seq[String])
+      : (DataFrame, WindowSpec, DataType, Seq[String]) = {
     require(rightPayload.nonEmpty, "asOf: need at least one right payload column")
     val collisions = rightPayload.toSet.intersect(left.columns.toSet)
     require(collisions.isEmpty, s"asOf: right payload collides with left columns: $collisions")
@@ -132,11 +124,36 @@ object AsOfJoin {
     val rPadded = left.columns.foldLeft(r)((df, c) =>
       df.withColumn(c, lit(null).cast(left.schema(c).dataType)))
 
-    val unioned = lPadded.unionByName(rPadded)
     val w = Window.partitionBy("__k")
       .orderBy((col("__t").asc +: col("__side").asc +: tieCols.map(col(_).asc)): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val carried = unioned.withColumn("__r", last(col("__r"), ignoreNulls = true).over(w))
+    (lPadded.unionByName(rPadded), w, tt, tieCols)
+  }
+
+  /** @param left        event/probe side (all its columns are kept)
+    * @param right       state/quote side
+    * @param leftKey     equality key column on `left`
+    * @param rightKey    equality key column on `right`
+    * @param leftTime    epoch-comparable time column on `left`
+    * @param rightTime   epoch-comparable time column on `right`
+    * @param rightPayload right columns to attach (must not collide with
+    *                    left column names)
+    * @param rightTieBreak orders right rows sharing (key, time); the LAST
+    *                    by this ordering wins (deterministic results)
+    * @param tolerance   max allowed leftTime - rightTime gap (in the
+    *                    normalized time units — see [[gapWithin]]); the
+    *                    as-of winner is the CLOSEST candidate, so
+    *                    filtering it is exact, not a fallback search
+    */
+  def backward(
+      left: DataFrame, right: DataFrame,
+      leftKey: String, rightKey: String,
+      leftTime: String, rightTime: String,
+      rightPayload: Seq[String], rightTieBreak: Seq[String] = Nil,
+      tolerance: Option[Double] = None): DataFrame = {
+    val (unioned, w, tt, tieCols) = taggedUnion(left, right, leftKey, rightKey,
+      leftTime, rightTime, rightPayload, rightTieBreak)
+    val carried = unioned.withColumn("__r", last(col("__r"), ignoreNulls = true)
+      .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
 
     val inTolerance = tolerance match {
       case None      => col("__r").isNotNull
@@ -294,41 +311,8 @@ object AsOfJoin {
       leftTime: String, rightTime: String,
       rightPayload: Seq[String], rightTieBreak: Seq[String] = Nil,
       tolerance: Option[Double] = None): DataFrame = {
-    require(rightPayload.nonEmpty, "asOf: need at least one right payload column")
-    val collisions = rightPayload.toSet.intersect(left.columns.toSet)
-    require(collisions.isEmpty, s"asOf: right payload collides with left columns: $collisions")
-
-    val rightTypes = right.schema
-    val tieCols = rightTieBreak.map(c => s"__tie_$c")
-    val (lKey, lt) = timeKey(left, leftTime)
-    val (rKey, rt) = timeKey(right, rightTime)
-    val tt = widen(lt, rt)
-    val payloadType = StructType(
-      rightPayload.map(c => rightTypes(c)) :+ StructField("__rt", tt))
-
-    val lPadded = rightTieBreak
-      .foldLeft(
-        left
-          .withColumn("__k", col(leftKey))
-          .withColumn("__t", lKey.cast(tt))
-          .withColumn("__side", lit(1))
-          .withColumn("__r", lit(null).cast(payloadType))) { (df, c) =>
-        df.withColumn(s"__tie_$c", lit(null).cast(rightTypes(c).dataType))
-      }
-    val r = right
-      .where(col(rightKey).isNotNull)
-      .select(
-        col(rightKey).as("__k") +:
-          rKey.cast(tt).as("__t") +:
-          lit(0).as("__side") +:
-          struct(rightPayload.map(col) :+ rKey.cast(tt).as("__rt"): _*).as("__r") +:
-          rightTieBreak.map(c => col(c).as(s"__tie_$c")): _*)
-    val rPadded = left.columns.foldLeft(r)((df, c) =>
-      df.withColumn(c, lit(null).cast(left.schema(c).dataType)))
-
-    val unioned = lPadded.unionByName(rPadded)
-    val w = Window.partitionBy("__k")
-      .orderBy((col("__t").asc +: col("__side").asc +: tieCols.map(col(_).asc)): _*)
+    val (unioned, w, tt, tieCols) = taggedUnion(left, right, leftKey, rightKey,
+      leftTime, rightTime, rightPayload, rightTieBreak)
     val back = last(col("__r"), ignoreNulls = true)
       .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
     val fwd = first(col("__r"), ignoreNulls = true)

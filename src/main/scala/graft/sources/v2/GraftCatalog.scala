@@ -244,7 +244,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
       dir.mkdirs()
       ShardFormat.writeManifest(dir.getPath, ShardFormat.Manifest(
-        schema, java.util.UUID.randomUUID().toString.take(8), Nil, spec,
+        schema, ShardFormat.newGeneration(), Nil, spec,
         version = 1L, createdAtMs = System.currentTimeMillis(),
         operation = "create", compression = compression,
         bloomColumns = bloomColumns, ndvColumns = ndvColumns))
@@ -422,7 +422,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
           "partition/sort column), RENAME COLUMN (manifest-only via field " +
           "ids), ALTER COLUMN TYPE widening (int->long, float->double)")
     }
-    ShardFormat.writeManifest(dir.getPath, m.copy(
+    ShardFormat.commitNext(dir.getPath, m, m.copy(
       schema = sch,
       droppedColumns = tomb,
       fieldIds = ids,
@@ -434,10 +434,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       zorderBy = zorder,
       bloomColumns = bloomC,
       ndvColumns = ndvC,
-      equalityDeletes = eqDel,
-      version = m.version + 1,
-      createdAtMs = System.currentTimeMillis(),
-      operation = "alter"))
+      equalityDeletes = eqDel), "alter", freshGeneration = false)
     new GraftShardTable(dir.getPath, sch)
     }
   }

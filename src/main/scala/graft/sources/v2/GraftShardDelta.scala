@@ -107,11 +107,7 @@ class GraftShardDeltaWrite(
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.toSeq.collect { case m: ShardDeltaCommitMessage => m }
-    val inserts = msgs.flatMap(_.inserts).filter(_.rows > 0)
-    msgs.flatMap(_.inserts).filter(_.rows == 0).foreach { fe =>
-      fe.bloom.foreach(b => new File(path, b).delete(): Unit)
-      new File(path, fe.name).delete()
-    }
+    val inserts = ShardFormat.dropEmpty(path, msgs.flatMap(_.inserts))
     // per-file ordinals merged across tasks (a post-scan shuffle may
     // scatter one file's matches over several writers)
     val newDeletes: Map[String, Seq[Long]] =
@@ -121,15 +117,7 @@ class GraftShardDeltaWrite(
       throw new IllegalStateException(
         "graftshard: merge-on-read commit without a configured scan"))
     ShardFormat.withCommitLock(path) {
-    val current = ShardFormat.readManifest(path).getOrElse(
-      throw new IllegalStateException(
-        s"graftshard: table at '$path' vanished during a merge-on-read operation"))
-    if (current.version != pinned.version || current.generation != pinned.generation)
-      throw new IllegalStateException(
-        s"graftshard: concurrent commit detected at '$path' — the merge-on-read " +
-          s"operation planned against manifest v${pinned.version} but found " +
-          s"v${current.version} at commit; re-run the statement (delta output " +
-          "is unreferenced and vacuum-reclaimable)")
+    val current = ShardFormat.readPinned(path, pinned, "merge-on-read", "delta")
     newDeletes.keys.foreach { f =>
       require(current.files.exists(_.name == f),
         s"graftshard: delete ordinals target unknown file '$f'")
@@ -155,23 +143,16 @@ class GraftShardDeltaWrite(
     // inserts degrade sortedBy honestly (new unsorted runs) — a
     // deletes-only commit preserves it (skipping keeps order)
     val sortedBy = if (inserts.isEmpty) current.sortedBy else None
-    ShardFormat.writeManifest(path, current.copy(
-      files = updated ++ inserts,
-      generation = java.util.UUID.randomUUID().toString.take(8),
-      version = current.version + 1,
-      createdAtMs = System.currentTimeMillis(),
-      sortedBy = sortedBy,
-      operation = "mor"))
+    ShardFormat.commitNext(path, current,
+      current.copy(files = updated ++ inserts, sortedBy = sortedBy),
+      "mor", freshGeneration = true)
     }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
       case m: ShardDeltaCommitMessage =>
-        m.inserts.foreach { fe =>
-          fe.bloom.foreach(b => new File(path, b).delete(): Unit)
-          new File(path, fe.name).delete(): Unit
-        }
+        m.inserts.foreach(fe => ShardFormat.discard(path, fe.name))
       case _ => ()
     }
 }

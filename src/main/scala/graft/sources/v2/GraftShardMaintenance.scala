@@ -254,11 +254,7 @@ object GraftShardMaintenance {
           GraftShardMaintenance.streamGroup(dir, members, schema, sortIdx, sortType,
             resolve, eqRefs, zIdx)
             .foreach(w.write)
-          val (bytes, rows, stats, allNull) = w.finish()
-          ShardFormat.FileEntry(name, bytes, rows, stats, allNull, p,
-            ndv = w.ndvSketches, kll = w.kllSketches,
-            sums = w.sums, strStats = w.strStats, bloom = w.bloomSidecar,
-            seq = members.map(_._3).max)
+          w.finish(p).entry.copy(seq = members.map(_._3).max)
         } catch { case t: Throwable => w.abort(); throw t }
       }.collect()
     ShardFormat.withCommitLock(dir) {
@@ -266,10 +262,7 @@ object GraftShardMaintenance {
       throw new IllegalStateException(s"graftshard: table at '$dir' vanished during compaction"))
     val replaced = groups.flatMap(_._2.map(_._1)).toSet
     validateCommit(m, current, replaced).foreach { reason =>
-      newEntries.foreach { fe =>
-        fe.bloom.foreach(b => new File(dir, b).delete(): Unit)
-        new File(dir, fe.name).delete()
-      }
+      newEntries.foreach(fe => ShardFormat.discard(dir, fe.name))
       throw new IllegalStateException(
         s"graftshard: concurrent commit detected at '$dir' — compaction planned " +
           s"against manifest v${m.version} but $reason " +
@@ -280,13 +273,9 @@ object GraftShardMaintenance {
     // an equality delete RETIRES once no remaining file predates it —
     // its sidecar becomes vacuum garbage and the read-side tax is gone
     val liveEq = current.equalityDeletes.filter(d => newFiles.exists(_.seq < d.seq))
-    ShardFormat.writeManifest(dir, current.copy(
-      files = newFiles,
-      generation = java.util.UUID.randomUUID().toString.take(8),
-      version = current.version + 1,
-      createdAtMs = System.currentTimeMillis(),
-      operation = "compact",
-      equalityDeletes = liveEq))
+    ShardFormat.commitNext(dir, current,
+      current.copy(files = newFiles, equalityDeletes = liveEq),
+      "compact", freshGeneration = true)
     CompactReport(groups.size, replaced.toSeq.sorted, newEntries.map(_.name).toSeq.sorted)
     }
   }
@@ -506,13 +495,9 @@ object GraftShardMaintenance {
     val cleared = m.files.count(_.partition.isDefined)
     val files = m.files.map(fe =>
       if (fe.partition.isDefined) fe.copy(partition = None) else fe)
-    ShardFormat.writeManifest(dir, m.copy(
-      files = files,
-      partitioning = spec,
-      version = m.version + 1,
-      createdAtMs = System.currentTimeMillis(),
-      operation = "alter"))
-    SetPartitioningReport(spec, cleared, m.version + 1)
+    val written = ShardFormat.commitNext(dir, m,
+      m.copy(files = files, partitioning = spec), "alter", freshGeneration = false)
+    SetPartitioningReport(spec, cleared, written.version)
     }
 
   final case class AnalyzeReport(
@@ -651,7 +636,7 @@ object GraftShardMaintenance {
               val built = colNames.zip(blm).flatMap { case (c, acc) =>
                 acc.build(ShardFormat.BloomFpp).map(c -> _)
               }
-              val side = new File(dir, name + ".bloom")
+              val side = new File(dir, ShardFormat.bloomSidecarOf(name))
               val existing =
                 if (side.exists()) ShardFormat.readBloomSidecar(side).toSeq
                 else Nil
@@ -683,15 +668,13 @@ object GraftShardMaintenance {
             bloom = sidecar.orElse(fe.bloom))
         }
       }
-      ShardFormat.writeManifest(dir, m.copy(
+      val written = ShardFormat.commitNext(dir, m, m.copy(
         files = updated,
         ndvColumns = (m.ndvColumns ++ colNames).distinct,
         bloomColumns =
-          if (blooms) (m.bloomColumns ++ colNames).distinct else m.bloomColumns,
-        version = m.version + 1,
-        createdAtMs = System.currentTimeMillis(),
-        operation = "alter"))
-      AnalyzeReport(results.size, colNames, m.version + 1,
+          if (blooms) (m.bloomColumns ++ colNames).distinct else m.bloomColumns),
+        "alter", freshGeneration = false)
+      AnalyzeReport(results.size, colNames, written.version,
         bloomFiles = results.values.count(_._3.isDefined))
     }
   }
@@ -779,12 +762,9 @@ object GraftShardMaintenance {
     require(missing.isEmpty,
       s"graftshard: cannot roll back '$dir' to v$toVersion — referenced " +
         s"files are missing from disk [${missing.sorted.mkString(", ")}]")
-    ShardFormat.writeManifest(dir, target.copy(
-      version = current.version + 1,
-      createdAtMs = System.currentTimeMillis(),
-      generation = java.util.UUID.randomUUID().toString.take(8),
-      operation = "rollback",
-      streamCommits = current.streamCommits))
-    RollbackReport(current.version, toVersion, current.version + 1, target.files.size)
+    val written = ShardFormat.commitNext(dir, current,
+      target.copy(streamCommits = current.streamCommits), "rollback",
+      freshGeneration = true)
+    RollbackReport(current.version, toVersion, written.version, target.files.size)
     }
 }

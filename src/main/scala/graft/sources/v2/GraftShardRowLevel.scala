@@ -245,30 +245,15 @@ class GraftShardCowWrite(
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val all = messages.toSeq.collect { case m: ShardCommitMessage => m.files }.flatten
-    val committed = all.filter(_.rows > 0)
-    all.filter(_.rows == 0).foreach { fe =>
-      fe.bloom.foreach(b => new File(path, b).delete(): Unit)
-      new File(path, fe.name).delete()
-    }
+    val committed = ShardFormat.dropEmpty(path,
+      messages.toSeq.collect { case m: ShardCommitMessage => m.files }.flatten)
     val (pinned, scanned) = op.configured.getOrElse(
       throw new IllegalStateException(
         "graftshard: row-level commit without a configured scan — the " +
           "copy-on-write write cannot know which files it replaces"))
     ShardFormat.withCommitLock(path) {
-    val current = ShardFormat.readManifest(path).getOrElse(
-      throw new IllegalStateException(
-        s"graftshard: table at '$path' vanished during a row-level operation"))
-    // write-write conflict detection: the rewrite planned against one
-    // manifest version; committing over a different one would silently
-    // exclude a concurrent append's rows from the rewrite (or resurrect
-    // concurrently-deleted files). Fail loudly — the lake answer.
-    if (current.version != pinned.version || current.generation != pinned.generation)
-      throw new IllegalStateException(
-        s"graftshard: concurrent commit detected at '$path' — the row-level " +
-          s"operation planned against manifest v${pinned.version} but found " +
-          s"v${current.version} at commit; re-run the statement (rewrite " +
-          "output is unreferenced and vacuum-reclaimable)")
+    // write-write conflict detection: fail loudly — the lake answer
+    val current = ShardFormat.readPinned(path, pinned, "row-level", "rewrite")
     val scannedSet = scanned.toSet
     val kept = current.files.filterNot(fe => scannedSet.contains(fe.name))
     // sortedBy survives when this rewrite declared the same ordering
@@ -277,21 +262,17 @@ class GraftShardCowWrite(
     val sortedBy: Option[String] =
       if (committed.isEmpty) current.sortedBy
       else sortCol.filter(current.sortedBy.contains)
-    ShardFormat.writeManifest(path, current.copy(
-      files = kept ++ committed,
-      // scanned entries vanish mid-list: streaming prefix offsets die
-      generation = java.util.UUID.randomUUID().toString.take(8),
-      version = current.version + 1,
-      createdAtMs = System.currentTimeMillis(),
-      sortedBy = sortedBy,
-      operation = "cow"))
+    // scanned entries vanish mid-list: streaming prefix offsets die
+    ShardFormat.commitNext(path, current,
+      current.copy(files = kept ++ committed, sortedBy = sortedBy),
+      "cow", freshGeneration = true)
     }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
       case m: ShardCommitMessage =>
-        m.files.foreach(fe => new File(path, fe.name).delete(): Unit)
+        m.files.foreach(fe => ShardFormat.discard(path, fe.name))
       case _ => ()
     }
 }

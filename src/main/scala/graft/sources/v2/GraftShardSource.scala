@@ -233,12 +233,8 @@ class GraftShardTable(
             "deletes where every shard file is entirely in or entirely out " +
             "(partition-aligned predicates) are supported"))
     val kept = m.files.filterNot(fe => filters.forall(ShardFilters.mustMatchAll(_, fe)))
-    ShardFormat.writeManifest(path, m.copy(
-      files = kept,
-      generation = java.util.UUID.randomUUID().toString.take(8),
-      version = m.version + 1,
-      createdAtMs = System.currentTimeMillis(),
-      operation = "delete-metadata"))
+    ShardFormat.commitNext(path, m, m.copy(files = kept), "delete-metadata",
+      freshGeneration = true)
     }
 
   /** Row provenance without a stored column: `SELECT _shard_file, ...`

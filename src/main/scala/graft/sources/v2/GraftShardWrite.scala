@@ -449,15 +449,7 @@ class GraftShardStreamingWrite(
       .exists(_.streamCommits.get(queryId).exists(_ >= epochId))
     if (replayed) {
       // recovery re-ran an epoch the table already holds: drop its output
-      messages.foreach {
-        case m: ShardCommitMessage =>
-          m.eqKeys.foreach { case (n, _) => new java.io.File(path, n).delete(): Unit }
-          m.files.foreach { fe =>
-            fe.bloom.foreach(b => new java.io.File(path, b).delete(): Unit)
-            new java.io.File(path, fe.name).delete(): Unit
-          }
-        case _ => ()
-      }
+      batch.abort(messages)
     } else batch.commitWith(messages, Some(queryId -> epochId))
   }
 
@@ -531,15 +523,8 @@ class GraftShardBatchWrite(
       streamEpoch: Option[(String, Long)]): Unit =
     ShardFormat.withCommitLock(path) {
     val msgs = messages.toSeq.collect { case m: ShardCommitMessage => m }
-    val all = msgs.flatMap(_.files)
     val eqSidecars = msgs.flatMap(_.eqKeys)
-    val committed = all.filter(_.rows > 0)
-    // empty-partition shards carry no information — drop their files
-    // (and any sidecar; an empty file never builds one, but stay safe)
-    all.filter(_.rows == 0).foreach { fe =>
-      fe.bloom.foreach(b => new File(path, b).delete(): Unit)
-      new File(path, fe.name).delete()
-    }
+    val committed = ShardFormat.dropEmpty(path, msgs.flatMap(_.files))
     // generation: fresh whenever existing entries are replaced (truncate
     // or REPLACE WHERE — streaming prefix offsets die with them), carried
     // on pure appends. The time-travel version counts COMMITS and
@@ -598,17 +583,17 @@ class GraftShardBatchWrite(
       val gen =
         if (newParts.isEmpty)
           current.map(_.generation).filter(_.nonEmpty)
-            .getOrElse(java.util.UUID.randomUUID().toString.take(8))
-        else java.util.UUID.randomUUID().toString.take(8)
+            .getOrElse(ShardFormat.newGeneration())
+        else ShardFormat.newGeneration()
       (cur.filterNot(fe => newParts.contains(fe.partition.get)), gen)
     } else replace match {
       case None =>
         (current.map(_.files).getOrElse(Nil),
-          if (isUpsert) java.util.UUID.randomUUID().toString.take(8)
+          if (isUpsert) ShardFormat.newGeneration()
           else current.map(_.generation).filter(_.nonEmpty)
-            .getOrElse(java.util.UUID.randomUUID().toString.take(8)))
+            .getOrElse(ShardFormat.newGeneration()))
       case Some(_) if isTruncate =>
-        (Nil, java.util.UUID.randomUUID().toString.take(8))
+        (Nil, ShardFormat.newGeneration())
       case Some(fs) =>
         val files = current.map(_.files).getOrElse(Nil)
         files.foreach { fe =>
@@ -642,7 +627,7 @@ class GraftShardBatchWrite(
           }
         }
         (files.filterNot(fe => fs.forall(ShardFilters.mustMatchAll(_, fe))),
-          java.util.UUID.randomUUID().toString.take(8))
+          ShardFormat.newGeneration())
     }
     // whenever PRIOR files survive into the new manifest, the published
     // schema must stay at least as nullable as before: the plan-time
@@ -767,12 +752,7 @@ class GraftShardBatchWrite(
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case m: ShardCommitMessage =>
-        m.eqKeys.foreach { case (n, _) => new File(path, n).delete(): Unit }
-        m.files.foreach { fe =>
-          fe.bloom.foreach(b => new File(path, b).delete(): Unit)
-          new File(path, fe.name).delete(): Unit
-        }
+      case m: ShardCommitMessage => m.files.foreach(fe => ShardFormat.discard(path, fe.name))
       case _ => ()
     }
 }
@@ -821,11 +801,8 @@ class GraftShardDataWriter(
   override def write(record: InternalRow): Unit = writer.write(record)
 
   override def commit(): WriterCommitMessage = {
-    val (bytes, rows, stats, allNull) = writer.finish()
-    ShardCommitMessage(Seq(ShardFormat.FileEntry(name, bytes, rows, stats, allNull,
-      sums = writer.sums, strStats = writer.strStats, bloom = writer.bloomSidecar,
-      ndv = writer.ndvSketches, kll = writer.kllSketches)),
-      eqKeys = writer.eqKeySidecar.toSeq)
+    val done = writer.finish()
+    ShardCommitMessage(Seq(done.entry), eqKeys = done.eqKeys.toSeq)
   }
 
   override def abort(): Unit = writer.abort()
@@ -879,23 +856,18 @@ class GraftShardKeyedDataWriter(
   }
   private val attempt = java.util.UUID.randomUUID().toString.take(8)
   private val writers =
-    scala.collection.mutable.LinkedHashMap.empty[Long, (String, ShardFormat.ShardWriter)]
+    scala.collection.mutable.LinkedHashMap.empty[Long, ShardFormat.ShardWriter]
   // files already finished by cap rotation — part of the commit message
-  private val rotated = Seq.newBuilder[ShardFormat.FileEntry]
-  private val rotatedNames = scala.collection.mutable.ArrayBuffer.empty[String]
+  private val rotated = scala.collection.mutable.ArrayBuffer.empty[ShardFormat.FileEntry]
   // distinct names across rotations of the same key
   private var fileSeq = 0
 
   private val eqSidecars = Seq.newBuilder[(String, Long)]
 
-  private def finishInto(key: Long, name: String, w: ShardFormat.ShardWriter): Unit = {
-    val (bytes, rows, stats, allNull) = w.finish()
-    rotated += ShardFormat.FileEntry(name, bytes, rows, stats, allNull, Some(key),
-      sums = w.sums, strStats = w.strStats, bloom = w.bloomSidecar,
-      ndv = w.ndvSketches, kll = w.kllSketches)
-    rotatedNames += name
-    w.bloomSidecar.foreach(rotatedNames += _)
-    w.eqKeySidecar.foreach { k => eqSidecars += k; rotatedNames += k._1 }
+  private def finishInto(key: Long, w: ShardFormat.ShardWriter): Unit = {
+    val done = w.finish(Some(key))
+    rotated += done.entry
+    done.eqKeys.foreach(eqSidecars += _)
   }
 
   override def write(record: InternalRow): Unit = {
@@ -909,39 +881,39 @@ class GraftShardKeyedDataWriter(
     }
     val key = ShardFormat.partitionValueOf(spec, raw)
     val w = writers.get(key) match {
-      case Some(entry) =>
+      case Some(open) =>
         // approximate LRU, paid only at the cap: below it, insertion
         // order stands in for recency (no per-row map churn)
         if (writers.size >= maxOpenWriters) {
-          writers.remove(key); writers.put(key, entry)
+          writers.remove(key); writers.put(key, open)
         }
-        entry._2
+        open
       case None =>
         if (writers.size >= maxOpenWriters) {
-          val (ek, (ename, ew)) = writers.head
+          val (ek, ew) = writers.head
           writers.remove(ek)
-          finishInto(ek, ename, ew)
+          finishInto(ek, ew)
         }
         fileSeq += 1
         val name = f"part-$partitionId%05d-$taskId-$attempt-k$key-$fileSeq.shard"
         val nw = new ShardFormat.ShardWriter(new File(path, name), schema, codec,
           fieldIds, bloomCols, upsertKey, ndvCols)
-        writers.put(key, (name, nw))
+        writers.put(key, nw)
         nw
     }
     w.write(record)
   }
 
   override def commit(): WriterCommitMessage = {
-    writers.foreach { case (key, (name, w)) => finishInto(key, name, w) }
+    writers.foreach { case (key, w) => finishInto(key, w) }
     writers.clear()
-    ShardCommitMessage(rotated.result(), eqKeys = eqSidecars.result())
+    ShardCommitMessage(rotated.toSeq, eqKeys = eqSidecars.result())
   }
 
   override def abort(): Unit = {
-    writers.values.foreach(_._2.abort())
-    // rotated files are already closed — delete them by name
-    rotatedNames.foreach(n => new File(path, n).delete(): Unit)
+    writers.values.foreach(_.abort())
+    // rotated files are already closed — discard them by name
+    rotated.foreach(fe => ShardFormat.discard(path, fe.name))
   }
   override def close(): Unit = ()
 }

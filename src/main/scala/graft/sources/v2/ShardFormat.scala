@@ -1678,9 +1678,10 @@ object ShardFormat {
     })
     private val stringCol: Array[Boolean] = fields.map(_.dataType == StringType)
 
-    /** Returns (bytes, rows, presentStats, allNullStats); per-column
-      * sums are exposed by [[sums]] after this call. */
-    def finish(): (Long, Long, Map[String, (Long, Long, Long)], Map[String, Long]) = {
+    /** Closes the file, writes its sidecars and returns its manifest
+      * entry (`partition` is the key every row carries on a keyed
+      * table) with the upsert-key sidecar, if any. */
+    def finish(partition: Option[Long] = None): WrittenShard = {
       flushGroup()
       out.close()
       val present = Map.newBuilder[String, (Long, Long, Long)]
@@ -1706,61 +1707,64 @@ object ShardFormat {
         }
         i += 1
       }
-      finishedSums = sm.result()
-      finishedStrStats = ss.result()
+      // one bloom sidecar holds every configured column's filter
+      // ([[FileEntry.bloom]]); absent when no column produced one
       val built = fields.indices.flatMap { j =>
         Option(blooms(j)).flatMap(_.build(BloomFpp)).map(fields(j).name -> _)
       }
-      if (built.nonEmpty) {
-        val side = new File(file.getParentFile, file.getName + ".bloom")
-        writeBloomSidecar(side, built)
-        finishedBloom = Some(side.getName)
+      val bloom = if (built.isEmpty) None else {
+        val side = bloomSidecarOf(file.getName)
+        writeBloomSidecar(new File(file.getParentFile, side), built)
+        Some(side)
       }
-      fields.indices.find(eqKeys(_) != null).foreach { j =>
-        val side = new File(file.getParentFile, file.getName + ".eqkeys")
-        eqKeys(j).write(side).foreach { count =>
-          finishedEqKeys = Some((side.getName, count))
-        }
+      // the upsert-key sidecar and its distinct-key count: the commit's
+      // equality delete against older files ([[Manifest.equalityDeletes]])
+      val eqKeySidecar = fields.indices.find(eqKeys(_) != null).flatMap { j =>
+        val side = eqKeysSidecarOf(file.getName)
+        eqKeys(j).write(new File(file.getParentFile, side)).map(side -> _)
       }
-      (file.length(), rowCount, present.result(), allNull.result())
+      WrittenShard(
+        FileEntry(file.getName, file.length(), rowCount, present.result(), allNull.result(),
+          partition, sums = sm.result(), strStats = ss.result(), bloom = bloom,
+          ndv = fields.indices.collect {
+            case j if ndvs(j) != null => fields(j).name -> ndvs(j).serialize()
+          }.toMap,
+          kll = fields.indices.collect {
+            case j if klls(j) != null => fields(j).name -> klls(j).serialize()
+          }.toMap),
+        eqKeySidecar)
     }
 
-    private var finishedSums: Map[String, Long] = Map.empty
-    /** Valid after [[finish]]: exact per-column sums for SUM pushdown. */
-    def sums: Map[String, Long] = finishedSums
-    private var finishedStrStats: Map[String, (String, String, Long)] = Map.empty
-    /** Valid after [[finish]]: exact string min/max/nulls (cap-bounded). */
-    def strStats: Map[String, (String, String, Long)] = finishedStrStats
-    private var finishedBloom: Option[String] = None
-    /** Valid after [[finish]]: this file's bloom-sidecar name, when any
-      * configured column produced a filter ([[FileEntry.bloom]]). */
-    def bloomSidecar: Option[String] = finishedBloom
-    private var finishedEqKeys: Option[(String, Long)] = None
-    /** Valid after [[finish]]: this file's upsert-key sidecar name and
-      * distinct-key count — the commit's equality delete against older
-      * files ([[Manifest.equalityDeletes]]). */
-    def eqKeySidecar: Option[(String, Long)] = finishedEqKeys
-
-    /** Per-column NDV sketches for the manifest entry
-      * ([[FileEntry.ndv]]) — callable any time (the sketches live in
-      * memory, not in a sidecar). */
-    def ndvSketches: Map[String, String] =
-      fields.indices.collect {
-        case j if ndvs(j) != null => fields(j).name -> ndvs(j).serialize()
-      }.toMap
-
-    /** Per-column KLL quantile sketches ([[FileEntry.kll]]). */
-    def kllSketches: Map[String, String] =
-      fields.indices.collect {
-        case j if klls(j) != null => fields(j).name -> klls(j).serialize()
-      }.toMap
-
+    /** Closes and deletes the file and any sidecar it wrote. */
     def abort(): Unit = {
       out.close()
-      finishedBloom.foreach(b => new File(file.getParentFile, b).delete(): Unit)
-      finishedEqKeys.foreach(k => new File(file.getParentFile, k._1).delete(): Unit)
-      file.delete(): Unit
+      discard(file.getParent, file.getName)
     }
+  }
+
+  /** A finished [[ShardWriter]]: its manifest entry and, on an upsert
+    * write, its key sidecar's (name, distinct-key count). */
+  final case class WrittenShard(entry: FileEntry, eqKeys: Option[(String, Long)])
+
+  /** The written entries worth committing: empty-partition shards carry
+    * no information, so their files are discarded here. */
+  def dropEmpty(dir: String, written: Seq[FileEntry]): Seq[FileEntry] = {
+    val (kept, empty) = written.partition(_.rows > 0)
+    empty.foreach(fe => discard(dir, fe.name))
+    kept
+  }
+
+  def bloomSidecarOf(shard: String): String = shard + ".bloom"
+  def eqKeysSidecarOf(shard: String): String = shard + ".eqkeys"
+
+  /** Deletes a written, never-committed shard file together with its
+    * bloom and upsert-key sidecars (a missing one is a no-op) — how
+    * every empty-file drop, conflict refusal, replay drop and abort
+    * removes write output. */
+  def discard(dir: String, shard: String): Unit = {
+    new File(dir, bloomSidecarOf(shard)).delete()
+    new File(dir, eqKeysSidecarOf(shard)).delete()
+    new File(dir, shard).delete(): Unit
   }
 
   /** Columnar batch consumer for [[ShardReader.nextBatch]]: `slot` is
@@ -3151,26 +3155,6 @@ object ShardFormat {
     Some(parseRootMeta(root))
   }
 
-  /** Every root-resident manifest field EXCEPT the entry list (files =
-    * Nil, pagedSegments = Nil) — shared by the materializing read and
-    * the streaming scan read so the two can never drift. */
-  private def parseRootMeta(root: com.fasterxml.jackson.databind.JsonNode): Manifest = {
-    val schema = DataType.fromJson(root.get("schema").asText()).asInstanceOf[StructType]
-    val generation =
-      if (root.has("generation")) root.get("generation").asText() else ""
-    val partitioning: Option[PartSpec] =
-      if (root.has("partitionBucket")) {
-        val b = root.get("partitionBucket")
-        Some(BucketPart(b.get("numBuckets").asInt(), b.get("column").asText()))
-      } else if (root.has("partitionTransform")) {
-        val t = root.get("partitionTransform")
-        Some(TransformPart(t.get("unit").asText(), t.get("column").asText()))
-      } else if (root.has("partitionColumn"))
-        Some(IdentityPart(root.get("partitionColumn").asText()))
-      else None
-    parseRootRest(root, schema, generation, partitioning)
-  }
-
   private def readManifestFile(
       f: File, segKeep: FileEntry => Boolean = null): Option[Manifest] = {
     if (!f.isFile) return None
@@ -3183,19 +3167,7 @@ object ShardFormat {
   private def readManifestParsed(
       f: File, root: com.fasterxml.jackson.databind.JsonNode,
       segKeep: FileEntry => Boolean = null): Option[Manifest] = {
-    val schema = DataType.fromJson(root.get("schema").asText()).asInstanceOf[StructType]
-    val generation =
-      if (root.has("generation")) root.get("generation").asText() else ""
-    val partitioning: Option[PartSpec] =
-      if (root.has("partitionBucket")) {
-        val b = root.get("partitionBucket")
-        Some(BucketPart(b.get("numBuckets").asInt(), b.get("column").asText()))
-      } else if (root.has("partitionTransform")) {
-        val t = root.get("partitionTransform")
-        Some(TransformPart(t.get("unit").asText(), t.get("column").asText()))
-      } else if (root.has("partitionColumn"))
-        Some(IdentityPart(root.get("partitionColumn").asText()))
-      else None
+    val meta = parseRootMeta(root)
     // inline `files` array (small tables) or `fileSegments` (paged:
     // the root lists immutable segment files in order — the full entry
     // list is their concatenation, and each segment's provenance is
@@ -3228,15 +3200,26 @@ object ShardFormat {
         val all = segs.result()
         (all.flatMap(_.entries), all)
       } else (readEntries(root.get("files")), Nil)
-    Some(parseRootRest(root, schema, generation, partitioning)
-      .copy(files = files, pagedSegments = paged))
+    Some(meta.copy(files = files, pagedSegments = paged))
   }
 
-  private def parseRootRest(
-      root: com.fasterxml.jackson.databind.JsonNode,
-      schema: StructType,
-      generation: String,
-      partitioning: Option[PartSpec]): Manifest = {
+  /** Every root-resident manifest field EXCEPT the entry list (files =
+    * Nil, pagedSegments = Nil) — shared by the materializing read and
+    * the streaming scan read so the two can never drift. */
+  private def parseRootMeta(root: com.fasterxml.jackson.databind.JsonNode): Manifest = {
+    val schema = DataType.fromJson(root.get("schema").asText()).asInstanceOf[StructType]
+    val generation =
+      if (root.has("generation")) root.get("generation").asText() else ""
+    val partitioning: Option[PartSpec] =
+      if (root.has("partitionBucket")) {
+        val b = root.get("partitionBucket")
+        Some(BucketPart(b.get("numBuckets").asInt(), b.get("column").asText()))
+      } else if (root.has("partitionTransform")) {
+        val t = root.get("partitionTransform")
+        Some(TransformPart(t.get("unit").asText(), t.get("column").asText()))
+      } else if (root.has("partitionColumn"))
+        Some(IdentityPart(root.get("partitionColumn").asText()))
+      else None
     val version = if (root.has("manifestVersion")) root.get("manifestVersion").asLong() else 0L
     val createdAt = if (root.has("createdAtMs")) root.get("createdAtMs").asLong() else 0L
     val sortedBy = if (root.has("sortedBy")) Some(root.get("sortedBy").asText()) else None
@@ -3365,6 +3348,48 @@ object ShardFormat {
     * .expireSnapshots]] retires it. */
   def writeManifest(dir: String, m: Manifest): Unit =
     writeManifestImpl(dir, m, branch = None)
+
+  /** A fresh table generation: streaming prefix offsets taken under any
+    * other generation are refused. */
+  def newGeneration(): String = java.util.UUID.randomUUID().toString.take(8)
+
+  /** The one step that mints a live table version: `next`, the caller's
+    * edit of `read` (the manifest it read under the commit lock), is
+    * published as version `read.version + 1`, stamped now and tagged
+    * `operation`. `freshGeneration` turns the generation over (entries
+    * vanished, or changed content under the same names, so streaming
+    * prefix offsets must die loudly); otherwise `read`'s carries.
+    * Returns the manifest written. The batch write path mints its own
+    * (staged chains pin their version — [[GraftShardBatchWrite]]). */
+  def commitNext(dir: String, read: Manifest, next: Manifest, operation: String,
+      freshGeneration: Boolean): Manifest = {
+    val m = next.copy(
+      version = read.version + 1,
+      createdAtMs = System.currentTimeMillis(),
+      generation = if (freshGeneration) newGeneration() else read.generation,
+      operation = operation)
+    writeManifest(dir, m)
+    m
+  }
+
+  /** The live manifest a row-level commit planned against `pinned`
+    * (read under the commit lock), refusing when any commit landed in
+    * between: committing over another version would silently exclude a
+    * concurrent append's rows from the rewrite, or resurrect
+    * concurrently deleted files. `operation` and `output` name the
+    * statement and its written files in the error. */
+  def readPinned(dir: String, pinned: Manifest, operation: String, output: String): Manifest = {
+    val current = readManifest(dir).getOrElse(
+      throw new IllegalStateException(
+        s"graftshard: table at '$dir' vanished during a $operation operation"))
+    if (current.version != pinned.version || current.generation != pinned.generation)
+      throw new IllegalStateException(
+        s"graftshard: concurrent commit detected at '$dir' — the $operation " +
+          s"operation planned against manifest v${pinned.version} but found " +
+          s"v${current.version} at commit; re-run the statement ($output " +
+          "output is unreferenced and vacuum-reclaimable)")
+    current
+  }
 
   /** Publishes `m` as BRANCH `name` — the staged (non-live) half of
     * write-audit-publish. No version snapshot, no pointer move: readers

@@ -42,9 +42,7 @@ object CommitStressChild {
       (0 until 10).foreach { i =>
         w.write(new GenericInternalRow(Array[Any](base + i, base + i)))
       }
-      val (bytes, rows, stats, allNull) = w.finish()
-      val fe = ShardFormat.FileEntry(name, bytes, rows, stats, allNull,
-        seq = cur.version + 1)
+      val fe = w.finish().entry.copy(seq = cur.version + 1)
       ShardFormat.writeManifest(dir, cur.copy(
         version = cur.version + 1,
         files = cur.files :+ fe,
@@ -82,13 +80,12 @@ object CommitStressChild {
         val w = new ShardFormat.ShardWriter(new File(dir, name), schema,
           fieldIds = cur.fieldIds.toArray)
         w.write(new GenericInternalRow(Array[Any](999999L, 999999L)))
-        val (bytes, rows, stats, allNull) = w.finish()
+        val fe = w.finish().entry.copy(seq = cur.version + 1)
         println("HOLDING"); Console.flush()
         Thread.sleep(pauseMs) // the stop-the-world stand-in
         ShardFormat.writeManifest(dir, cur.copy(
           version = cur.version + 1,
-          files = cur.files :+ ShardFormat.FileEntry(name, bytes, rows, stats,
-            allNull, seq = cur.version + 1),
+          files = cur.files :+ fe,
           createdAtMs = System.currentTimeMillis(),
           operation = "append"))
         println("PUBLISHED")
@@ -111,15 +108,14 @@ object CommitStressChild {
         w.write(new GenericInternalRow(
           Array[Any](500000L + id * 100L + i, id.toLong)))
       }
-      val (bytes, rows, stats, allNull) = w.finish()
+      val fe = w.finish().entry.copy(seq = cur.version + 1)
       println("READY"); Console.flush()
       val marker = new File(dir, "cas-race-go")
       while (!marker.isFile) Thread.sleep(5)
       try {
         ShardFormat.writeManifest(dir, cur.copy(
           version = cur.version + 1,
-          files = cur.files :+ ShardFormat.FileEntry(name, bytes, rows, stats,
-            allNull, seq = cur.version + 1),
+          files = cur.files :+ fe,
           createdAtMs = System.currentTimeMillis(),
           operation = "append"))
         println("WON")

@@ -235,11 +235,11 @@ class GraftShardColumnarSpec extends AnyFunSuite {
     val invalid = UTF8String.fromBytes(Array(0xF0.toByte))
     w.write(new GenericInternalRow(Array[Any](invalid, UTF8String.fromString("aa"))))
     w.write(new GenericInternalRow(Array[Any](UTF8String.fromString("ok"), UTF8String.fromString("zz"))))
-    val (_, rows, _, _) = w.finish()
-    assert(rows == 2L)
+    val fe = w.finish().entry
+    assert(fe.rows == 2L)
     // the poisoned column claims nothing; the clean column keeps exact bounds
-    assert(!w.strStats.contains("bad"), s"strStats must drop non-UTF-8 bounds: ${w.strStats}")
-    assert(w.strStats.get("good").map(s => (s._1, s._2)) == Some(("aa", "zz")))
+    assert(!fe.strStats.contains("bad"), s"strStats must drop non-UTF-8 bounds: ${fe.strStats}")
+    assert(fe.strStats.get("good").map(s => (s._1, s._2)) == Some(("aa", "zz")))
     // the payload itself is byte-exact either way
     val r = new ShardFormat.ShardReader(f, schema, Array(0, 1))
     val vals = new Array[Any](2)

@@ -51,6 +51,7 @@ class GraftShardMergeOnReadSpec extends AnyFunSuite {
     assert(after.version == before.version + 1)
     assert(after.generation != before.generation,
       "visible rows changed under the same names: streams must die loudly")
+    assert(after.operation == "mor")
     assert(after.files.map(_.name).toSet == before.files.map(_.name).toSet)
     assert(after.files.forall(fe => fe.deletes.isDefined && fe.deletedRows == 5),
       s"each range file holds 5 matching ids: ${after.files}")

@@ -256,6 +256,8 @@ class GraftShardNdvSpec extends AnyFunSuite {
     val after = ShardFormat.readManifest(dir).get
     // metadata-only: the data files are untouched, same names
     assert(after.files.map(_.name).toSet == fileNames)
+    assert(after.operation == "alter" && after.generation == before.generation,
+      "analyze changes no row: an alter commit that keeps streaming offsets")
     assert(after.ndvColumns.toSet == Set("id", "user", "amt"))
     assert(after.files.forall(fe => fe.ndv.contains("id") &&
       fe.ndv.contains("user") && fe.ndv.contains("amt")))

@@ -186,4 +186,21 @@ class GraftShardRowLevelSpec extends AnyFunSuite {
     assert(e.getMessage.contains("snapshot"), e.getMessage)
     assert(spark.table("rlcat.snap.t").count() == 20)
   }
+
+  test("copy-on-write abort deletes the written files and their bloom sidecars") {
+    val dir = Files.createTempDirectory("graft_rowlevel_abort").toString
+    spark.range(0, 20).select(col("id"), (col("id") * 3L).as("v"))
+      .coalesce(1).write.format("graftshard").mode("overwrite")
+      .option("bloomColumns", "id").save(dir)
+    val m = ShardFormat.readManifest(dir).get
+    val fe = m.files.head
+    val bloom = new File(dir, fe.bloom.getOrElse(fail("the write must build a bloom sidecar")))
+    assert(bloom.isFile)
+    val op = new graft.sources.v2.GraftShardRowLevelOperation(dir, m.schema,
+      org.apache.spark.sql.connector.write.RowLevelOperation.Command.DELETE)
+    new graft.sources.v2.GraftShardCowWrite(op, dir, m.schema, None, None, 64)
+      .abort(Array(graft.sources.v2.ShardCommitMessage(Seq(fe))))
+    assert(!new File(dir, fe.name).exists(), "aborted shard file must be deleted")
+    assert(!bloom.exists(), "aborted shard's bloom sidecar must be deleted")
+  }
 }

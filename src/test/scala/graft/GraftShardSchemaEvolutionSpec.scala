@@ -39,9 +39,13 @@ class GraftShardSchemaEvolutionSpec extends AnyFunSuite {
     val dir = s"$warehouse/add/t"
     val filesBefore = shardSnapshot(dir)
     val vBefore = ShardFormat.readManifest(dir).get.version
+    val genBefore = ShardFormat.readManifest(dir).get.generation
 
     spark.sql("ALTER TABLE evcat.add.t ADD COLUMN lang STRING")
     assert(shardSnapshot(dir) == filesBefore, "ADD COLUMN must touch no file")
+    val altered = ShardFormat.readManifest(dir).get
+    assert(altered.operation == "alter" && altered.generation == genBefore,
+      "ALTER changes no row: an alter commit that keeps streaming offsets")
     val t = spark.table("evcat.add.t")
     assert(t.schema.fieldNames.toSeq == Seq("id", "v", "lang"))
     assert(t.where(col("lang").isNull).count() == 20, "old rows read as null")

@@ -78,11 +78,11 @@ class GraftShardStreamSinkSpec extends AnyFunSuite {
     val w = new ShardFormat.ShardWriter(new java.io.File(dir, orphan), m.schema)
     w.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](999L)))
-    val (bytes, rows, stats, allNull) = w.finish()
+    val fe = w.finish().entry
     val sw = new graft.sources.v2.GraftShardStreamingWrite(dir, queryId,
       new graft.sources.v2.GraftShardBatchWrite(dir, m.schema, None, None))
     sw.commit(epoch, Array(graft.sources.v2.ShardCommitMessage(
-      Seq(ShardFormat.FileEntry(orphan, bytes, rows, stats, allNull, None)))))
+      Seq(fe))))
     assert(!new java.io.File(dir, orphan).exists(), "replayed epoch's file must be deleted")
     assert(ShardFormat.readManifest(dir).get == m, "manifest must be untouched")
     assert(spark.read.format("graftshard").load(dir).count() == 10)
@@ -91,9 +91,8 @@ class GraftShardStreamSinkSpec extends AnyFunSuite {
     val w2 = new ShardFormat.ShardWriter(new java.io.File(dir, "next-epoch.shard"), m.schema)
     w2.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](123L)))
-    val (b2, r2, s2, a2) = w2.finish()
     sw.commit(epoch + 1, Array(graft.sources.v2.ShardCommitMessage(
-      Seq(ShardFormat.FileEntry("next-epoch.shard", b2, r2, s2, a2, None)))))
+      Seq(w2.finish().entry))))
     assert(spark.read.format("graftshard").load(dir).count() == 11)
     assert(ShardFormat.readManifest(dir).get.streamCommits(queryId) == epoch + 1)
   }

@@ -245,12 +245,12 @@ class GraftShardWapSpec extends AnyFunSuite {
     val w = new ShardFormat.ShardWriter(new java.io.File(dir, orphan), b2.schema)
     w.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](999L, 999L)))
-    val (bytes, rows, stats, allNull) = w.finish()
+    val fe = w.finish().entry
     val sw = new graft.sources.v2.GraftShardStreamingWrite(dir, queryId,
       new graft.sources.v2.GraftShardBatchWrite(dir, b2.schema, None, None,
         stageAs = Some("ingest")), Some("ingest"))
     sw.commit(lastEpoch, Array(graft.sources.v2.ShardCommitMessage(
-      Seq(ShardFormat.FileEntry(orphan, bytes, rows, stats, allNull, None)))))
+      Seq(fe))))
     assert(!new java.io.File(dir, orphan).exists(),
       "replayed staged epoch's file must be deleted")
     assert(ShardFormat.readBranch(dir, "ingest").get == b2,
