@@ -2003,9 +2003,9 @@ object ExtensionQueries {
     * ColumnarToRow actually engaging). Byte-exact vs the oracle; the
     * measured win is PROBE-COLREAD's 2.29× numeric / 1.39×
     * string-heavy, 1.18-1.22× filtered, 1.26× embedding
-    * (GraftShardColumnarReadSpec pins type/null/codec
-    * exactness and every row-path fallback; the source props A/B both
-    * paths bit-for-bit on random payloads). */
+    * (GraftShardColumnarReadSpec pins type/null/codec exactness; the
+    * source props check the batch read bit-for-bit against the written
+    * rows on random payloads). */
   private def x69(s: SparkSession, dir: String): DataFrame = {
     val out = Q.tmpArtifactPath("x69", dir)
     val docs = table(s, dir, "documents")

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -371,10 +372,13 @@ class ShardChangesReaderFactory(
   }
 }
 
-/** Decodes one changed file, emitting the delta rows with the change
-  * columns appended. Ordinal selection is a pointer walk over the
-  * SORTED delete vectors against the sequential physical ordinal —
-  * O(1) memory, no hash sets. */
+/** Decodes one changed file through the batch reader, emitting the
+  * delta rows with the change columns appended. The dead-before
+  * ordinals ride in as the file's delete vector; a merge-on-read delta
+  * also reads `_pos` (the batch's first ordinal from
+  * [[ShardFormat.ShardReader.ordinal]], plus the row's offset) and
+  * keeps only its dead-after ordinals — a pointer walk over the SORTED
+  * vector, O(1) memory, no hash sets. */
 class ShardChangesPartitionReader(
     p: ShardChangePartition,
     baseSchema: StructType,
@@ -382,56 +386,55 @@ class ShardChangesPartitionReader(
     resolve: ShardFormat.ColumnResolution = ShardFormat.ColumnResolution.empty)
     extends PartitionReader[InternalRow] {
 
-  // required base columns -> table indices (change columns served here)
-  private val baseIdx: Array[Int] =
-    required.fields.collect {
-      case f if baseSchema.fieldNames.contains(f.name) => baseSchema.fieldIndex(f.name)
-    }
-  private val reader = new ShardFormat.ShardReader(new File(p.file), baseSchema, baseIdx,
-    resolve = resolve)
-  private val values = new Array[Any](baseIdx.length)
+  // required base columns, in output order (change columns served here)
+  private val baseFields: Array[StructField] =
+    required.fields.filter(f => baseSchema.fieldNames.contains(f.name))
+      .map(f => baseSchema(f.name))
+  // dead-after ordinals: a merge-on-read delta emits only these
+  private val emitOnly: Option[Array[Long]] =
+    p.emitOnly.map(d => ShardFormat.readDeleteVector(new File(d)))
+  private val posSlot = baseFields.length
+  private val rows = new ShardBatchRows(new GraftShardColumnarPartitionReader(
+    Array((p.file, 0L, p.skip, None, 0L)), baseSchema,
+    StructType(baseFields ++
+      emitOnly.map(_ => StructField("_pos", LongType, nullable = false))),
+    Array.empty[Filter], resolve))
 
-  // slots of the two synthetic columns in the required output
-  private val outSlots: Array[Any => Any] = {
+  // each output position reads a base slot or a change constant
+  private val outSlots: Array[InternalRow => Any] = {
     var b = -1
     required.fields.map { f =>
-      if (f.name == GraftShardChanges.ChangeTypeCol)
-        (_: Any) => UTF8String.fromString(p.changeType)
-      else if (f.name == GraftShardChanges.CommitVersionCol)
-        (_: Any) => Long.box(p.commitVersion)
+      if (f.name == GraftShardChanges.ChangeTypeCol) {
+        val v = UTF8String.fromString(p.changeType)
+        (_: InternalRow) => v
+      } else if (f.name == GraftShardChanges.CommitVersionCol)
+        (_: InternalRow) => Long.box(p.commitVersion)
       else if (f.name == GraftShardChanges.CommitTimestampCol)
-        (_: Any) => Long.box(p.commitTimestampMs)
-      else { b += 1; val i = b; (vs: Any) => vs.asInstanceOf[Array[Any]](i) }
+        (_: InternalRow) => Long.box(p.commitTimestampMs)
+      else {
+        b += 1; val i = b; val dt = baseFields(i).dataType
+        (r: InternalRow) => if (r.isNullAt(i)) null else r.get(i, dt)
+      }
     }
   }
 
-  // dead-before ordinals are never part of this delta; for a
-  // merge-on-read delta only dead-after ordinals are
-  private val skip: Array[Long] =
-    p.skip.map(d => ShardFormat.readDeleteVector(new File(d))).getOrElse(Array.emptyLongArray)
-  private val emitOnly: Option[Array[Long]] =
-    p.emitOnly.map(d => ShardFormat.readDeleteVector(new File(d)))
-
-  private var ordinal = -1L
-  private var si = 0 // pointer into skip
   private var ei = 0 // pointer into emitOnly
   private var row: InternalRow = _
 
   override def next(): Boolean = {
-    while (reader.next(values)) {
-      ordinal += 1
-      while (si < skip.length && skip(si) < ordinal) si += 1
-      val dead = si < skip.length && skip(si) == ordinal
+    while (rows.next()) {
+      val r = rows.get()
       val selected = emitOnly match {
-        case None => !dead
+        case None => true
         case Some(eo) =>
+          val ordinal = r.getLong(posSlot)
           while (ei < eo.length && eo(ei) < ordinal) ei += 1
-          !dead && ei < eo.length && eo(ei) == ordinal
+          ei < eo.length && eo(ei) == ordinal
       }
       if (selected) {
         val out = new Array[Any](outSlots.length)
         var i = 0
-        while (i < outSlots.length) { out(i) = outSlots(i)(values); i += 1 }
+        while (i < outSlots.length) { out(i) = outSlots(i)(r); i += 1 }
         row = new GenericInternalRow(out)
         return true
       }
@@ -440,5 +443,5 @@ class ShardChangesPartitionReader(
   }
 
   override def get(): InternalRow = row
-  override def close(): Unit = reader.close()
+  override def close(): Unit = rows.close()
 }

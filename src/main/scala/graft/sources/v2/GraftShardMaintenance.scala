@@ -328,24 +328,15 @@ object GraftShardMaintenance {
       eqDeletes: Seq[(String, String, Long)] = Nil,
       zIdx: Option[(Int, Int)] = None)
       : Iterator[InternalRow] = {
-    def readerOf(nd: (String, Option[String], Long)): Iterator[InternalRow] = {
-      // the partition reader APPLIES the member's delete vector AND the
-      // equality deletes covering its seq, so a compacted file is
-      // clean: sidecar refs drop from the manifest and the old vectors
-      // become vacuum garbage
-      val r = new GraftShardPartitionReader(
+    // the batch reader APPLIES the member's delete vector AND the
+    // equality deletes covering its seq, so a compacted file is clean:
+    // sidecar refs drop from the manifest and the old vectors become
+    // vacuum garbage. Its rows are views into reused vectors
+    def readerOf(nd: (String, Option[String], Long)): Iterator[InternalRow] =
+      new ShardBatchRows(new GraftShardColumnarPartitionReader(
         Array((new File(dir, nd._1).getPath, 0L,
           nd._2.map(d => new File(dir, d).getPath), None, nd._3)),
-        schema, schema, Array.empty[Filter], resolve = resolve,
-        eqDeletes = eqDeletes)
-      new Iterator[InternalRow] {
-        private var ready = r.next()
-        override def hasNext: Boolean = ready
-        override def next(): InternalRow = {
-          val row = r.get(); ready = r.next(); row
-        }
-      }
-    }
+        schema, schema, Array.empty[Filter], resolve, eqDeletes)).iterator
     if (sortIdx < 0 && zIdx.isEmpty) names.iterator.flatMap(readerOf)
     else {
       val lt: (InternalRow, InternalRow) => Boolean = if (sortIdx < 0) {
@@ -383,9 +374,11 @@ object GraftShardMaintenance {
             s"graftshard: cannot merge-compact sortedBy column of type ${other.sql}")
         }
       }
-      // k is the group size (a handful): linear scan over the heads
+      // k is the group size (a handful): linear scan over the heads. A
+      // head is held while its reader advances, so it is a COPY — the
+      // reader's own row is a view its next batch overwrites
       val heads = scala.collection.mutable.ArrayBuffer.from(
-        names.map(readerOf).filter(_.hasNext).map(it => (it.next(), it)))
+        names.map(readerOf).filter(_.hasNext).map(it => (it.next().copy(), it)))
       new Iterator[InternalRow] {
         override def hasNext: Boolean = heads.nonEmpty
         override def next(): InternalRow = {
@@ -396,7 +389,7 @@ object GraftShardMaintenance {
             i += 1
           }
           val (row, it) = heads(best)
-          if (it.hasNext) heads(best) = (it.next(), it)
+          if (it.hasNext) heads(best) = (it.next().copy(), it)
           else heads.remove(best)
           row
         }
@@ -514,7 +507,7 @@ object GraftShardMaintenance {
     * a table created without the property is a full data rewrite
     * (compaction regenerates sketches) — at 100 TB the whole point of
     * stats is to never need one. The sketch pass is DISTRIBUTED (one
-    * Spark task per file through the ordinary partition reader with
+    * Spark task per file through the ordinary batch reader with
     * the target columns pruned), sketches describe PHYSICAL rows
     * exactly like write-time sketches (the scan's rollup caps by live
     * rows separately), and the commit re-reads the manifest under the
@@ -572,15 +565,15 @@ object GraftShardMaintenance {
       case d: org.apache.spark.sql.types.DecimalType => Some((d.precision, d.scale))
       case _ => None
     } }
-    // one task per file: open through the ordinary partition reader
+    // one task per file: open through the ordinary batch reader
     // (column-pruned, NO delete vectors — sketches are physical like
     // the writer's), fold each value into the accumulators, serialize
     val results: Map[String, (Map[String, String], Map[String, String], Option[String])] =
       spark.sparkContext.parallelize(names, math.max(1, names.size))
         .map { case (name, seq) =>
-          val r = new GraftShardPartitionReader(
+          val r = new ShardBatchRows(new GraftShardColumnarPartitionReader(
             Array((new File(dir, name).getPath, 0L, None, None, seq)),
-            schema, required, Array.empty[Filter], resolve = resolve)
+            schema, required, Array.empty[Filter], resolve))
           val ndv = colNames.map(_ => new ShardFormat.NdvAcc).toArray
           val kll = physTypes.map {
             case LongType | IntegerType => Some(new ShardFormat.KllAcc)

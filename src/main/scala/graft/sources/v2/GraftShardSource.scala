@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, Expressions, NamedReference, NullOrdering, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min, Sum}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.colstats
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsPushDownTopN, SupportsReportOrdering, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
@@ -670,8 +671,6 @@ class GraftShardScanBuilder(
       agg, limit, snapshot = pinned.isDefined,
       maxFilesPerTrigger = maxFiles, maxBytesPerTrigger = maxBytes,
       topN = topN,
-      columnarOption =
-        !Option(options.get("columnarRead")).map(_.toLowerCase).contains("false"),
       // LEAN plan eligibility: nothing about this scan needs the rich
       // per-file stat maps at plan time — no pushed row predicates, no
       // limit/TopN file cuts, no manifest-answered aggregate, no
@@ -729,7 +728,6 @@ class GraftShardScan(
     maxFilesPerTrigger: Option[Int] = None,
     maxBytesPerTrigger: Option[Long] = None,
     topN: Option[TopNPush] = None,
-    columnarOption: Boolean = true,
     leanEligible: Boolean = false)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsReportPartitioning with SupportsReportOrdering
@@ -1343,14 +1341,11 @@ class GraftShardScan(
     case None => new GraftShardReaderFactory(fullSchema, required, pushed ++ runtime, limit,
       rootMeta.resolution,
       rootMeta.equalityDeletes.map(d =>
-        (d.column, new File(path, d.name).getPath, d.seq)),
-      // option("columnarRead", "false") is the operational escape hatch
-      // (and the A/B control of SCALE.md's columnar batch-read rows);
-      // merge-on-read delete vectors
-      // are handled INSIDE the batch reader since round 13 (deselected
-      // like filter misses), so they no longer force the row path
-      allowColumnar = columnarOption)
+        (d.column, new File(path, d.name).getPath, d.seq)))
   }
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    GraftShardScan.readMetrics
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     require(agg.isEmpty,
@@ -1359,11 +1354,39 @@ class GraftShardScan(
       "graftshard: cannot stream a time-travel snapshot — a snapshot is a " +
         "fixed commit; stream the current table (offsets track its appends)")
     new GraftShardMicroBatchStream(path, fullSchema, required, pushed,
-      maxFilesPerTrigger, maxBytesPerTrigger, columnarOption)
+      maxFilesPerTrigger, maxBytesPerTrigger)
   }
 }
 
+/** Row groups the shard scan dropped whole on their header stats,
+  * summed over tasks. */
+class ShardGroupsSkippedMetric extends CustomSumMetric {
+  override def name(): String = GraftShardScan.GroupsSkippedMetric
+  override def description(): String = "row groups skipped"
+}
+
+/** Shard files the scan never opened because their bloom sidecar
+  * proved no row matches, summed over tasks. */
+class ShardBloomSkippedFilesMetric extends CustomSumMetric {
+  override def name(): String = GraftShardScan.BloomSkippedFilesMetric
+  override def description(): String = "files skipped by bloom filter"
+}
+
 object GraftShardScan {
+  val GroupsSkippedMetric = "groupsSkipped"
+  val BloomSkippedFilesMetric = "bloomSkippedFiles"
+
+  /** The read-side counters every shard scan declares; the batch
+    * reader reports them. */
+  def readMetrics: Array[CustomMetric] =
+    Array(new ShardGroupsSkippedMetric, new ShardBloomSkippedFilesMetric)
+
+  private[v2] def taskMetric(metric: String, v: Long): CustomTaskMetric =
+    new CustomTaskMetric {
+      override def name(): String = metric
+      override def value(): Long = v
+    }
+
   /** DSv2 equi-height histogram over a merged KLL quantile sketch: 32
     * bins of equal row mass (height = non-null rows / 32), per-bin NDV
     * apportioned uniformly from the column's distinct estimate (the
@@ -1504,8 +1527,7 @@ class GraftShardMicroBatchStream(
     required: StructType,
     pushed: Array[Filter],
     maxFilesPerTrigger: Option[Int] = None,
-    maxBytesPerTrigger: Option[Long] = None,
-    columnarOption: Boolean = true)
+    maxBytesPerTrigger: Option[Long] = None)
     extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
@@ -1665,16 +1687,14 @@ class GraftShardMicroBatchStream(
     val m = ShardFormat.readManifestMeta(path).getOrElse(manifest())
     // equality deletes are FIXED for the life of the stream (an upsert
     // commit turns the generation over, which fails the next batch
-    // loudly), so the prefix batches apply one consistent delete set
-    // micro-batch scans ride the same columnar batch path as batch
-    // reads (MicroBatchScanExec shares DataSourceV2ScanExecBase's
-    // row/columnar dispatch) — the bootstrap-a-new-consumer read over
-    // a 100 TB table is exactly the scan shape vectorization pays on
+    // loudly), so the prefix batches apply one consistent delete set.
+    // Micro-batch scans ride the same batch decode as batch reads
+    // (MicroBatchScanExec shares DataSourceV2ScanExecBase's columnar
+    // dispatch)
     new GraftShardReaderFactory(fullSchema, required, pushed,
       resolve = m.resolution,
       eqDeletes = m.equalityDeletes.map(d =>
-        (d.column, new File(path, d.name).getPath, d.seq)),
-      allowColumnar = columnarOption)
+        (d.column, new File(path, d.name).getPath, d.seq)))
   }
 
   override def commit(end: Offset): Unit = ()
@@ -1689,57 +1709,22 @@ class GraftShardReaderFactory(
     resolve: ShardFormat.ColumnResolution = ShardFormat.ColumnResolution.empty,
     // equality deletes: (column, key-sidecar path, seq) — rows of files
     // with fileSeq < seq whose column value is in the sidecar are dead
-    eqDeletes: Seq[(String, String, Long)] = Nil,
-    // scan-level columnar admission (Spark requires ONE answer for the
-    // whole scan — partitions may not mix), carrying only the
-    // scan-uniform columnarRead option
-    allowColumnar: Boolean = false)
+    eqDeletes: Seq[(String, String, Long)] = Nil)
     extends PartitionReaderFactory {
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ShardFilesPartition]
-    new GraftShardPartitionReader(p.files, fullSchema, required, pushed, limit, resolve,
-      eqDeletes)
-  }
-
-  /** COLUMNAR reads for the scan shapes that dominate a curation pass:
-    * the shard format is already columnar at rest (per-column chunks
-    * per row group), so the scan decodes each group straight into
-    * column vectors — one tight loop per column, zero per-value boxing,
-    * and Spark's whole-stage codegen consumes the batch without a
-    * per-row InternalRow. Since round 13 this includes FILTERED scans
-    * (absorbed static and runtime predicates evaluate against the
-    * decoded batch; non-matching rows are compacted away — or the whole
-    * staging batch is exposed zero-copy when every row matched) and
-    * `array<float>` embedding projections (the float payload decodes
-    * into an ArrayType vector). The columnar reader also handles a
-    * pushed LIMIT cap, merge-on-read delete vectors, live equality
-    * deletes, and the `_shard_file`/`_pos` metadata columns. Every type
-    * a shard file can store has a batch decoder: [[ShardFormat.supported]]
-    * refuses maps and structs at write time, and decimals up to
-    * precision 18 (the only ones it stores) decode into long-backed
-    * vectors — so the type checks below are a guard, not a route. The
-    * ONE thing that forces the row path is the `columnarRead=false`
-    * option, which stays as the operational escape hatch and as the
-    * row-path reference the tests compare the batch reader against.
-    * Pinned by GraftShardColumnarReadSpec and the randomized source
-    * props. */
+  /** Every shard-file partition reads COLUMNAR: the shard format is
+    * already columnar at rest (per-column chunks per row group), so
+    * the scan decodes each group straight into column vectors — one
+    * tight loop per column, zero per-value boxing — and Spark's
+    * whole-stage codegen consumes the batch without a per-row
+    * InternalRow. Every type a shard file can store has a batch
+    * decoder ([[ShardFormat.supported]] refuses the rest at write
+    * time), and the batch reader serves every scan shape: filters,
+    * metadata columns, delete vectors, equality deletes, a pushed
+    * LIMIT. Pinned by GraftShardColumnarReadSpec and the randomized
+    * source props. */
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    allowColumnar && partition.isInstanceOf[ShardFilesPartition] &&
-      required.fields.forall { f =>
-        f.name == "_shard_file" || f.name == "_pos" || columnarType(f.dataType)
-      } &&
-      pushed.forall(_.references.forall(c =>
-        fullSchema.fields.find(_.name == c).exists(f => columnarType(f.dataType))))
-
-  private def columnarType(dt: DataType): Boolean =
-    ShardFormat.physicalOf(dt) match {
-      case LongType | IntegerType | DoubleType | FloatType |
-           BooleanType | StringType | BinaryType => true
-      case dt: DecimalType => dt.precision <= 18 // long-backed vectors
-      case ArrayType(FloatType | IntegerType | LongType, _) => true
-      case _ => false
-    }
+    partition.isInstanceOf[ShardFilesPartition]
 
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[ColumnarBatch] = {
@@ -1747,28 +1732,77 @@ class GraftShardReaderFactory(
     new GraftShardColumnarPartitionReader(p.files, fullSchema, required, pushed,
       resolve, eqDeletes, limit)
   }
+
+  /** The row face of the same batch decode ([[ShardBatchRows]]). */
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new ShardBatchRows(createColumnarReader(partition))
 }
 
-/** Batch reader over a partition's shard files (see
-  * [[GraftShardReaderFactory.supportColumnarReads]] for the admission
-  * rules): every file decodes whole row groups column-at-a-time into
-  * reused `OnHeapColumnVector`s through [[ShardFormat.ShardReader.nextBatch]].
+/** Rows of a batch reader: each batch's `ColumnarBatch.rowIterator()`
+  * in turn. A row is a VIEW into the reader's reused vectors, valid
+  * until the next `next()` — a caller that holds one longer (a merge
+  * buffer) must `copy()` it. Metrics pass through. */
+final class ShardBatchRows(batches: PartitionReader[ColumnarBatch])
+    extends PartitionReader[InternalRow] {
+  private var rows: java.util.Iterator[InternalRow] = java.util.Collections.emptyIterator()
+  private var row: InternalRow = _
+
+  override def next(): Boolean = {
+    while (!rows.hasNext) {
+      if (!batches.next()) return false
+      rows = batches.get().rowIterator()
+    }
+    row = rows.next()
+    true
+  }
+  override def get(): InternalRow = row
+  override def close(): Unit = batches.close()
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    batches.currentMetricsValues()
+
+  /** The rows as a Scala iterator, closing the reader at the end. It
+    * advances only on `hasNext`, so the row `next()` returned stays
+    * valid until then. */
+  def iterator: Iterator[InternalRow] = new Iterator[InternalRow] {
+    private var pending = false
+    private var done = false
+    override def hasNext: Boolean = {
+      if (!pending && !done) {
+        if (ShardBatchRows.this.next()) pending = true
+        else { done = true; close() }
+      }
+      pending
+    }
+    override def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException("graftshard: rows exhausted")
+      pending = false
+      row
+    }
+  }
+}
+
+/** THE shard-file reader: every read of a partition's shard files —
+  * batch and streaming scans, the copy-on-write scan, compaction,
+  * ANALYZE and the change feed — decodes whole row groups
+  * column-at-a-time into reused `OnHeapColumnVector`s through
+  * [[ShardFormat.ShardReader.nextBatch]]. Row consumers iterate its
+  * batches through [[ShardBatchRows]].
   *
   * One SELECTION pass unifies everything row-level:
-  *  - absorbed filters (static + runtime) run the row reader's own
-  *    compiled evaluators over the staged batch;
+  *  - absorbed filters (static + runtime) run the compiled evaluators
+  *    ([[ShardFilters.compile]]) over the staged batch;
   *  - merge-on-read delete-vector ordinals deselect rows via a single
   *    sorted pointer walking the monotone batch ordinals;
   *  - live equality deletes anti-filter over eq-only staging columns
-  *    (fileSeq < delete.seq, like the row reader).
+  *    (fileSeq < delete.seq).
   * An all-match batch is exposed ZERO-COPY; survivors otherwise
   * compact into output vectors with typed per-column copies (no
   * boxing). Metadata columns are served by the compact path (`_pos` =
   * the row's physical ordinal, `_shard_file` = the current file), and
-  * a pushed LIMIT caps emitted survivors per partition — so every scan
-  * shape the source serves is vectorized. File-level bloom skipping
-  * and group-level stats skipping run exactly as in the row reader
-  * (shared helpers). */
+  * a pushed LIMIT caps emitted survivors per partition. File-level
+  * bloom skipping and group-level stats skipping use the shared
+  * [[ShardFilters]] helpers; both counts are reported as the scan's
+  * custom metrics ([[GraftShardScan.readMetrics]]). */
 class GraftShardColumnarPartitionReader(
     files: Array[(String, Long, Option[String], Option[String], Long)],
     fullSchema: StructType,
@@ -1803,6 +1837,13 @@ class GraftShardColumnarPartitionReader(
   private val readTypes: Array[DataType] =
     readLogicalTypes.map(ShardFormat.physicalOf)
   private val slotOf: Map[String, Int] = readCols.zipWithIndex.toMap
+  // decimals of precision <= 9 live in INT-backed vectors (Spark's
+  // layout, which getDecimal reads back); the decoder hands every
+  // decimal over as its unscaled long
+  private val intDecimal: Array[Boolean] = readTypes.map {
+    case d: DecimalType => d.precision <= Decimal.MAX_INT_DIGITS
+    case _ => false
+  }
   private val capacity = ShardFormat.GroupMaxRows
   // output position -> staging slot; -1 = _shard_file, -2 = _pos
   private val outMap: Array[Int] = required.fieldNames.map {
@@ -1831,9 +1872,9 @@ class GraftShardColumnarPartitionReader(
   private val outputBatch: ColumnarBatch =
     if (!mayCompact) null else new ColumnarBatch(output.toArray[ColumnVector])
 
-  // row-level evaluation: the row reader's compiled evaluators over a
-  // boxed view of JUST the filter-referenced slots (1-2 columns in
-  // practice — the required columns never box)
+  // row-level evaluation: the compiled evaluators over a boxed view of
+  // JUST the filter-referenced slots (1-2 columns in practice — the
+  // required columns never box)
   private val evals: Array[Array[Any] => Boolean] =
     pushed.map(ShardFilters.compile(_, slotOf, fullSchema))
   private val filterSlots: Array[Int] =
@@ -1944,7 +1985,7 @@ class GraftShardColumnarPartitionReader(
 
   // equality deletes, loaded ONCE per task (the read-side tax of upsert
   // ingestion): (key slot, key set, delete seq), applied to files with
-  // fileSeq < seq exactly like the row reader
+  // fileSeq < seq (an upsert's own inserts carry the delete's seq)
   private lazy val eqSets: Array[(Int, ShardFormat.EqKeySet, Long)] =
     eqDeletes.map { case (c, p, seq) =>
       (slotOf(c), ShardFormat.readEqKeySidecar(new File(p)), seq)
@@ -2070,10 +2111,6 @@ class GraftShardColumnarPartitionReader(
 
   private val sink: ShardFormat.BatchSink = new ShardFormat.BatchSink {
     override def putNull(s: Int, r: Int): Unit = staging(s).putNull(r)
-    override def putLong(s: Int, r: Int, v: Long): Unit = staging(s).putLong(r, v)
-    override def putInt(s: Int, r: Int, v: Int): Unit = staging(s).putInt(r, v)
-    override def putDouble(s: Int, r: Int, v: Double): Unit = staging(s).putDouble(r, v)
-    override def putFloat(s: Int, r: Int, v: Float): Unit = staging(s).putFloat(r, v)
     override def putBoolean(s: Int, r: Int, v: Boolean): Unit = staging(s).putBoolean(r, v)
     override def putBytes(s: Int, r: Int, b: Array[Byte], off: Int, len: Int): Unit = {
       staging(s).putByteArray(r, b, off, len): Unit
@@ -2115,7 +2152,11 @@ class GraftShardColumnarPartitionReader(
     // garbage at null positions is never read (accessors null-check)
     override def putLongsBulk(s: Int, n: Int, vals: Array[Long],
         nullRows: Array[Int], nNulls: Int): Unit = {
-      staging(s).putLongs(0, n, vals, 0)
+      if (!intDecimal(s)) staging(s).putLongs(0, n, vals, 0)
+      else {
+        var r = 0
+        while (r < n) { staging(s).putInt(r, vals(r).toInt); r += 1 }
+      }
       var k = 0
       while (k < nNulls) { staging(s).putNull(nullRows(k)); k += 1 }
     }
@@ -2153,8 +2194,10 @@ class GraftShardColumnarPartitionReader(
           val st = staging(s)
           val out = output(j)
           readTypes(s) match {
+            case _: DecimalType if intDecimal(s) => (r: Int, o: Int) =>
+              if (st.isNullAt(r)) out.putNull(o) else out.putInt(o, st.getInt(r))
             case LongType | (_: DecimalType) => (r: Int, o: Int) =>
-              // decimal vectors at precision <= 18 are long-backed: the
+              // decimal vectors at precision 10-18 are long-backed: the
               // unscaled long copies straight across
               if (st.isNullAt(r)) out.putNull(o) else out.putLong(o, st.getLong(r))
             case IntegerType => (r: Int, o: Int) =>
@@ -2218,6 +2261,22 @@ class GraftShardColumnarPartitionReader(
   // dvIdx walks them monotonically with the batch ordinals
   private var dv: Array[Long] = Array.emptyLongArray
   private var dvIdx: Int = 0
+  // custom-metric counts: row groups skipped by the files already
+  // closed (the open file's count is added on report), files skipped
+  // whole by their bloom sidecar
+  private var groupsSkippedClosed: Long = 0L
+  private var bloomSkippedFiles: Long = 0L
+
+  private def closeFile(): Unit = {
+    groupsSkippedClosed += reader.groupsSkipped
+    reader.close()
+    reader = null
+  }
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+    GraftShardScan.taskMetric(GraftShardScan.GroupsSkippedMetric,
+      groupsSkippedClosed + (if (reader == null) 0 else reader.groupsSkipped)),
+    GraftShardScan.taskMetric(GraftShardScan.BloomSkippedFilesMetric, bloomSkippedFiles))
 
   override def next(): Boolean = {
     if (emitted >= cap) { close(); return false }
@@ -2228,6 +2287,7 @@ class GraftShardColumnarPartitionReader(
         if (ShardFilters.bloomSkipsFile(bloomProbes, files(fileIdx)._4, resolve.aliases)) {
           // the sidecar proves no row matches: never opened (the DV is
           // never opened either — deleted rows cannot match any better)
+          bloomSkippedFiles += 1
         } else {
           val f = new File(files(fileIdx)._1)
           fileNameBytes = f.getName.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -2250,7 +2310,7 @@ class GraftShardColumnarPartitionReader(
               s"capacity $capacity — not written by this library's writer")
           sink
         }
-        if (n < 0) reader = null
+        if (n < 0) closeFile()
         if (n > 0) {
           if (evals.isEmpty && dv.isEmpty && activeEq.isEmpty && !hasMeta) {
             // every row survives: expose the staged vectors zero-copy,
@@ -2354,179 +2414,12 @@ class GraftShardColumnarPartitionReader(
 
   override def get(): ColumnarBatch = current
   // an early stop (cancellation, exception, upstream abort) leaves the
-  // in-flight ShardReader open — close it here like the row reader does,
-  // not only at clean EOF
+  // in-flight ShardReader open — close it here, not only at clean EOF
   override def close(): Unit = {
-    if (reader != null) { reader.close(); reader = null }
+    if (reader != null) closeFile()
     staging.foreach(_.close())
     output.foreach(_.close())
   }
-}
-
-/** Streams the partition's shard files in order; decodes the union of
-  * required and filter columns, evaluates pushed filters, emits rows
-  * in required-column order. O(1) state — one open file, one row. */
-class GraftShardPartitionReader(
-    files: Array[(String, Long, Option[String], Option[String], Long)],
-    fullSchema: StructType,
-    required: StructType,
-    pushed: Array[Filter],
-    limit: Option[Int] = None,
-    resolve: ShardFormat.ColumnResolution = ShardFormat.ColumnResolution.empty,
-    eqDeletes: Seq[(String, String, Long)] = Nil)
-    extends PartitionReader[InternalRow] {
-
-  // pushed LIMIT: emit at most this many matching rows, then stop
-  // decoding — per-partition, so always sound (Spark's Limit finishes)
-  private val cap: Int = limit.getOrElse(Int.MaxValue)
-  private var emitted: Int = 0
-
-  private val MetaFileCol = "_shard_file"
-  private val MetaPosCol = "_pos"
-  private val fullIndex: Map[String, Int] =
-    fullSchema.fieldNames.zipWithIndex.toMap
-  // metadata columns are served by THIS reader (from the file it is
-  // decoding), never decoded from records
-  private val dataRequired: Array[String] =
-    required.fieldNames.filterNot(c => c == MetaFileCol || c == MetaPosCol)
-  private val filterCols: Array[String] =
-    pushed.flatMap(_.references).distinct.filterNot(dataRequired.contains)
-  // equality-delete key columns must be DECODED even when pruned away —
-  // the anti-filter needs the value (like filter-only columns)
-  private val eqOnlyCols: Array[String] =
-    eqDeletes.map(_._1).distinct
-      .filterNot(c => dataRequired.contains(c) || filterCols.contains(c)).toArray
-  // read layout: required data columns first, then filter/eq-only ones
-  private val readCols: Array[String] = dataRequired ++ filterCols ++ eqOnlyCols
-  private val readIndices: Array[Int] = readCols.map(fullIndex)
-  private val slotOf: Map[String, Int] = readCols.zipWithIndex.toMap
-  // output position -> value slot; -1 = _shard_file, -2 = _pos
-  private val outMap: Array[Int] = required.fieldNames.map {
-    case MetaFileCol => -1
-    case MetaPosCol => -2
-    case c => slotOf(c)
-  }
-  private val hasMeta = outMap.exists(_ < 0)
-  private val evals: Array[Array[Any] => Boolean] =
-    pushed.map(ShardFilters.compile(_, slotOf, fullSchema))
-  // within-file group skipping and bloom-testable conjuncts — shared
-  // with the columnar reader ([[ShardFilters.groupSkipper]]/
-  // [[ShardFilters.bloomProbes]]) so the two paths cannot drift
-  private val groupSkip: ShardFormat.GroupStats => Boolean =
-    ShardFilters.groupSkipper(pushed)
-  private val bloomProbes: Array[(String, Array[Long])] =
-    ShardFilters.bloomProbes(pushed)
-
-  // equality deletes, loaded ONCE per task (the read-side tax of upsert
-  // ingestion, paid until compaction applies them): (key slot, key set,
-  // delete seq) — applied to rows of files with fileSeq < seq
-  private lazy val eqSets: Array[(Int, ShardFormat.EqKeySet, Long)] =
-    eqDeletes.map { case (col, p, seq) =>
-      (slotOf(col), ShardFormat.readEqKeySidecar(new File(p)), seq)
-    }.toArray
-  // the current file's applicable deletes (set at file open)
-  private var activeEq: Array[(Int, ShardFormat.EqKeySet)] = Array.empty
-
-  private def eqDeleted(values: Array[Any]): Boolean = {
-    var i = 0
-    while (i < activeEq.length) {
-      val (slot, set) = activeEq(i)
-      val v = values(slot)
-      // a null key never equality-matches (SQL semantics)
-      if (v != null) {
-        val hit = v match {
-          case l: java.lang.Long => !set.isString && set.contains(l.longValue())
-          case n: java.lang.Integer => !set.isString && set.contains(n.longValue())
-          case u: UTF8String => set.isString && set.contains(u)
-          case _ => false
-        }
-        if (hit) return true
-      }
-      i += 1
-    }
-    false
-  }
-
-  private def bloomSkips(sidecar: Option[String]): Boolean =
-    ShardFilters.bloomSkipsFile(bloomProbes, sidecar, resolve.aliases)
-
-  private val values = new Array[Any](readCols.length)
-  private var fileIdx = -1
-  private var reader: ShardFormat.ShardReader = _
-  private var fileName: UTF8String = _
-  // physical ordinal of the row just decoded (counts filter- and
-  // delete-skipped rows too: with _shard_file it is the stable row id)
-  private var pos: Long = -1L
-  // merge-on-read: sorted delete-vector ordinals for the current file
-  private var dv: Array[Long] = Array.emptyLongArray
-  private var dvIdx: Int = 0
-  private var row: GenericInternalRow = _
-
-  override def next(): Boolean = {
-    if (emitted >= cap) { close(); reader = null; return false }
-    var advanced = false
-    var exhausted = false
-    while (!advanced && !exhausted) {
-      if (reader == null) {
-        fileIdx += 1
-        if (fileIdx >= files.length) exhausted = true
-        else if (bloomSkips(files(fileIdx)._4)) {
-          // the sidecar proves no row matches: the shard file and its
-          // delete vector are never opened (reader stays null — the
-          // loop advances to the next file)
-        } else {
-          val f = new File(files(fileIdx)._1)
-          fileName = UTF8String.fromString(f.getName)
-          reader = new ShardFormat.ShardReader(f, fullSchema, readIndices, groupSkip, resolve)
-          pos = -1L
-          dv = files(fileIdx)._3
-            .map(d => ShardFormat.readDeleteVector(new File(d)))
-            .getOrElse(Array.emptyLongArray)
-          dvIdx = 0
-          // equality deletes apply to strictly OLDER files (an upsert's
-          // own inserts carry the delete's seq and are spared)
-          val fileSeq = files(fileIdx)._5
-          activeEq =
-            if (eqDeletes.isEmpty) Array.empty
-            else eqSets.collect { case (slot, set, seq) if fileSeq < seq => (slot, set) }
-        }
-      } else if (!reader.next(values)) {
-        reader = null // ShardReader closed itself at EOF
-      } else {
-        // the reader's ordinal counts skipped-group rows too, so the
-        // delete-vector walk below must CATCH UP past ordinals that
-        // fell inside skipped groups (they were never served)
-        pos = reader.ordinal
-        while (dvIdx < dv.length && dv(dvIdx) < pos) dvIdx += 1
-        if (dvIdx < dv.length && dv(dvIdx) == pos) {
-          dvIdx += 1 // merge-on-read deleted row: skip, keep counting
-        } else if (activeEq.length > 0 && eqDeleted(values)) {
-          // equality-deleted (upserted-away) row: skip, keep counting
-        } else if (evals.forall(_(values))) {
-          val out = new Array[Any](required.length)
-          if (!hasMeta) System.arraycopy(values, 0, out, 0, required.length)
-          else {
-            var j = 0
-            while (j < outMap.length) {
-              out(j) = outMap(j) match {
-                case -1 => fileName
-                case -2 => Long.box(pos)
-                case s => values(s)
-              }
-              j += 1
-            }
-          }
-          row = new GenericInternalRow(out)
-          emitted += 1
-          advanced = true
-        }
-      }
-    }
-    advanced
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = if (reader != null) reader.close()
 }
 
 /** Pushability, file-level skipping, and row-level evaluation for the
@@ -2819,8 +2712,8 @@ object ShardFilters {
     * Literals are normalized once (UTF8String for strings, Long for
     * integrals) — not per row. */
   def compile(f: Filter, slotOf: Map[String, Int], schema: StructType): Array[Any] => Boolean = {
-    // decimal slots surface catalyst Decimal values (the row decode's
-    // boxed currency / boxOf's vector read); predicates were rewritten
+    // decimal slots surface catalyst Decimal values (the batch
+    // reader's boxOf vector read); predicates were rewritten
     // into unscaled-long space at the pushdown boundary
     // ([[normalizeDecimals]]), so the accessor unwraps to the unscaled
     // long and every comparison below is a plain long compare
@@ -2896,7 +2789,7 @@ object ShardFilters {
     * Only top-level equality/IN on bloom-eligible literal types
     * qualifies (a null literal never equals anything; Or/Not conjuncts
     * don't require the column to take one of finitely many values).
-    * Shared by the row and columnar partition readers. */
+    * Used by the batch reader's per-file bloom test. */
   def bloomProbes(pushed: Array[Filter]): Array[(String, Array[Long])] = {
     def hashOf(v: Any): Option[Long] = v match {
       case l: java.lang.Long => Some(ShardFormat.bloomHashLong(l.longValue()))

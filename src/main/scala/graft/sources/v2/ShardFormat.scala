@@ -7,7 +7,6 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -1110,11 +1109,6 @@ object ShardFormat {
     new DictChunk(c, bitmapLen, rawLen, offs, lens, count, idxWidth, idxPos)
   }
 
-  /** Inverse of [[dictEncode]]: reconstructs the raw chunk layout. */
-  private def dictDecode(
-      c: Array[Byte], bitmapLen: Int, rawLen: Int, file: File): Array[Byte] =
-    dictMaterialize(parseDictChunk(c, bitmapLen, rawLen, file))
-
   private def dictMaterialize(dm: DictChunk): Array[Byte] = {
     val c = dm.bytes
     val b = new Array[Byte](dm.rawLen)
@@ -1774,10 +1768,6 @@ object ShardFormat {
     * `OnHeapColumnVector`s in one. */
   trait BatchSink {
     def putNull(slot: Int, row: Int): Unit
-    def putLong(slot: Int, row: Int, v: Long): Unit
-    def putInt(slot: Int, row: Int, v: Int): Unit
-    def putDouble(slot: Int, row: Int, v: Double): Unit
-    def putFloat(slot: Int, row: Int, v: Float): Unit
     def putBoolean(slot: Int, row: Int, v: Boolean): Unit
     def putBytes(slot: Int, row: Int, b: Array[Byte], off: Int, len: Int): Unit
     /** One `array<float>` cell (the embedding-column shape). `v` is a
@@ -1806,49 +1796,21 @@ object ShardFormat {
       throw new UnsupportedOperationException(
         "graftshard: putDictId without an accepted dictionary")
 
-    // ---- BULK batch fills (fixed-width columns decoded whole-group):
-    // `vals` is ROW-ALIGNED for rows [0, n) — vals(r) is row r's value,
-    // null rows hold garbage; `nullRows[0, nNulls)` lists the null row
-    // ordinals to mark. The Spark sink maps these onto one
+    // ---- fixed-width columns arrive decoded whole-group: `vals` is
+    // ROW-ALIGNED for rows [0, n) — vals(r) is row r's value, null rows
+    // hold garbage; `nullRows[0, nNulls)` lists the null row ordinals
+    // to mark. The Spark sink maps these onto one
     // WritableColumnVector.put{Longs,Ints,Doubles,Floats} arraycopy +
     // nNulls null marks — the decode loop never crosses a per-cell
-    // virtual call. Defaults loop, so non-vector sinks need nothing.
+    // virtual call. Decimals arrive as their unscaled longs.
     def putLongsBulk(slot: Int, n: Int, vals: Array[Long],
-        nullRows: Array[Int], nNulls: Int): Unit = {
-      var k = 0; var r = 0
-      while (r < n) {
-        if (k < nNulls && nullRows(k) == r) { putNull(slot, r); k += 1 }
-        else putLong(slot, r, vals(r))
-        r += 1
-      }
-    }
+        nullRows: Array[Int], nNulls: Int): Unit
     def putIntsBulk(slot: Int, n: Int, vals: Array[Int],
-        nullRows: Array[Int], nNulls: Int): Unit = {
-      var k = 0; var r = 0
-      while (r < n) {
-        if (k < nNulls && nullRows(k) == r) { putNull(slot, r); k += 1 }
-        else putInt(slot, r, vals(r))
-        r += 1
-      }
-    }
+        nullRows: Array[Int], nNulls: Int): Unit
     def putDoublesBulk(slot: Int, n: Int, vals: Array[Double],
-        nullRows: Array[Int], nNulls: Int): Unit = {
-      var k = 0; var r = 0
-      while (r < n) {
-        if (k < nNulls && nullRows(k) == r) { putNull(slot, r); k += 1 }
-        else putDouble(slot, r, vals(r))
-        r += 1
-      }
-    }
+        nullRows: Array[Int], nNulls: Int): Unit
     def putFloatsBulk(slot: Int, n: Int, vals: Array[Float],
-        nullRows: Array[Int], nNulls: Int): Unit = {
-      var k = 0; var r = 0
-      while (r < n) {
-        if (k < nNulls && nullRows(k) == r) { putNull(slot, r); k += 1 }
-        else putFloat(slot, r, vals(r))
-        r += 1
-      }
-    }
+        nullRows: Array[Int], nNulls: Int): Unit
   }
 
   /** Sequential reader over one shard file, decoding only the columns
@@ -1963,80 +1925,42 @@ object ShardFormat {
       }
     }
 
-    // ---- group state: one group's RAW chunk bytes in flight for the
-    // wanted columns (others were skipped as whole chunks at load
-    // time); values decode lazily per row from per-column cursors — no
-    // staging arrays, so the row path allocates only the boxed values
-    // and narrow decode allocates only the wanted chunks
-    private var gRows = 0
-    private var gRow = 0
+    // ---- group state: one group's chunk bytes in flight for the wanted
+    // columns (others were skipped as whole chunks at load time), each
+    // decoded whole into the sink by the next nextBatch call
     private val gChunk = new Array[Array[Byte]](fields.length)
-    private val gCursor = new Array[DataInputStream](fields.length)
-    // non-null when column i's current chunk is codec-2 kept in
-    // dictionary form (batch consumers only); gChunk(i) then aliases
-    // the ENCODED buffer (its bitmap prefix is layout-identical) and
-    // gCursor(i) is null until [[materializeDict]]
+    // non-null when column i's current chunk is codec-2, kept in
+    // dictionary form; gChunk(i) then aliases the ENCODED buffer (its
+    // bitmap prefix is layout-identical)
     private val gDict = new Array[DictChunk](fields.length)
     // 3/4 when column i's current chunk is kept RLE/delta-ENCODED
-    // (batch consumers, fixed-width numeric types only): the bulk
-    // decode expands runs / varints STRAIGHT into the typed scratch —
-    // never reconstructing the raw fixed-width layout first. 0 = raw
-    // or materialized; gRawLen carries the raw size for the fallback
+    // (fixed-width numeric types only): the bulk decode expands runs /
+    // varints STRAIGHT into the typed scratch — never reconstructing
+    // the raw fixed-width layout first. 0 = raw or materialized
     private val gKept = new Array[Int](fields.length)
-    private val gRawLen = new Array[Int](fields.length)
-    // set by the first nextBatch call; loadGroup keeps codec-2 string
-    // chunks encoded only for batch consumers (the row path reads cells
-    // through a cursor over the reconstructed layout)
-    private var batchConsumer = false
-    // exact physical ordinal of the record LAST returned by next() —
-    // counts rows inside skipped groups too, so delete-vector / _pos
-    // consumers stay correct under group skipping
+    // exact physical ordinal of the LAST row of the batch nextBatch
+    // returned — counts rows inside skipped groups too, so delete-vector
+    // / _pos consumers stay correct under group skipping
     private var physOrdinal = -1L
     private var skippedGroups = 0
 
-    /** Physical ordinal (0-based, counts skipped-group rows) of the
-      * record the last `next(values)` produced. */
+    /** Physical ordinal (0-based, counts skipped-group rows) of the last
+      * row of the batch the last `nextBatch` produced: that batch holds
+      * ordinals `[ordinal - n + 1, ordinal]`. */
     def ordinal: Long = physOrdinal
     /** Row groups dropped by the `skipGroup` predicate so far. */
     def groupsSkipped: Int = skippedGroups
 
-    /** Reads the next record into `values` (length = readIndices.length,
-      * nulls as null); returns false at clean EOF. */
-    def next(values: Array[Any]): Boolean = {
-      if (gRow >= gRows && !loadGroup()) return false
-      var ms = 0
-      while (ms < missingSlots.length) { values(missingSlots(ms)) = null; ms += 1 }
-      var i = 0
-      while (i < fields.length) {
-        val s = slot(i)
-        if (s >= 0) {
-          // a mixed consumer (nextBatch then next — documented as never)
-          // still reads correctly: reconstruct the cell layout on demand
-          if (gDict(i) != null) materializeDict(i)
-          if (gKept(i) != 0) materializeKept(i)
-          val isNull = (gChunk(i)(gRow >> 3) & (1 << (gRow & 7))) != 0
-          values(s) = if (isNull) null else decodeOne(gCursor(i), fields(i), widen(i))
-        }
-        i += 1
-      }
-      gRow += 1
-      physOrdinal += 1
-      true
-    }
-
-    /** COLUMNAR batch decode: loads the next row group and writes its
-      * wanted columns into the sink COLUMN-AT-A-TIME — one tight loop
-      * per column over the group's chunk cursor instead of one
-      * column-switch per cell, and zero boxing for primitives (the
-      * row path allocates one box per non-null value). `begin(n)` is
-      * called once with the batch's row count to obtain the sink
-      * (so the caller can size/reset its vectors); returns n, or -1 at
-      * clean EOF. Never mix with [[next]] on the same reader. */
+    /** COLUMNAR batch decode, the one way a shard file is read: loads
+      * the next row group and writes its wanted columns into the sink
+      * COLUMN-AT-A-TIME — one tight loop per column over the group's
+      * chunk bytes, zero boxing for primitives. `begin(n)` is called
+      * once with the batch's row count to obtain the sink (so the
+      * caller can size/reset its vectors); returns n, or -1 at clean
+      * EOF (the file is then closed). */
     def nextBatch(begin: Int => BatchSink): Int = {
-      batchConsumer = true
-      if (gRow >= gRows && !loadGroup()) return -1
-      val start = gRow
-      val n = gRows - start
+      val n = loadGroup()
+      if (n < 0) return -1
       val sink = begin(n)
       var ms = 0
       while (ms < missingSlots.length) {
@@ -2054,19 +1978,12 @@ object ShardFormat {
               sink.setDictionary(s, dm.bytes, dm.offs, dm.lens, dm.count)) {
             // serve ids straight from the encoded index section —
             // O(count) entry work on the sink side, 1-2 B per row here
+            // (ids exist only for non-null cells)
             val chunk = dm.bytes
             var p = dm.idxPos
-            // ids exist only for non-null cells; skip those before
-            // `start` (always 0 in pure batch consumption)
-            var g0 = 0
-            while (g0 < start) {
-              if ((chunk(g0 >> 3) & (1 << (g0 & 7))) == 0) p += dm.idxWidth
-              g0 += 1
-            }
             var r = 0
             while (r < n) {
-              val gr = start + r
-              if ((chunk(gr >> 3) & (1 << (gr & 7))) != 0) sink.putNull(s, r)
+              if ((chunk(r >> 3) & (1 << (r & 7))) != 0) sink.putNull(s, r)
               else {
                 val id =
                   if (dm.idxWidth == 1) chunk(p) & 0xFF
@@ -2078,37 +1995,19 @@ object ShardFormat {
             }
           } else {
             if (dm != null) materializeDict(i) // sink declined the offer
-            val f = fields(i)
-            val w = widen(i)
             // whole-group decode in tight array loops (no per-cell
             // stream reads, bulk sink fills): kept RLE/delta chunks
             // expand straight into the typed scratch; raw/materialized
-            // chunks bulk-read the packed cells; anything else takes
-            // the per-cell cursor path
-            val served =
-              if (start != 0) false
-              else gKept(i) match {
-                case 3 => bulkDecodeRuns(i, n, f, w, sink, s); true
-                case 4 => bulkDecodeDeltas(i, n, f, w, sink, s); true
-                case _ => bulkDecode(gChunk(i), n, f, w, sink, s)
-              }
-            if (!served) {
-              if (gKept(i) != 0) materializeKept(i)
-              val chunk = gChunk(i)
-              val cur = gCursor(i)
-              var r = 0
-              while (r < n) {
-                val gr = start + r
-                if ((chunk(gr >> 3) & (1 << (gr & 7))) != 0) sink.putNull(s, r)
-                else decodeInto(cur, f, w, sink, s, r)
-                r += 1
-              }
+            // chunks bulk-read the packed cells
+            gKept(i) match {
+              case 3 => bulkDecodeRuns(i, n, fields(i), widen(i), sink, s)
+              case 4 => bulkDecodeDeltas(i, n, fields(i), widen(i), sink, s)
+              case _ => bulkDecode(gChunk(i), n, fields(i), widen(i), sink, s)
             }
           }
         }
         i += 1
       }
-      gRow = gRows
       physOrdinal += n
       n
     }
@@ -2137,18 +2036,17 @@ object ShardFormat {
       * rows only, row order) after the `(n+7)/8`-byte null bitmap;
       * values scatter into a row-aligned scratch that one bulk put
       * copies out. Handles the stored-width widenings (int→long,
-      * float→double) in the same loops. Returns false for layouts it
-      * does not cover (bool, string/binary, anything else) — the
-      * per-cell path serves those exactly as before. */
+      * float→double) in the same loops. Every storable type has a case
+      * ([[ShardFormat.supported]]); anything else fails loudly. */
     private def bulkDecode(
         chunk: Array[Byte], n: Int, field: StructField, w: Int,
-        sink: BatchSink, s: Int): Boolean = {
+        sink: BatchSink, s: Int): Unit = {
       val bitmapLen = (n + 7) / 8
       // null ordinals first: dense cells scatter to row positions
       val nNulls = scanNulls(chunk, n)
       var r = 0
       var p = bitmapLen
-      // like decodeInto, the STORED width comes first: `field` is the
+      // the STORED width comes first: `field` is the
       // FILE header's column, so a widened column arrives as the
       // narrower stored type with w set — the sink's slot is the
       // TABLE's (wider) type
@@ -2161,7 +2059,6 @@ object ShardFormat {
           r += 1
         }
         sink.putLongsBulk(s, n, bulkLongs, bulkNullRows, nNulls)
-        true
       } else if (w == 2) { // stored float, table double
         if (bulkDoubles.length < n) bulkDoubles = new Array[Double](n)
         var k = 0; r = 0
@@ -2175,7 +2072,6 @@ object ShardFormat {
           r += 1
         }
         sink.putDoublesBulk(s, n, bulkDoubles, bulkNullRows, nNulls)
-        true
       } else field.dataType match {
         case LongType | (_: DecimalType) => // decimals: unscaled longs
           if (bulkLongs.length < n) bulkLongs = new Array[Long](n)
@@ -2186,7 +2082,6 @@ object ShardFormat {
             r += 1
           }
           sink.putLongsBulk(s, n, bulkLongs, bulkNullRows, nNulls)
-          true
         case IntegerType =>
           if (bulkInts.length < n) bulkInts = new Array[Int](n)
           var k = 0; r = 0
@@ -2196,7 +2091,6 @@ object ShardFormat {
             r += 1
           }
           sink.putIntsBulk(s, n, bulkInts, bulkNullRows, nNulls)
-          true
         case DoubleType =>
           if (bulkDoubles.length < n) bulkDoubles = new Array[Double](n)
           var k = 0; r = 0
@@ -2209,7 +2103,6 @@ object ShardFormat {
             r += 1
           }
           sink.putDoublesBulk(s, n, bulkDoubles, bulkNullRows, nNulls)
-          true
         case FloatType =>
           if (bulkFloats.length < n) bulkFloats = new Array[Float](n)
           var k = 0; r = 0
@@ -2222,7 +2115,6 @@ object ShardFormat {
             r += 1
           }
           sink.putFloatsBulk(s, n, bulkFloats, bulkNullRows, nNulls)
-          true
         case ArrayType(FloatType, _) =>
           // embedding columns: per CELL one tight intBitsToFloat loop
           // over the chunk bytes (the cursor path paid a stream read
@@ -2242,7 +2134,6 @@ object ShardFormat {
             }
             r += 1
           }
-          true
         case ArrayType(IntegerType, _) =>
           // token-id columns: same per-cell tight loop as embeddings
           var k = 0; r = 0
@@ -2260,7 +2151,6 @@ object ShardFormat {
             }
             r += 1
           }
-          true
         case ArrayType(LongType, _) =>
           var k = 0; r = 0
           while (r < n) {
@@ -2277,7 +2167,6 @@ object ShardFormat {
             }
             r += 1
           }
-          true
         case StringType | BinaryType =>
           // variable-width cells served DIRECT from the chunk buffer —
           // no per-cell byte[] allocation, no stream; putBytes copies
@@ -2293,7 +2182,6 @@ object ShardFormat {
             }
             r += 1
           }
-          true
         case BooleanType =>
           var k = 0; r = 0
           while (r < n) {
@@ -2301,19 +2189,16 @@ object ShardFormat {
             else { sink.putBoolean(s, r, chunk(p) != 0); p += 1 }
             r += 1
           }
-          true
-        case _ => false
+        case other => throw new IllegalStateException(
+          s"graftshard: nextBatch over unsupported column type ${other.sql} " +
+            s"('${field.name}')")
       }
     }
 
-    /** Reconstructs a dictionary-form chunk into the raw layout and
-      * rebuilds its cursor — for consumers that want cells. */
+    /** Reconstructs a dictionary-form chunk into the raw layout — for
+      * a sink that declines the dictionary and takes cells. */
     private def materializeDict(i: Int): Unit = {
-      val dm = gDict(i)
-      val raw = dictMaterialize(dm)
-      gChunk(i) = raw
-      gCursor(i) = new DataInputStream(new java.io.ByteArrayInputStream(
-        raw, dm.bitmapLen, raw.length - dm.bitmapLen))
+      gChunk(i) = dictMaterialize(gDict(i))
       gDict(i) = null
     }
 
@@ -2519,70 +2404,18 @@ object ShardFormat {
       }
     }
 
-    /** Reconstructs a kept RLE/delta chunk into the raw layout and
-      * rebuilds its cursor — for consumers that want cells. */
-    private def materializeKept(i: Int): Unit = {
-      val bitmapLen = (gRows + 7) / 8
-      val raw =
-        if (gKept(i) == 3)
-          rleDecode(gChunk(i), bitmapLen, gRawLen(i), fields(i).dataType, file)
-        else
-          deltaDecode(gChunk(i), bitmapLen, gRawLen(i), fields(i).dataType, file)
-      gChunk(i) = raw
-      gCursor(i) = new DataInputStream(new java.io.ByteArrayInputStream(
-        raw, bitmapLen, raw.length - bitmapLen))
-      gKept(i) = 0
-    }
-
-    private def decodeInto(
-        d: DataInputStream, field: StructField, w: Int,
-        sink: BatchSink, s: Int, r: Int): Unit =
-      if (w == 1) sink.putLong(s, r, d.readInt().toLong) // widened int→long
-      else if (w == 2) sink.putDouble(s, r, d.readFloat().toDouble) // float→double
-      else field.dataType match {
-        case LongType => sink.putLong(s, r, d.readLong())
-        case _: DecimalType => sink.putLong(s, r, d.readLong()) // unscaled
-        case IntegerType => sink.putInt(s, r, d.readInt())
-        case DoubleType => sink.putDouble(s, r, d.readDouble())
-        case FloatType => sink.putFloat(s, r, d.readFloat())
-        case BooleanType => sink.putBoolean(s, r, d.readBoolean())
-        case StringType | BinaryType =>
-          val len = d.readInt()
-          val b = new Array[Byte](len)
-          d.readFully(b)
-          sink.putBytes(s, r, b, 0, len)
-        case ArrayType(FloatType, _) =>
-          val len = d.readInt()
-          if (floatScratch.length < len) floatScratch = new Array[Float](len)
-          var j = 0
-          while (j < len) { floatScratch(j) = d.readFloat(); j += 1 }
-          sink.putFloats(s, r, floatScratch, 0, len)
-        case ArrayType(IntegerType, _) =>
-          val len = d.readInt()
-          if (intScratch.length < len) intScratch = new Array[Int](len)
-          var j = 0
-          while (j < len) { intScratch(j) = d.readInt(); j += 1 }
-          sink.putInts(s, r, intScratch, 0, len)
-        case ArrayType(LongType, _) =>
-          val len = d.readInt()
-          if (longScratch.length < len) longScratch = new Array[Long](len)
-          var j = 0
-          while (j < len) { longScratch(j) = d.readLong(); j += 1 }
-          sink.putLongs(s, r, longScratch, 0, len)
-        case other => throw new IllegalStateException(
-          s"graftshard: nextBatch over unsupported column type ${other.sql} " +
-            s"('${field.name}') — the scan must refuse columnar reads for it")
-      }
     // reused across cells of the batch decode's array columns
     private var floatScratch: Array[Float] = Array.emptyFloatArray
     private var intScratch: Array[Int] = Array.emptyIntArray
     private var longScratch: Array[Long] = Array.emptyLongArray
 
-    private def loadGroup(): Boolean = {
+    /** Loads the next row group the skip predicate keeps; its row
+      * count, or -1 at clean EOF (the file is then closed). */
+    private def loadGroup(): Int = {
       while (true) {
         val rows =
           try in.readInt()
-          catch { case _: EOFException => in.close(); return false }
+          catch { case _: EOFException => in.close(); return -1 }
         // group-stats section (see the writer's flushGroup)
         val present = Map.newBuilder[String, (Long, Long, Long)]
         val allNull = Map.newBuilder[String, Long]
@@ -2638,90 +2471,40 @@ object ShardFormat {
                 b
               case 2 =>
                 val c = new Array[Byte](storedLen); in.readFully(c)
-                if (batchConsumer) {
-                  // keep the dictionary form: the batch path serves it
-                  // as (entries, ids) — see [[DictChunk]]; the encoded
-                  // buffer's bitmap prefix serves the null tests
-                  gDict(i) = parseDictChunk(c, bitmapLen, rawLen, file)
-                  c
-                } else dictDecode(c, bitmapLen, rawLen, file)
+                // keep the dictionary form: nextBatch serves it as
+                // (entries, ids) — see [[DictChunk]]; the encoded
+                // buffer's bitmap prefix serves the null tests
+                gDict(i) = parseDictChunk(c, bitmapLen, rawLen, file)
+                c
               case 3 =>
                 val c = new Array[Byte](storedLen); in.readFully(c)
-                if (batchConsumer && fixedNumeric(fields(i).dataType)) {
-                  // keep the RUN form: the batch path expands runs
-                  // straight into the typed scratch — never the raw
-                  // fixed-width reconstruction (bitmap prefix shared)
-                  gKept(i) = 3; gRawLen(i) = rawLen
+                if (fixedNumeric(fields(i).dataType)) {
+                  // keep the RUN form: nextBatch expands runs straight
+                  // into the typed scratch — never the raw fixed-width
+                  // reconstruction (bitmap prefix shared)
+                  gKept(i) = 3
                   c
                 } else rleDecode(c, bitmapLen, rawLen, fields(i).dataType, file)
               case 4 =>
                 val c = new Array[Byte](storedLen); in.readFully(c)
                 // delta only ever encodes integral chunks; keep in kind
-                if (batchConsumer && (fields(i).dataType == LongType ||
-                    fields(i).dataType == IntegerType)) {
-                  gKept(i) = 4; gRawLen(i) = rawLen
+                if (fields(i).dataType == LongType || fields(i).dataType == IntegerType) {
+                  gKept(i) = 4
                   c
                 } else deltaDecode(c, bitmapLen, rawLen, fields(i).dataType, file)
               case other => throw new java.io.IOException(
                 s"graftshard: unknown chunk codec $other in $file")
             }
             gChunk(i) = buf // bitmap prefix; the null test indexes it directly
-            gCursor(i) =
-              if (gDict(i) != null || gKept(i) != 0) null // kept encoded
-              else new DataInputStream(
-                new java.io.ByteArrayInputStream(buf, bitmapLen, buf.length - bitmapLen))
           }
           i += 1
         }
-        if (skip) {
-          physOrdinal += rows // the ordinal contract: skipped rows count
-          skippedGroups += 1
-        } else {
-          gRows = rows
-          gRow = 0
-          return true
-        }
+        if (!skip) return rows
+        physOrdinal += rows // the ordinal contract: skipped rows count
+        skippedGroups += 1
       }
-      false // unreachable
+      -1 // unreachable
     }
-
-    private def decodeOne(d: DataInputStream, field: StructField, w: Int): Any =
-      if (w == 1) java.lang.Long.valueOf(d.readInt().toLong) // widened int→long
-      else if (w == 2) java.lang.Double.valueOf(d.readFloat().toDouble) // float→double
-      else field.dataType match {
-        case LongType => java.lang.Long.valueOf(d.readLong())
-        case dec: DecimalType => // catalyst's own boxed currency
-          Decimal(d.readLong(), dec.precision, dec.scale)
-        case IntegerType => java.lang.Integer.valueOf(d.readInt())
-        case DoubleType => java.lang.Double.valueOf(d.readDouble())
-        case FloatType => java.lang.Float.valueOf(d.readFloat())
-        case BooleanType => java.lang.Boolean.valueOf(d.readBoolean())
-        case StringType =>
-          val b = new Array[Byte](d.readInt()); d.readFully(b)
-          UTF8String.fromBytes(b)
-        case BinaryType =>
-          val b = new Array[Byte](d.readInt()); d.readFully(b)
-          b
-        case ArrayType(FloatType, _) =>
-          val n = d.readInt()
-          val a = new Array[Float](n)
-          var j = 0
-          while (j < n) { a(j) = d.readFloat(); j += 1 }
-          new GenericArrayData(a)
-        case ArrayType(IntegerType, _) =>
-          val n = d.readInt()
-          val a = new Array[Int](n)
-          var j = 0
-          while (j < n) { a(j) = d.readInt(); j += 1 }
-          new GenericArrayData(a)
-        case ArrayType(LongType, _) =>
-          val n = d.readInt()
-          val a = new Array[Long](n)
-          var j = 0
-          while (j < n) { a(j) = d.readLong(); j += 1 }
-          new GenericArrayData(a)
-        case other => throw new IllegalStateException(s"unreachable: $other (${field.name})")
-      }
 
     def close(): Unit = in.close()
 

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -36,10 +35,9 @@ class GraftShardBloomSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.blmcat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_bloom_spec").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_bloom_spec")
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_bloom_spec").toString + "/t"
+  private def tmp(): String = TestSpark.tempDir("graft_bloom_spec") + "/t"
 
   /** Overwrites a shard file with garbage so any attempt to OPEN it
     * throws (bad magic) — the observable proof a bloom skip happened. */

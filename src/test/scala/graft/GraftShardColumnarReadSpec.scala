@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -10,13 +9,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * .supportColumnarReads]]): scans decode shard row groups
   * column-at-a-time into reused vectors — INCLUDING filters, metadata
   * columns, embeddings, merge-on-read delete vectors, live equality
-  * deletes, and pushed LIMITs (the row path remains only behind the
-  * columnarRead=false option, which these tests use as the reference).
-  * Pins: the batch path is byte-exact vs the row path across
-  * every scalar type, null pattern, and chunk codec (incl. the
-  * round-14 kept-encoded dictionary/RLE/delta forms and the bulk
+  * deletes, and pushed LIMITs. The batch decode is the only shard
+  * decoder, so every reference here is computed WITHOUT it: the
+  * DataFrame that was written (Spark evaluates it from `range`), or
+  * the expected rows in closed form. Pins: the batch read is
+  * byte-exact across every scalar type, null pattern, and chunk codec
+  * (incl. the kept-encoded dictionary/RLE/delta forms and the bulk
   * whole-group decode); it ACTUALLY engages (ColumnarToRow in the
-  * plan); rename and widening resolve inside the batch decode. */
+  * plan); rename and widening resolve inside the batch decode; the
+  * scan's skip counters report exact values. */
 class GraftShardColumnarReadSpec extends AnyFunSuite {
   private lazy val spark = {
     val s = TestSpark.spark
@@ -24,11 +25,10 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.colcat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_colread_spec").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_colread_spec")
   import spark.implicits._
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_colread_spec").toString + "/t"
+  private def tmp(): String = TestSpark.tempDir("graft_colread_spec") + "/t"
 
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
@@ -88,17 +88,21 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
     def canon(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Long)] =
       df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
     val got = canon(meta)
-    assert(got.size == 200)
-    assert(canon(spark.read.format("graftshard").option("columnarRead", "false")
-      .load(dir).select(col("_shard_file"), col("_pos"), col("id"))) == got)
+    // reference: coalesce(2) writes each file as one contiguous id run
+    // in write order, so file f's row k is (f, k, first id of f + k) —
+    // file names and row counts from the manifest
+    val files = graft.sources.v2.ShardFormat.readManifest(dir).get.files
+    val firstId = got.groupBy(_._1).map { case (f, rs) => f -> rs.map(_._3).min }
+    val want = files.flatMap(fe =>
+      (0L until fe.rows).map(k => (fe.name, k, firstId(fe.name) + k))).sorted
+    assert(files.map(_.rows).sum == 200L && got == want)
+    assert(got.map(_._3).sorted == (0L until 200L))
 
     // _pos stays the PHYSICAL ordinal under filtering (gaps preserved)
     val fm = t.where(col("id") % 7 === 0).select(col("_pos"), col("id"))
     assert(plan(fm).contains("ColumnarToRow"))
     val gotF = fm.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val wantF = spark.read.format("graftshard").option("columnarRead", "false")
-      .load(dir).where(col("id") % 7 === 0).select(col("_pos"), col("id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val wantF = want.filter(_._3 % 7 == 0).map(r => (r._2, r._3)).sorted
     assert(gotF == wantF)
 
     // pushed LIMIT caps per partition on the batch path too
@@ -147,14 +151,12 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
     val wantF = live.filter(_ % 97 < 10)
     assert(gotF == wantF)
 
-    // byte-exact vs the row path on the full projection
+    // byte-exact on the full projection: the live rows as written
     val dir = s"$warehouse/mor/t"
-    val viaRow = spark.read.format("graftshard")
-      .option("columnarRead", "false").load(dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted.toSeq
+    val want = live.map(id => (id, id % 97, s"s$id"))
     val viaBatch = spark.read.format("graftshard").load(dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted.toSeq
-    assert(viaBatch == viaRow)
+    assert(viaBatch == want)
   }
 
   test("filtered scans stay columnar: all-match, partial, and zero-match batches equal the row path") {
@@ -166,13 +168,12 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
     wideRows(700, 300).coalesce(1)
       .write.format("graftshard").option("compression", "deflate").mode("append").save(dir)
     val t = spark.read.format("graftshard").load(dir)
-    val rowT = spark.read.format("graftshard")
-      .option("columnarRead", "false").load(dir)
+    val written = wideRows(0, 400).union(wideRows(400, 300)).union(wideRows(700, 300))
 
     // one predicate per shape: integral range (partial match), string
     // equality (sparse match), IsNull, In, StringStartsWith, and a
     // conjunction — each must engage the batch path AND agree with the
-    // row path exactly
+    // written rows exactly
     val preds = Seq(
       col("id") >= 250L && col("id") < 800L,
       col("s") === "s124",
@@ -191,7 +192,7 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
       val c = t.where(p)
       assert(plan(c).contains("ColumnarToRow"),
         s"filtered scan must stay columnar for $p:\n${plan(c)}")
-      assert(canon(c) == canon(rowT.where(p)), s"columnar vs row mismatch for $p")
+      assert(canon(c) == canon(written.where(p)), s"columnar vs written mismatch for $p")
     }
 
     // zero-match everywhere (stats prune most; any surviving batch
@@ -227,16 +228,13 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
     assert(got.toSeq == want)
 
     // filtered embedding scan (the 100 TB curation shape): columnar,
-    // exact against the row path
+    // exact against the written rows
     val f = t.where(col("id") % 2 === 0 || col("id") < 20)
     val fc = t.where(col("id") >= 20L && col("id") < 40L)
     assert(plan(fc).contains("ColumnarToRow"))
     val a = fc.collect().map(r =>
       (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[Float](1).toList)).sortBy(_._1)
-    val b = spark.read.format("graftshard").option("columnarRead", "false").load(dir)
-      .where(col("id") >= 20L && col("id") < 40L).collect().map(r =>
-      (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[Float](1).toList)).sortBy(_._1)
-    assert(a.toSeq == b.toSeq)
+    assert(a.toSeq == want.slice(20, 40).map(w => (w._1, w._2)))
     assert(f.count() == 110)
   }
 
@@ -251,6 +249,16 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
     assert(hit.collect().map(_.getLong(0)).sorted.toSeq ==
       (0L until 300L).filter(_ % 50 == 7))
     assert(t.where(col("k") === "nope").count() == 0)
+    // the scan's bloom counter: every file holds all 50 keys, so "k7"
+    // opens all 3; "k7x" sits inside every file's [k0, k9] string
+    // bounds (no manifest pruning) but in no bloom filter — 0 opened
+    def bloomSkipped(df: DataFrame): Long = {
+      df.collect()
+      TestSpark.scanMetric(df, "bloomSkippedFiles")
+    }
+    assert(bloomSkipped(t.where(col("k") === "k7")) == 0L)
+    val miss = t.where(col("k") === "k7x")
+    assert(bloomSkipped(miss) == 3L)
   }
 
   test("rename and int->long widening resolve inside the batch decode") {
@@ -294,8 +302,14 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
     val got = canon(t)
     assert(got.size == 5000, s"${got.size}")
     assert(got.count(_._2 == -2L) == 200 && got.count(_._2 == -1L) == 600)
-    assert(canon(spark.read.format("graftshard")
-      .option("columnarRead", "false").load(dir)) == got)
+    // reference: the later upsert wins per key, untouched keys keep
+    // their base row
+    val want = (0L until 5000L).map { id =>
+      if (id >= 400 && id < 600) (id, -2L, "u2")
+      else if (id < 800) (id, -1L, "u1")
+      else (id, id * 10, s"r$id")
+    }
+    assert(got == want)
 
     // eq-delete key pruned from the projection: the anti-filter still
     // needs the key value (eq-only staging column)
@@ -329,8 +343,14 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
       .option("compression", "dict").mode("overwrite").save(dir)
 
     val t = spark.read.format("graftshard").load(dir)
-    val rowT = spark.read.format("graftshard")
-      .option("columnarRead", "false").load(dir)
+    val written = spark.range(0, 120000).select(
+      col("id"),
+      lit(2.5).as("cd"),
+      lit(1.5f).as("cf"),
+      when(col("id") % 11 =!= 0,
+        (col("id") / 10000L).cast("long") * 100L).as("rl"),
+      when(col("id") % 7 =!= 0, col("id").cast("int")).as("di"),
+      (col("id") * 3).as("dl"))
     assert(plan(t).contains("ColumnarToRow"))
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1), r.getFloat(2),
@@ -339,7 +359,7 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
         r.getLong(5))).sortBy(_._1).toSeq
     val got = canon(t)
     assert(got.size == 120000)
-    assert(got == canon(rowT), "kept-codec batch decode must equal the row path")
+    assert(got == canon(written), "kept-codec batch decode must equal the written rows")
     // decoded VALUES, not just parity
     assert(got(34) == ((34L, 2.5, 1.5f, 0L, 34, 102L)))
     assert(got(33)._4 == null) // 33 % 11 == 0
@@ -348,12 +368,12 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
     // aggregates over the kept columns (sum over delta ints exercises
     // the widen-free int scatter; avg over RLE doubles the fill)
     val a = t.agg(sum("di"), avg("cd"), sum("rl"), sum("dl")).head
-    val b = rowT.agg(sum("di"), avg("cd"), sum("rl"), sum("dl")).head
+    val b = written.agg(sum("di"), avg("cd"), sum("rl"), sum("dl")).head
     assert(a == b)
     // filtered: kept chunks under the selection pass (boxOf reads the
     // staged vectors the bulk fills populated)
     val f = t.where(col("rl") === 500L).count()
-    assert(f == rowT.where(col("rl") === 500L).count() && f > 0)
+    assert(f == written.where(col("rl") === 500L).count() && f > 0)
   }
 
   test("dictionary-at-rest strings serve through vector dictionaries: 1B/2B ids, nulls, filters, dict+raw chunks in one scan") {
@@ -376,8 +396,7 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
       .mode("append").save(dir)
 
     val t = spark.read.format("graftshard").load(dir)
-    val rowT = spark.read.format("graftshard")
-      .option("columnarRead", "false").load(dir)
+    val written = mk(0, 30000).union(mk(30000, 170000))
     assert(plan(t).contains("ColumnarToRow"),
       s"dict-at-rest scans must stay columnar:\n${plan(t)}")
     def canon(df: org.apache.spark.sql.DataFrame): Seq[(Long, String, String, String)] =
@@ -386,8 +405,8 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
         r.getString(2), r.getString(3))).sortBy(_._1).toSeq
     val got = canon(t)
     assert(got.size == 200000)
-    assert(got == canon(rowT))
-    // spot-check the decoded VALUES, not just batch-vs-row agreement
+    assert(got == canon(written))
+    // spot-check the decoded VALUES, not just batch-vs-written agreement
     assert(got(30001) == ((30001L, s"k${30001 % 50}", s"v${30001 % 1200}", "u30001")))
     assert(got(30006)._2 == null) // 30006 % 9 == 0 -> null behind the dict
 
@@ -396,14 +415,14 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
     val f = t.where(col("lo") === "k7").select(col("id"), col("hi"))
     assert(plan(f).contains("ColumnarToRow"))
     val gotF = f.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-    val wantF = rowT.where(col("lo") === "k7").select(col("id"), col("hi"))
+    val wantF = written.where(col("lo") === "k7").select(col("id"), col("hi"))
       .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
     assert(gotF == wantF && gotF.nonEmpty)
 
     // aggregation over a dict column (the curation GROUP BY lang shape)
     val agg = t.groupBy("lo").count().collect()
       .map(r => (if (r.isNullAt(0)) null else r.getString(0), r.getLong(1))).sortBy(t => s"${t._1}").toSeq
-    val aggRow = rowT.groupBy("lo").count().collect()
+    val aggRow = written.groupBy("lo").count().collect()
       .map(r => (if (r.isNullAt(0)) null else r.getString(0), r.getLong(1))).sortBy(t => s"${t._1}").toSeq
     assert(agg == aggRow)
   }
@@ -425,12 +444,11 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
       .write.format("graftshard").option("compression", "dict")
       .mode("append").save(dir)
     val t = spark.read.format("graftshard").load(dir)
-    val rowT = spark.read.format("graftshard")
-      .option("columnarRead", "false").load(dir)
+    val written = mk(0, 20000).union(mk(20000, 80000))
     def chk(p: org.apache.spark.sql.Column, wantRows: Boolean = true): Unit = {
       val a = t.where(p).collect().map(_.toString).sorted.toSeq
-      val b = rowT.where(p).collect().map(_.toString).sorted.toSeq
-      assert(a == b, s"batch vs row disagree under $p")
+      val b = written.where(p).collect().map(_.toString).sorted.toSeq
+      assert(a == b, s"batch read vs written rows disagree under $p")
       if (wantRows) assert(a.nonEmpty, s"vacuous check: $p matched nothing")
     }
     chk(col("lang") === "lang7")
@@ -457,18 +475,21 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
       .option("compression", "dict").option("upsertKey", "k")
       .mode("append").save(dir)
     val t = spark.read.format("graftshard").load(dir)
-    val rowT = spark.read.format("graftshard")
-      .option("columnarRead", "false").load(dir)
+    // reference: the base rows minus the upserted keys, plus the upserts
+    val written = spark.range(0, 50000).select(
+      concat(lit("doc"), col("id") % 500).as("k"), col("id").as("v"))
+      .where(!col("k").isin("doc7", "doc13"))
+      .union(Seq(("doc7", -7L), ("doc13", -13L)).toDF("k", "v"))
     assert(plan(t).contains("ColumnarToRow"), plan(t))
     val got = t.collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
-    assert(got == rowT.collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq)
+    assert(got == written.collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq)
     // 100 base rows deleted per upserted key, one insert each
     assert(got.size == 50000 - 200 + 2)
     assert(got.count(_._1 == "doc7") == 1 && got.contains(("doc7", -7L)))
     // composed with a domain-evaluated filter on the same column
     val f = t.where(col("k").isin("doc7", "doc8"))
     val gotF = f.collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
-    val wantF = rowT.where(col("k").isin("doc7", "doc8"))
+    val wantF = written.where(col("k").isin("doc7", "doc8"))
       .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
     assert(gotF == wantF && gotF.size == 1 + 100)
   }

@@ -2,7 +2,6 @@ package graft
 
 import java.io.{BufferedOutputStream, DataOutputStream, File, FileOutputStream}
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,8 +16,7 @@ import graft.sources.v2.ShardFormat
 class GraftShardColumnarSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_columnar_spec").toString + "/t"
+  private def tmp(): String = TestSpark.tempDir("graft_columnar_spec") + "/t"
 
   test("multi-group roundtrip: row counts past GroupMaxRows, pruning, filters, order") {
     val dir = tmp()
@@ -49,7 +47,7 @@ class GraftShardColumnarSpec extends AnyFunSuite {
   }
 
   test("delete vectors select the right physical ordinals across group boundaries") {
-    val wh = Files.createTempDirectory("graft_columnar_mor").toString
+    val wh = TestSpark.tempDir("graft_columnar_mor")
     spark.conf.set("spark.sql.catalog.colcat", classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.colcat.warehouse", wh)
     spark.sql("CREATE NAMESPACE colcat.g")
@@ -76,9 +74,7 @@ class GraftShardColumnarSpec extends AnyFunSuite {
     val lo = 2L * ShardFormat.GroupMaxRows + 10
     val r = new ShardFormat.ShardReader(f, m.schema, Array(0, 1),
       skipGroup = gs => gs.stats.get("id").exists(_._2 < lo))
-    val vals = new Array[Any](2)
-    val got = Iterator.continually(if (r.next(vals)) Some((vals(0), r.ordinal)) else None)
-      .takeWhile(_.isDefined).flatten.toVector
+    val got = ShardReads.rows(r, 2).map { case (vals, ordinal) => (vals(0), ordinal) }
     assert(r.groupsSkipped == 2, s"expected 2 skipped groups, got ${r.groupsSkipped}")
     // first served row: ordinal = its physical position despite the gaps
     assert(got.head._2 == 2L * ShardFormat.GroupMaxRows)
@@ -92,10 +88,14 @@ class GraftShardColumnarSpec extends AnyFunSuite {
       .collect()(0)
     assert((sel.getLong(0), sel.getLong(1), sel.getLong(2)) ==
       ((n - lo, lo, 2L * (n - 1))))
+    // the scan publishes the same count as its groupsSkipped metric
+    val scan = t.where(col("id") >= lo).select("id")
+    assert(scan.collect().length == n - lo)
+    assert(TestSpark.scanMetric(scan, "groupsSkipped") == 2L)
   }
 
   test("group skipping composes with delete vectors: dv catch-up across skipped groups") {
-    val wh = Files.createTempDirectory("graft_gskip_mor").toString
+    val wh = TestSpark.tempDir("graft_gskip_mor")
     spark.conf.set("spark.sql.catalog.gscat", classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gscat.warehouse", wh)
     spark.sql("CREATE NAMESPACE gscat.g")
@@ -137,15 +137,23 @@ class GraftShardColumnarSpec extends AnyFunSuite {
       skipGroup = gs => !gs.strStats.get("lang").exists { case (mn, mx, _) =>
         ja.compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(mn)) >= 0 &&
           ja.compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(mx)) <= 0 })
-    val vals = new Array[Any](2)
-    var served = 0L
-    while (r.next(vals)) served += 1
+    val served = ShardReads.rows(r, 2).size.toLong
     assert(r.groupsSkipped > 0, s"lang bounds must skip groups (served=$served)")
     assert(served < n, "some rows must be dropped with their groups")
     // end-to-end: absorbed string equality gives exact answers
     val t = spark.read.format("graftshard").load(dir)
     assert(t.where(col("lang") === "ja").count() == n.toLong - (n * 3L / 4))
     assert(t.where(col("lang") === "en").count() == (n * 2L / 4) - (n / 4))
+    // groupsSkipped metric, exact: groups hold ids [0, G), [G, 2G),
+    // [2G, 3G) and 'ja' is ids >= 2.25G, so only the last group can
+    // match; 'de' (ids < 0.75G) only the first
+    def skipped(lang: String): Long = {
+      val q = t.where(col("lang") === lang).select("id")
+      q.collect()
+      TestSpark.scanMetric(q, "groupsSkipped")
+    }
+    assert(r.groupsSkipped == 2)
+    assert(skipped("ja") == 2L && skipped("de") == 2L && skipped("en") == 1L)
   }
 
   test("opt-in chunk compression: deflate roundtrips exactly, shrinks text, skips still work") {
@@ -216,7 +224,7 @@ class GraftShardColumnarSpec extends AnyFunSuite {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("s", org.apache.spark.sql.types.StringType)))
     val r = new ShardFormat.ShardReader(f, schema, Array(0))
-    val e = intercept[java.io.IOException] { r.next(new Array[Any](1)) }
+    val e = intercept[java.io.IOException] { ShardReads.rows(r, 1) }
     assert(e.getMessage.contains("short inflate"), e.getMessage)
   }
 
@@ -242,11 +250,8 @@ class GraftShardColumnarSpec extends AnyFunSuite {
     assert(fe.strStats.get("good").map(s => (s._1, s._2)) == Some(("aa", "zz")))
     // the payload itself is byte-exact either way
     val r = new ShardFormat.ShardReader(f, schema, Array(0, 1))
-    val vals = new Array[Any](2)
-    assert(r.next(vals))
-    assert(java.util.Arrays.equals(
-      vals(0).asInstanceOf[UTF8String].getBytes, Array(0xF0.toByte)))
-    r.close()
+    val (vals, _) = ShardReads.rows(r, 2).head
+    assert(java.util.Arrays.equals(vals(0).asInstanceOf[Array[Byte]], Array(0xF0.toByte)))
   }
 
   test("dictionary codec: low-cardinality string chunks shrink with no inflate tax; exact roundtrip") {
@@ -423,7 +428,7 @@ class GraftShardColumnarSpec extends AnyFunSuite {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType)))
     val r = new ShardFormat.ShardReader(f, schema, Array(0))
-    val e = intercept[java.io.IOException] { r.next(new Array[Any](1)) }
+    val e = intercept[java.io.IOException] { ShardReads.rows(r, 1) }
     assert(e.getMessage.contains("corrupt delta chunk"), e.getMessage)
   }
 
@@ -452,7 +457,7 @@ class GraftShardColumnarSpec extends AnyFunSuite {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType)))
     val r = new ShardFormat.ShardReader(f, schema, Array(0))
-    val e = intercept[java.io.IOException] { r.next(new Array[Any](1)) }
+    val e = intercept[java.io.IOException] { ShardReads.rows(r, 1) }
     assert(e.getMessage.contains("corrupt RLE chunk"), e.getMessage)
   }
 

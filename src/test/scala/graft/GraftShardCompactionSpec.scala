@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,8 +18,7 @@ class GraftShardCompactionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_compact_spec").toString + "/t"
+  private def tmp(): String = TestSpark.tempDir("graft_compact_spec") + "/t"
 
   private def shardFiles(dir: String): Set[String] =
     Option(new File(dir).listFiles()).getOrElse(Array.empty)
@@ -176,7 +174,7 @@ class GraftShardCompactionSpec extends AnyFunSuite {
   }
 
   test("row-level rewrites keep the table's recorded compression (CoW and MoR inserts)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_compress_rl").toString
+    val wh = TestSpark.tempDir("graft_compress_rl")
     spark.conf.set("spark.sql.catalog.czcat", classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.czcat.warehouse", wh)
     spark.sql("CREATE NAMESPACE czcat.g")
@@ -278,5 +276,67 @@ class GraftShardCompactionSpec extends AnyFunSuite {
       planned, m(4, fe("a.shard"), fe("b.shard", Some("dv-old.dvs"), 2L),
         fe("d.shard", Some("dv-d.dvs"), 1L)),
       Set("a.shard", "b.shard")).isEmpty)
+  }
+
+  /** The compacted table's rows in physical order (one output file):
+    * (_pos, id, s). */
+  private def physicalRows(dir: String): Seq[(Long, Long, String)] = {
+    val m = ShardFormat.readManifest(dir).get
+    assert(m.files.size == 1, s"expected one compacted file: ${m.files.map(_.name)}")
+    spark.read.format("graftshard").load(dir)
+      .select(col("_pos"), col("id"), col("s")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sortBy(_._1).toSeq
+  }
+
+  test("k-way merge over multi-group, dictionary-encoded runs: exact merged order and values") {
+    // two sorted runs, each MORE than one row group, interleaving ids
+    // (evens then odds): every merge step alternates between heads, so
+    // a head held across its reader's advance must be a copy
+    val dir = tmp()
+    val half = ShardFormat.GroupMaxRows + 4464L // 70000 rows per run
+    def run(parity: Long, mode: String): Unit =
+      spark.range(0, half).select((col("id") * 2 + parity).as("id"))
+        .select(col("id"), lit(0L).as("k"), concat(lit("s"), col("id") % 50).as("s"))
+        .coalesce(1).write.format("graftshard")
+        .option("partitionKey", "k").option("sortWithinShards", "id")
+        .option("compression", "dict").mode(mode).save(dir)
+    run(0L, "overwrite")
+    run(1L, "append")
+    val m0 = ShardFormat.readManifest(dir).get
+    assert(m0.files.size == 2 && m0.files.forall(_.rows == half))
+    val report = GraftShardMaintenance.compact(spark, dir, targetBytes = Long.MaxValue)
+    assert(report.groups == 1 && report.replaced.size == 2)
+    val got = physicalRows(dir)
+    assert(got == (0L until 2 * half).map(id => (id, id, s"s${id % 50}")))
+  }
+
+  test("z-merge over multi-group, dictionary-encoded z-runs: exact merged order and values") {
+    // a 384x384 grid split by id parity into two z-ordered runs of
+    // 73,728 rows (two row groups each); (x, y) is unique, so the
+    // merged Morton order is exact. zorderBy resolves its sort function
+    // through the catalog
+    val warehouse = TestSpark.tempDir("graft_compact_z")
+    spark.conf.set("spark.sql.catalog.cmzcat", classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.cmzcat.warehouse", warehouse)
+    spark.sql("CREATE NAMESPACE cmzcat.z")
+    def run(parity: Long) = {
+      spark.range(0, 384L * 384L).where(col("id") % 2 === parity)
+        .select(col("id"), (col("id") % 384).as("x"), (col("id") / 384).cast("long").as("y"),
+          concat(lit("s"), col("id") % 40).as("s"))
+        .writeTo("cmzcat.z.t").using("graftshard").option("zorderBy", "x,y")
+        .option("writePartitions", "1").option("compression", "dict")
+    }
+    run(0L).create()
+    run(1L).append()
+    val dir = s"$warehouse/z/t"
+    val m0 = ShardFormat.readManifest(dir).get
+    assert(m0.zorderBy.contains(("x", "y")) && m0.files.size == 2)
+    assert(m0.files.forall(_.rows > ShardFormat.GroupMaxRows))
+    val report = GraftShardMaintenance.compact(spark, dir, targetBytes = Long.MaxValue)
+    assert(report.groups == 1 && report.replaced.size == 2)
+    val got = physicalRows(dir)
+    val want = (0L until 384L * 384L).sortBy(id => ShardFormat.zOrderOf(id % 384, id / 384))
+      .zipWithIndex.map { case (id, pos) => (pos.toLong, id, s"s${id % 40}") }
+    assert(got == want)
   }
 }

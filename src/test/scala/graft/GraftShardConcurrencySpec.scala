@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.Executors
 
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -23,8 +22,7 @@ class GraftShardConcurrencySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_conc_spec").toString + "/t"
+  private def tmp(): String = TestSpark.tempDir("graft_conc_spec") + "/t"
 
   test("16 parallel appends: every commit lands, versions strictly sequential, zero lost rows") {
     val dir = tmp()

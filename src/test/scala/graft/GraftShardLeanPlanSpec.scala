@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
 import org.apache.spark.sql.functions._
@@ -24,8 +23,7 @@ class GraftShardLeanPlanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_leanplan_spec").toString + "/t"
+  private def tmp(): String = TestSpark.tempDir("graft_leanplan_spec") + "/t"
 
   private val empty = CaseInsensitiveStringMap.empty()
 
@@ -176,7 +174,7 @@ class GraftShardLeanPlanSpec extends AnyFunSuite {
 
     // AvailableNow bootstrap with a 3-file cap: the stream's offset
     // math and batch planning run the segment-streamed path per trigger
-    val outDir = Files.createTempDirectory("graft_leanplan_stream").toString
+    val outDir = TestSpark.tempDir("graft_leanplan_stream")
     val q = spark.readStream.format("graftshard")
       .option("maxFilesPerTrigger", "3").load(dir)
       .writeStream.format("parquet")

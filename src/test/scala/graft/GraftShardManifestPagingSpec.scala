@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -34,8 +33,7 @@ class GraftShardManifestPagingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_paging_spec").toString + "/t"
+  private def tmp(): String = TestSpark.tempDir("graft_paging_spec") + "/t"
 
   private def segFiles(dir: String): Map[String, Long] =
     Option(new File(dir).listFiles()).getOrElse(Array.empty)
@@ -98,7 +96,7 @@ class GraftShardManifestPagingSpec extends AnyFunSuite {
 
   test("a merge-on-read delete dirties exactly its segment; reuse never publishes stale bytes") {
     withSegmentCap(2) {
-      val warehouse = Files.createTempDirectory("graft_paging_cat").toString
+      val warehouse = TestSpark.tempDir("graft_paging_cat")
       spark.conf.set("spark.sql.catalog.pgcat", classOf[graft.sources.v2.GraftCatalog].getName)
       spark.conf.set("spark.sql.catalog.pgcat.warehouse", warehouse)
       spark.sql("CREATE NAMESPACE IF NOT EXISTS pgcat.pg")

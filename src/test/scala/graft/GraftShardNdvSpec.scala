@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,10 +24,9 @@ class GraftShardNdvSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.ndvcat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_ndv_spec").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_ndv_spec")
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_ndv_spec").toString + "/t"
+  private def tmp(): String = TestSpark.tempDir("graft_ndv_spec") + "/t"
 
   test("rolled-up estimate tracks exact distinct counts across files and types") {
     val dir = tmp()

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -25,10 +24,9 @@ class GraftShardPartitionEvolutionSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.pecat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_pe_spec").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_pe_spec")
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_pe_spec").toString + "/t"
+  private def tmp(): String = TestSpark.tempDir("graft_pe_spec") + "/t"
 
   private def scanDesc(df: DataFrame): String =
     df.queryExecution.executedPlan.toString

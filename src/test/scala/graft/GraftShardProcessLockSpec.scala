@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 import java.util.concurrent.Executors
 
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -31,8 +30,7 @@ class GraftShardProcessLockSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_proclock_spec").toString + "/t"
+  private def tmp(): String = TestSpark.tempDir("graft_proclock_spec") + "/t"
 
   /** Forks `CommitStressChild` with this test JVM's classpath (tests
     * fork, so java.class.path is the real one). */

@@ -25,10 +25,9 @@ class GraftShardRollbackSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.rbcat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_rollback_spec").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_rollback_spec")
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_rollback_spec").toString + "/t"
+  private def tmp(): String = TestSpark.tempDir("graft_rollback_spec") + "/t"
 
   private def shardSnapshot(dir: String): Map[String, Long] =
     Option(new File(dir).listFiles()).getOrElse(Array.empty)

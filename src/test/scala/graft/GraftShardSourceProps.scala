@@ -137,10 +137,10 @@ object GraftShardSourceProps extends Properties("GraftShardSource") {
       val got = back.collect().toSeq.map(canon).sortBy(_.toString())
       val ok = got == exp
       if (!ok) println(s"MISMATCH dir=$dir codec=$codec\n  exp=$exp\n  got=$got")
-      // columnar-vs-row A/B: since round 13 the batch path covers the
-      // FULL schema (array<float> included) and FILTERED scans — both
-      // must be value-identical to the row decode for every random
-      // payload and codec
+      // raw-bits check against the written rows: the batch decode covers
+      // the FULL schema (array<float> included) and FILTERED scans —
+      // both must be value-identical to what was written, for every
+      // random payload and codec
       val scalarCols = schema.fieldNames.filterNot(_ == "c_vec")
       // raw-bits view: strictly exact AND NaN-safe (Scala's Any == on
       // boxed floats is numeric, so NaN != NaN would flag equal cells)
@@ -153,15 +153,14 @@ object GraftShardSourceProps extends Properties("GraftShardSource") {
             case x => x
           }).sortBy(_.toString())
       val viaBatch = normed(spark.read.format("graftshard").load(dir))
-      val viaRows = normed(spark.read.format("graftshard")
-        .option("columnarRead", "false").load(dir))
-      val abOk = viaBatch == viaRows
+      val written = normed(df)
+      val abOk = viaBatch == written
       if (!abOk) println(s"COLREAD MISMATCH dir=$dir codec=$codec\n" +
-        s"  batch=$viaBatch\n  rows=$viaRows")
-      // filtered A/B (absorbed predicates now evaluate against the
-      // decoded batch): a value-dependent range, a null-test conjunct,
-      // and an IsNull — each must match the row path exactly, INCLUDING
-      // the vector column riding along in the projection
+        s"  batch=$viaBatch\n  written=$written")
+      // filtered (absorbed predicates evaluate against the decoded
+      // batch): a value-dependent range, a null-test conjunct, and an
+      // IsNull — each must match Spark's own filter over the written
+      // rows exactly, INCLUDING the vector column riding along
       import org.apache.spark.sql.functions.col
       def canonAll(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
         df.collect().toSeq.map(canon).sortBy(_.toString())
@@ -177,11 +176,10 @@ object GraftShardSourceProps extends Properties("GraftShardSource") {
         col("c_ts").isNotNull && col("c_date") < java.sql.Date.valueOf("2000-01-01"))
       val fOk = preds.forall { p =>
         val fb = canonAll(spark.read.format("graftshard").load(dir).where(p))
-        val fr = canonAll(spark.read.format("graftshard")
-          .option("columnarRead", "false").load(dir).where(p))
+        val fr = canonAll(df.where(p))
         val same = fb == fr
         if (!same) println(s"FILTERED COLREAD MISMATCH dir=$dir codec=$codec pred=$p\n" +
-          s"  batch=$fb\n  rows=$fr")
+          s"  batch=$fb\n  written=$fr")
         same
       }
       ok && abOk && fOk

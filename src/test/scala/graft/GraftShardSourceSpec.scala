@@ -22,8 +22,7 @@ class GraftShardSourceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_shard_spec").toString + "/t"
+  private def tmp(): String = TestSpark.tempDir("graft_shard_spec") + "/t"
 
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("n", IntegerType),
@@ -719,7 +718,7 @@ class GraftShardSourceSpec extends AnyFunSuite {
   }
 
   test("string stats: file skipping, exact bounds, prefix pruning, metadata DELETE on strings") {
-    val wh = Files.createTempDirectory("graft_strstats_cat").toString
+    val wh = TestSpark.tempDir("graft_strstats_cat")
     spark.conf.set("spark.sql.catalog.strcat", classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.strcat.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS strcat.s")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -18,8 +17,7 @@ class GraftShardStreamSinkSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft_sink_$name").toString
+  private def tmp(name: String): String = TestSpark.tempDir(s"graft_sink_$name")
 
   test("append-mode sink: epochs accumulate exactly once; restart with same checkpoint re-appends nothing") {
     val dir = tmp("append") + "/t"

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -20,11 +19,10 @@ class GraftShardTimePartitionSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.tpcat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_tp_spec").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_tp_spec")
   import spark.implicits._
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_tp_spec_t").toString + "/t"
+  private def tmp(): String = TestSpark.tempDir("graft_tp_spec_t") + "/t"
 
   private val Epoch0 = 1704067200000000L // 2024-01-01T00:00:00Z
   private val Day = 86400000000L

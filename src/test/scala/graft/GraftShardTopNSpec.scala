@@ -23,8 +23,7 @@ class GraftShardTopNSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_topn_spec").toString + "/t"
+  private def tmp(): String = TestSpark.tempDir("graft_topn_spec") + "/t"
 
   private def scanOf(df: DataFrame): BatchScanExec =
     df.queryExecution.executedPlan
@@ -110,7 +109,7 @@ class GraftShardTopNSpec extends AnyFunSuite {
   }
 
   test("merge-on-read deletes: conservative cut, byte-exact result") {
-    val warehouse = Files.createTempDirectory("graft_topn_mor").toString
+    val warehouse = TestSpark.tempDir("graft_topn_mor")
     spark.conf.set("spark.sql.catalog.topncat", classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.topncat.warehouse", warehouse)
     spark.sql("CREATE NAMESPACE topncat.tn")

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -34,11 +33,10 @@ class GraftShardUpsertSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.upcat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_upsert_cat").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_upsert_cat")
   import spark.implicits._
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_upsert_spec").toString + "/t"
+  private def tmp(): String = TestSpark.tempDir("graft_upsert_spec") + "/t"
 
   private def base(dir: String): Unit =
     spark.range(0, 100).select(col("id"), col("id").as("v"))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,11 +24,10 @@ class GraftShardWapSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.wapcat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_wap_spec").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_wap_spec")
   import spark.implicits._
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft_wap_spec").toString + "/t"
+  private def tmp(): String = TestSpark.tempDir("graft_wap_spec") + "/t"
 
   test("stage -> audit -> publish: invisible, auditable, then pointer-atomic") {
     spark.sql("CREATE NAMESPACE wapcat.a")
@@ -198,7 +196,7 @@ class GraftShardWapSpec extends AnyFunSuite {
 
   test("streaming WAP: epochs stage on a branch, live stays invisible, publish folds the replay guard") {
     val dir = tmp()
-    val ckpt = Files.createTempDirectory("graft_wap_stream_ckpt").toString
+    val ckpt = TestSpark.tempDir("graft_wap_stream_ckpt")
     // live base the stream must NOT touch while staging
     spark.range(0, 10).select(col("id"), (col("id") * 2L).as("v"))
       .coalesce(1).write.format("graftshard").mode("overwrite").save(dir)
@@ -272,7 +270,7 @@ class GraftShardWapSpec extends AnyFunSuite {
 
   test("streaming WAP: dropping the staging branch discards its epochs BY DESIGN; later data re-forks") {
     val dir = tmp()
-    val ckpt = Files.createTempDirectory("graft_wap_drop_ckpt").toString
+    val ckpt = TestSpark.tempDir("graft_wap_drop_ckpt")
     spark.range(0, 10).select(col("id"), (col("id") * 2L).as("v"))
       .coalesce(1).write.format("graftshard").mode("overwrite").save(dir)
     implicit val sqlCtx = spark.sqlContext

@@ -105,9 +105,7 @@ class GraftShardZOrderSpec extends AnyFunSuite {
         gs.stats.get("y").exists { case (mn, mx, _) => mx >= 100 && mn <= 120 })
     val r = new ShardFormat.ShardReader(new java.io.File(zdir, fe.name),
       m.schema, Array(0, 1), skipGroup = box)
-    val vals = new Array[Any](2)
-    var served = 0L
-    while (r.next(vals)) served += 1
+    val served = ShardReads.rows(r, 2).size.toLong
     assert(r.groupsSkipped > 0,
       s"a selective 2-D box must skip z-ordered row groups (served=$served)")
     assert(served < fe.rows, "some rows must be dropped with their groups")
@@ -115,6 +113,20 @@ class GraftShardZOrderSpec extends AnyFunSuite {
     val got = spark.table("zcat.gs.z")
       .where(col("x").between(100, 120) && col("y").between(100, 120)).count()
     assert(got == 21L * 21L)
+    // and its groupsSkipped metric is exactly the direct reader's count
+    // summed over the files the manifest stats do not prune
+    def inBox(fe: ShardFormat.FileEntry): Boolean =
+      Seq("x", "y").forall(c => fe.stats.get(c).forall { case (mn, mx, _) => mx >= 100 && mn <= 120 })
+    val want = m.files.filter(inBox).map { f =>
+      val fr = new ShardFormat.ShardReader(new java.io.File(zdir, f.name),
+        m.schema, Array(0, 1), skipGroup = box)
+      ShardReads.rows(fr, 2)
+      fr.groupsSkipped.toLong
+    }.sum
+    val q = spark.table("zcat.gs.z")
+      .where(col("x").between(100, 120) && col("y").between(100, 120)).select("v")
+    assert(q.collect().length == 21 * 21)
+    assert(want > 0 && TestSpark.scanMetric(q, "groupsSkipped") == want)
   }
 
   test("zorderBy is a table property: OPTIMIZE k-way z-merges (outputs stay z-runs); undeclared appends clear it") {

@@ -1,10 +1,16 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 
 /** Shared session for all specs (one JVM per `sbt test` run). */
 object TestSpark {
@@ -19,6 +25,44 @@ object TestSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  // directories made by tempDir, deleted when the test JVM exits
+  private val tempDirs = new ConcurrentLinkedQueue[File]()
+  private lazy val deleteTempDirsAtExit: Unit =
+    sys.addShutdownHook(tempDirs.forEach(d => deleteRecursively(d))): Unit
+
+  private def deleteRecursively(f: File): Unit = {
+    if (f.isDirectory && !Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
+    f.delete(): Unit
+  }
+
+  /** A fresh directory under `java.io.tmpdir`, named `prefix` plus a
+    * random suffix, deleted with everything in it when the test JVM
+    * exits. */
+  def tempDir(prefix: String): String = {
+    deleteTempDirsAtExit
+    val d = Files.createTempDirectory(prefix).toFile
+    tempDirs.add(d)
+    d.toString
+  }
+
+  /** Custom metric `name` of the one DataSourceV2 batch scan in `df`'s
+    * executed plan — read after `df` ran, once (the metric sums over
+    * every execution of that plan). */
+  def scanMetric(df: DataFrame, name: String): Long = {
+    def scans(p: SparkPlan): Seq[BatchScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case b: BatchScanExec => Seq(b)
+      case other => other.children.flatMap(scans)
+    }
+    scans(df.queryExecution.executedPlan) match {
+      case Seq(b) => b.metrics(name).value
+      case found => throw new IllegalStateException(
+        s"expected one BatchScanExec, found ${found.size}:\n${df.queryExecution.executedPlan}")
+    }
   }
 
   /** Runs `body` with one session conf set, restoring the old value (or
