@@ -3,6 +3,7 @@ package graft.mapreduce
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 import graft.core.SchemaOps
@@ -133,12 +134,21 @@ object Assign {
   *  - [[Reduce.FoldAndAddKey]] → `groupBy().agg()` — hash aggregate with
   *    map-side partial aggregation; the ONLY variant that avoids shuffling
   *    raw rows. Always prefer it.
-  *  - [[Reduce.ReduceAndAddKey]] → `mapGroups` — arbitrary Scala per group,
-  *    one output row; full shuffle of the projected rows (the perf cliff
-  *    documented in SURVEY §7.4).
-  *  - [[Reduce.MakeRecsWithKey]] → `flatMapGroups` — arbitrary Scala per
-  *    group, many output rows (per-group top-k etc.); same cliff. Cases
-  *    expressible as window functions should use those instead.
+  *  - [[Reduce.ReduceAndAddKey]] (one output row per group) and
+  *    [[Reduce.MakeRecsWithKey]] / [[Reduce.MakeRecsWithKeyM]] (many, e.g.
+  *    per-group top-k) → arbitrary Scala per group, both through
+  *    `MapReduce.grouped`'s `flatMapGroups`: a full shuffle of the
+  *    projected rows and a sort of each reduce task's rows by key (the perf
+  *    cliff documented in SURVEY §7.4). Cases expressible as window
+  *    functions should use those instead.
+  *
+  * The grouped shuffle is a rebalance on the key columns into more buckets
+  * than the session has task slots, so adaptive execution can give a few
+  * large groups a task each instead of letting hash placement stack them
+  * into one task's sort (see `MapReduce.grouped`). Rows are not grouped in
+  * an in-heap hash map to skip that sort: the map would hold every row of
+  * a task outside Spark's memory accounting, lowering the tracked peak
+  * without lowering the memory used, where the sort spills.
   */
 sealed trait Reduce
 
@@ -226,6 +236,14 @@ object MapReduce {
     * this projection too, `src/Frames/MapReduce.hs:124`) — with an opaque
     * closure downstream, Catalyst cannot prune columns for us, so we must.
     *
+    * With keys, the rows are first rebalanced on the key columns
+    * ([[spread]]): a group's rows still meet in one task, and
+    * `flatMapGroups` reuses that exchange. Adaptive execution drops the
+    * empty buckets and merges small ones up to about the total over the
+    * cores. Its skew split never divides a group: a split read would not
+    * satisfy the grouping's distribution, so adaptive execution keeps the
+    * unsplit one.
+    *
     * With no key columns every row is in one group: the rows are moved to
     * a single partition and `f` runs once over all of them (Spark's
     * grouped operators reject an empty grouping). An empty input yields no
@@ -259,7 +277,7 @@ object MapReduce {
       // and re-serialising every row to compute the key. The value rows are
       // the full projection — a value encoder over the data columns alone
       // fails analysis (its deserializer must bind every input column).
-      projected
+      spread(projected, keys)
         .groupBy(keys.map(col): _*)
         .as[Row, Row](Encoders.row(keySchema), Encoders.row(projected.schema))
         .flatMapGroups { (k: Row, rows: Iterator[Row]) =>
@@ -267,5 +285,22 @@ object MapReduce {
             new GenericRowWithSchema((k.toSeq ++ cells).toArray, fullSchema): Row
           }
         }(outEnc)
+  }
+
+  /** `df` rebalanced on `keys` into more buckets than task slots when
+    * adaptive coalescing is on: `spark.sql.shuffle.partitions`, raised to
+    * its default of 200 — enough that hash placement rarely puts two large
+    * groups in one bucket, and still at most
+    * `spark.shuffle.sort.bypassMergeThreshold` (200), so the map side keeps
+    * its bypass writer. Without coalescing every bucket would run as a
+    * task (and without adaptive execution Spark ignores the hint), so `df`
+    * is returned as it is and the grouping plans its own hash exchange
+    * over `spark.sql.shuffle.partitions`. */
+  private def spread(df: DataFrame, keys: Seq[String]): DataFrame = {
+    val conf = df.sparkSession.sessionState.conf
+    if (conf.adaptiveExecutionEnabled && conf.coalesceShufflePartitionsEnabled) {
+      val n = math.max(conf.numShufflePartitions, SQLConf.SHUFFLE_PARTITIONS.defaultValue.get)
+      df.hint("rebalance", n +: keys.map(col): _*)
+    } else df
   }
 }

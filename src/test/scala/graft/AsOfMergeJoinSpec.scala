@@ -16,7 +16,7 @@ class AsOfMergeJoinSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def viaParquet(df: DataFrame, name: String): DataFrame = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_asofmerge_$name"
+    val p = TestSpark.tempDir(s"graft_asofmerge_$name") + "/t"
     df.write.mode("overwrite").parquet(p)
     spark.read.parquet(p)
   }

@@ -25,7 +25,7 @@ object AsOfMergeProps extends Properties("AsOfMerge") {
       sys.env.get("SPARK_GRAFT_PROPS_N").map(_.toInt).getOrElse(6))
 
   private def viaParquet(df: DataFrame, name: String): DataFrame = {
-    val p = s"${System.getProperty("java.io.tmpdir")}/graft_asofprops_$name"
+    val p = TestSpark.tempDir(s"graft_asofprops_$name") + "/t"
     df.write.mode("overwrite").parquet(p)
     spark.read.parquet(p)
   }

@@ -171,7 +171,7 @@ class BpeSpec extends AnyFunSuite {
   test("saveMerges/loadMerges parquet artifact: loaded model == in-memory, encode identical") {
     val df = corpus.toDF("text")
     val merges = Bpe.trainMerges(df, "text", 15)
-    val path = java.nio.file.Files.createTempDirectory("bpe_artifact").toString + "/merges"
+    val path = TestSpark.tempDir("bpe_artifact") + "/merges"
     Bpe.saveMerges(spark, merges, path)
     val loaded = Bpe.loadMerges(spark, path)
     assert(loaded == merges)

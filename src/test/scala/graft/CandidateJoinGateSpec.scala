@@ -25,7 +25,7 @@ class CandidateJoinGateSpec extends AnyFunSuite {
   /** The first 500 docs as a parquet file of their own, so the plan
     * estimate is the slice's bytes (a filter keeps its input's estimate). */
   private lazy val slice = {
-    val path = java.nio.file.Files.createTempDirectory("candidate_join_gate").toString + "/slice"
+    val path = TestSpark.tempDir("candidate_join_gate") + "/slice"
     docs.where(col("doc_id") < 500).write.parquet(path)
     spark.read.parquet(path)
   }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,7 +19,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.graftcat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_catalog_spec").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_catalog_spec")
 
   private def withBucketing[A](body: => A): A = {
     val confs = Seq(

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,7 +22,7 @@ class GraftShardChangesSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.cdfcat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_cdf_spec").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_cdf_spec")
 
   private def withMor[A](body: => A): A = {
     spark.conf.set("spark.graftshard.rowLevel.mode", "merge-on-read")
@@ -163,7 +161,7 @@ class GraftShardChangesSpec extends AnyFunSuite {
       .option("changesFrom", v0).load(dir)
       .writeStream.format("memory").queryName("cdf_stream")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_cdf_ckpt").toString)
+        TestSpark.tempDir("graft_cdf_ckpt"))
       .start()
     try {
       q.processAllAvailable()
@@ -191,7 +189,7 @@ class GraftShardChangesSpec extends AnyFunSuite {
         .option("changesFrom", v0).option("changesTo", v0 + 1).load(dir)
         .writeStream.format("memory").queryName("cdf_stream_bad")
         .option("checkpointLocation",
-          Files.createTempDirectory("graft_cdf_ckpt2").toString)
+          TestSpark.tempDir("graft_cdf_ckpt2"))
         .start().processAllAvailable()
     }
     val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
@@ -220,7 +218,7 @@ class GraftShardChangesSpec extends AnyFunSuite {
         if (vs.nonEmpty) perBatch.add(vs): Unit
       })
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_cdf_adm_ckpt").toString)
+        TestSpark.tempDir("graft_cdf_adm_ckpt"))
       .start()
     try q.processAllAvailable() finally q.stop()
     val batches = perBatch.toArray(Array.empty[Set[Long]]).toSeq
@@ -234,7 +232,7 @@ class GraftShardChangesSpec extends AnyFunSuite {
         .option("changesFrom", v0).option("maxVersionsPerTrigger", "0").load(dir)
         .writeStream.format("memory").queryName("cdf_adm_bad")
         .option("checkpointLocation",
-          Files.createTempDirectory("graft_cdf_adm_ckpt2").toString)
+          TestSpark.tempDir("graft_cdf_adm_ckpt2"))
         .start().processAllAvailable()
     }
     val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
@@ -243,7 +241,7 @@ class GraftShardChangesSpec extends AnyFunSuite {
   }
 
   test("overwrite reports all old rows deleted and all new rows inserted; column pruning works") {
-    val dir = Files.createTempDirectory("graft_cdf_path").toString + "/t"
+    val dir = TestSpark.tempDir("graft_cdf_path") + "/t"
     spark.range(0, 30).select(col("id"))
       .coalesce(1).write.format("graftshard").mode("overwrite").save(dir) // v1
     spark.range(100, 110).select(col("id"))
@@ -261,7 +259,7 @@ class GraftShardChangesSpec extends AnyFunSuite {
   }
 
   test("changesFrom=0 consumes the first commit's inserts (no v0 snapshot required)") {
-    val dir = Files.createTempDirectory("graft_cdf_zero").toString + "/t"
+    val dir = TestSpark.tempDir("graft_cdf_zero") + "/t"
     spark.range(0, 20).select(col("id"))
       .coalesce(1).write.format("graftshard").mode("overwrite").save(dir) // v1
     spark.range(20, 25).select(col("id"))
@@ -275,7 +273,7 @@ class GraftShardChangesSpec extends AnyFunSuite {
       .option("changesFrom", 0).load(dir)
       .writeStream.format("memory").queryName("cdf_zero")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_cdf_zero_ckpt").toString)
+        TestSpark.tempDir("graft_cdf_zero_ckpt"))
       .start()
     try {
       q.processAllAvailable()
@@ -284,7 +282,7 @@ class GraftShardChangesSpec extends AnyFunSuite {
   }
 
   test("changesFromTimestamp resolves wall-clock to the newest commit at or before it") {
-    val dir = Files.createTempDirectory("graft_cdf_ts").toString + "/t"
+    val dir = TestSpark.tempDir("graft_cdf_ts") + "/t"
     spark.range(0, 10).select(col("id"))
       .coalesce(1).write.format("graftshard").mode("overwrite").save(dir) // v1
     Thread.sleep(5) // distinct createdAtMs per commit
@@ -318,7 +316,7 @@ class GraftShardChangesSpec extends AnyFunSuite {
       .option("changesFromTimestamp", ts(2)).load(dir)
       .writeStream.format("memory").queryName("cdf_ts_stream")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_cdf_ts_ckpt").toString)
+        TestSpark.tempDir("graft_cdf_ts_ckpt"))
       .start()
     try {
       q.processAllAvailable()
@@ -327,7 +325,7 @@ class GraftShardChangesSpec extends AnyFunSuite {
   }
 
   test("multi-commit WAP publish is ONE gap-free feed commit; a staged upsert taints the published op") {
-    val dir = Files.createTempDirectory("graft_cdf_wap").toString
+    val dir = TestSpark.tempDir("graft_cdf_wap")
     spark.range(0, 20).select(col("id"), (col("id") * 2L).as("v"))
       .coalesce(1).write.format("graftshard").mode("overwrite").save(dir)
     val v0 = ShardFormat.readManifest(dir).get.version

@@ -1,6 +1,5 @@
 package graft
 
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -75,7 +74,7 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
     assert(proj.collect().length == 1000)
   }
 
-  test("metadata columns and LIMIT stay columnar, exact against the row path") {
+  test("metadata columns and LIMIT stay columnar, exact against the written rows") {
     val dir = tmp()
     wideRows(0, 200).coalesce(2)
       .write.format("graftshard").mode("overwrite").save(dir)
@@ -159,7 +158,7 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
     assert(viaBatch == want)
   }
 
-  test("filtered scans stay columnar: all-match, partial, and zero-match batches equal the row path") {
+  test("filtered scans stay columnar: all-match, partial, and zero-match batches equal the written rows") {
     val dir = tmp()
     wideRows(0, 400).coalesce(1)
       .write.format("graftshard").mode("overwrite").save(dir)
@@ -280,7 +279,7 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
     assert(got.toSeq == want)
   }
 
-  test("equality deletes (upsert ingestion) stay columnar and match the row path") {
+  test("equality deletes (upsert ingestion) stay columnar and match the written rows after upserts") {
     val dir = tmp()
     spark.range(0, 5000).select(col("id"), (col("id") * 10).as("v"),
       concat(lit("r"), col("id")).as("s"))
@@ -461,7 +460,7 @@ class GraftShardColumnarReadSpec extends AnyFunSuite {
     chk(col("lang") === "never", wantRows = false)      // all-false table
   }
 
-  test("string-key equality deletes over dict chunks test the dictionary domain, exact vs the row path") {
+  test("string-key equality deletes over dict chunks test the dictionary domain, exact vs the written rows") {
     val dir = tmp()
     // 500 distinct keys over 50k rows: the key column dict-encodes, so
     // the upsert's eq-delete key set folds onto the chunk dictionary

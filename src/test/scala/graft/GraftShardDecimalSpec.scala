@@ -1,6 +1,5 @@
 package graft
 
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.functions._
@@ -31,7 +30,7 @@ class GraftShardDecimalSpec extends AnyFunSuite {
         .cast(DecimalType(10, 2)).as("price"),
       (col("id") % 7).as("grp"))
 
-  test("roundtrip: decimals (negatives, nulls) survive exactly; batch == row; schema keeps (p, s)") {
+  test("roundtrip: decimals (negatives, nulls) equal the written rows exactly; scans stay columnar; schema keeps (p, s)") {
     val dir = tmp()
     frame(3000).write.format("graftshard").mode("overwrite").save(dir)
     val back = spark.read.format("graftshard").load(dir)

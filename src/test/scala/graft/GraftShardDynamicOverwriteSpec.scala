@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,7 +21,7 @@ class GraftShardDynamicOverwriteSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.dyncat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_dyn_spec").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_dyn_spec")
 
   test("overwritePartitions replaces exactly the incoming keys; others carry by identity") {
     spark.sql("CREATE NAMESPACE dyncat.a")

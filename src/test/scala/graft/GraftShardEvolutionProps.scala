@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Properties, Test}
@@ -30,7 +28,7 @@ object GraftShardEvolutionProps extends Properties("GraftShardEvolution") {
     s.sql("CREATE NAMESPACE IF NOT EXISTS evprops.fuzz")
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_evolution_props").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_evolution_props")
 
   // column identity is positional-at-birth: the model tracks (name,
   // type) per live column and appends values by position

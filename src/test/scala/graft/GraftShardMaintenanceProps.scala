@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.functions._
@@ -29,7 +28,7 @@ object GraftShardMaintenanceProps extends Properties("GraftShardMaintenance") {
     s.conf.set("spark.sql.catalog.mpcat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_maint_props").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_maint_props")
   private val walk = new AtomicInteger(0)
 
   private sealed trait Op

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,7 +22,7 @@ class GraftShardMergeOnReadSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.morcat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_mor_spec").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_mor_spec")
 
   private def withMor[A](body: => A): A = {
     spark.conf.set("spark.graftshard.rowLevel.mode", "merge-on-read")

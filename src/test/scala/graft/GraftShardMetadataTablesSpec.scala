@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,7 +19,7 @@ class GraftShardMetadataTablesSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.metacat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_meta_spec").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_meta_spec")
 
   test("files face mirrors the manifest: names, sizes, rows, partitions, delete vectors") {
     spark.sql("CREATE NAMESPACE metacat.f")

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,7 +22,7 @@ class GraftShardRowLevelSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.rlcat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_rowlevel_spec").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_rowlevel_spec")
 
   private def shardSnapshot(dir: String): Map[String, Long] =
     Option(new File(dir).listFiles()).getOrElse(Array.empty)
@@ -188,7 +187,7 @@ class GraftShardRowLevelSpec extends AnyFunSuite {
   }
 
   test("copy-on-write abort deletes the written files and their bloom sidecars") {
-    val dir = Files.createTempDirectory("graft_rowlevel_abort").toString
+    val dir = TestSpark.tempDir("graft_rowlevel_abort")
     spark.range(0, 20).select(col("id"), (col("id") * 3L).as("v"))
       .coalesce(1).write.format("graftshard").mode("overwrite")
       .option("bloomColumns", "id").save(dir)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,7 +23,7 @@ class GraftShardSchemaEvolutionSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.evcat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_evolution_spec").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_evolution_spec")
 
   private def shardSnapshot(dir: String): Map[String, Long] =
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)

@@ -119,8 +119,7 @@ object GraftShardSourceProps extends Properties("GraftShardSource") {
     Option(r.get(11)).map(_.asInstanceOf[scala.collection.Seq[Int]].toSeq).orNull,
     Option(r.get(12)).map(_.asInstanceOf[scala.collection.Seq[Long]].toSeq).orNull)
 
-  private val dirBase =
-    s"${System.getProperty("java.io.tmpdir")}/graft_shardprops_${ProcessHandle.current().pid()}"
+  private lazy val dirBase = TestSpark.tempDir("graft_shardprops") + "/t"
   private var n = 0
 
   property("write -> read roundtrip over the full supported value space") =

@@ -1,6 +1,5 @@
 package graft
 
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -48,7 +47,7 @@ class GraftShardTokenArraySpec extends AnyFunSuite {
         if (r.isNullAt(2)) None else Some(r.getSeq[Long](2).toList))
     }.sortBy(_._1).toSeq
 
-  test("token arrays roundtrip byte-exact across codecs, null and empty cells, both read paths") {
+  test("token arrays roundtrip byte-exact across codecs, null and empty cells, against a Parquet copy of the written rows") {
     val dir = tmp()
     val oracle = tmp() + "_parquet"
     tokRows(0, 400).coalesce(1)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
@@ -56,7 +54,7 @@ object GraftShardTopNProps extends Properties("GraftShardTopN") {
   property("ORDER BY col LIMIT k through the file cut equals the in-memory top-k for any geometry") =
     Prop.forAll(caseGen) { case (files, desc, nullsFirst, k, asString, thr) =>
       import spark.implicits._
-      val dir = Files.createTempDirectory("graft_topn_props").toString + "/t"
+      val dir = TestSpark.tempDir("graft_topn_props") + "/t"
       var first = true
       files.foreach { vs =>
         val df =

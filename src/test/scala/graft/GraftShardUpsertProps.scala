@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
@@ -46,7 +44,7 @@ object GraftShardUpsertProps extends Properties("GraftShardUpsert") {
       val s = spark
       import s.implicits._
       val rnd = new scala.util.Random(seed)
-      val dir = Files.createTempDirectory("graft_upsert_props").toString + "/t"
+      val dir = TestSpark.tempDir("graft_upsert_props") + "/t"
       val model = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
       var nextKey = 0L
       def freshKeys(n: Int): Seq[Long] = {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,7 +20,7 @@ class GraftShardZOrderSpec extends AnyFunSuite {
     s.conf.set("spark.sql.catalog.zcat.warehouse", warehouse)
     s
   }
-  private lazy val warehouse = Files.createTempDirectory("graft_zorder_spec").toString
+  private lazy val warehouse = TestSpark.tempDir("graft_zorder_spec")
 
   // surviving/total file counts from the scan's plan description
   private def filesOf(df: DataFrame): (Int, Int) = {
@@ -73,7 +71,7 @@ class GraftShardZOrderSpec extends AnyFunSuite {
       col("y") >= 64 && col("y") < 80).count() == 16 * 16)
 
     // the 1-D control: same grid sorted by x only
-    val xdir = Files.createTempDirectory("graft_zorder_1d").toString + "/t"
+    val xdir = TestSpark.tempDir("graft_zorder_1d") + "/t"
     grid.repartitionByRange(nFiles, col("x"))
       .sortWithinPartitions("x")
       .write.format("graftshard").mode("overwrite").save(xdir)
@@ -165,7 +163,7 @@ class GraftShardZOrderSpec extends AnyFunSuite {
   }
 
   test("zorderBy is refused with partitionKey/sortWithinShards and on non-integral columns") {
-    val dir = Files.createTempDirectory("graft_zorder_err").toString + "/t"
+    val dir = TestSpark.tempDir("graft_zorder_err") + "/t"
     val df = spark.range(10).select(col("id"), (col("id") % 3).as("k"),
       col("id").cast("string").as("s"))
     val e1 = intercept[Exception] {

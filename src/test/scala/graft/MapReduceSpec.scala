@@ -153,6 +153,69 @@ class MapReduceSpec extends AnyFunSuite {
         rows => Seq[Any](rows.map(_.getDouble(0)).sum)))
     assert(out.count() == 0)
   }
+
+  /** 120k rows in 6 keys of 20k rows each, a third of them null keys when
+    * `nullKeys` — each group far above a 16 KB advisory partition size. */
+  private def groupedInput(nullKeys: Boolean) = spark.range(0, 120000, 1, 4).select(
+    (if (nullKeys) when(col("id") % 3 === 0, lit(null)).otherwise(col("id") % 6)
+     else col("id") % 6).cast("string").as("k"),
+    col("id").cast("double").as("v"))
+
+  private val countAndMax = Reduce.ReduceAndAddKey(
+    StructType(Seq(StructField("n", LongType), StructField("max_v", DoubleType))),
+    { rows =>
+      var n = 0L
+      var mx = Double.MinValue
+      rows.foreach { r => n += 1; mx = math.max(mx, r.getDouble(0)) }
+      Seq[Any](n, mx)
+    })
+  private val top2 = Reduce.MakeRecsWithKey(
+    StructType(Seq(StructField("v", DoubleType))),
+    rows => rows.map(_.getDouble(0)).toSeq.sorted.reverse.take(2).iterator.map(v => Seq[Any](v)))
+
+  /** Every (case, rows) of the general Reduce over `groupedInput`: keyed,
+    * null-key, no-key and empty, for both reduces. */
+  private def generalReduceCases: Seq[(String, Seq[Row])] = {
+    def rows(nullKeys: Boolean, keys: Seq[String], empty: Boolean, r: Reduce) =
+      MapReduce(groupedInput(nullKeys), Unpack.FilterRow(if (empty) col("v") < 0 else lit(true)),
+        Assign.KeysAndData(keys, Seq("v")), r).collect().toSeq.sortBy(_.toString)
+    for {
+      (name, nullKeys, keys, empty) <- Seq(
+        ("keyed", false, Seq("k"), false), ("null-key", true, Seq("k"), false),
+        ("no-key", false, Nil, false), ("empty", false, Seq("k"), true))
+      (reduce, r) <- Seq("reduceAndAddKey" -> countAndMax, "makeRecsWithKey" -> top2)
+    } yield (s"$name $reduce", rows(nullKeys, keys, empty, r))
+  }
+
+  test("general Reduce gives the same rows with AQE off, coalescing off and 16 KB partitions") {
+    val expected = generalReduceCases
+    // one row per key, every row counted once: rows equal to these under
+    // a 16 KB advisory size mean the skew split divided no group
+    for ((name, nKeys) <- Seq("keyed reduceAndAddKey" -> 6, "null-key reduceAndAddKey" -> 5)) {
+      val rows = expected.find(_._1 == name).get._2
+      assert(rows.map(_.get(0)).distinct.size == nKeys && rows.size == nKeys, name)
+      assert(rows.map(_.getLong(1)).sum == 120000L, name)
+    }
+    assert(expected.find(_._1 == "empty makeRecsWithKey").get._2.isEmpty)
+    for ((key, value) <- Seq(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16k"))
+      TestSpark.withConf(key, value) {
+        generalReduceCases.zip(expected).foreach { case ((name, got), (_, want)) =>
+          assert(got == want, s"$name under $key=$value")
+        }
+      }
+  }
+
+  test("general Reduce with coalescing off runs spark.sql.shuffle.partitions reduce tasks") {
+    TestSpark.withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+      val out = MapReduce(groupedInput(nullKeys = false), Unpack.NoOp,
+        Assign.KeysAndData(Seq("k"), Seq("v")), countAndMax)
+      val stages = TestSpark.shuffleReads(out.collect(): Unit)
+      assert(stages.map(_.size) == Seq(spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    }
+  }
 }
 
 object MapReduceSpec {

@@ -48,7 +48,7 @@ class QTableSpec extends AnyFunSuite {
   }
 
   test("8-file copies: footer schema == inferred schema, no job") {
-    val dir = Files.createTempDirectory("qtable_8files").toString
+    val dir = TestSpark.tempDir("qtable_8files")
     for (t <- tables)
       spark.read.parquet(s"${dirs(1)}/$t.parquet").repartition(8)
         .write.parquet(s"$dir/$t.parquet")
@@ -57,7 +57,7 @@ class QTableSpec extends AnyFunSuite {
   }
 
   test("a directory whose files differ: the footer read is the first data file's, as inference's") {
-    val dir = Files.createTempDirectory("qtable_first").toString
+    val dir = TestSpark.tempDir("qtable_first")
     val path = s"$dir/t.parquet"
     spark.range(3).selectExpr("id", "cast(id as string) as s").coalesce(1)
       .write.parquet(s"$dir/wide")
@@ -82,7 +82,7 @@ class QTableSpec extends AnyFunSuite {
   }
 
   test("a TIMESTAMP(NANOS) column: BIGINT under nanosAsLong, rejected without it, as inference does") {
-    val path = Files.createTempDirectory("qtable_nanos").toString + "/events.parquet"
+    val path = TestSpark.tempDir("qtable_nanos") + "/events.parquet"
     val schema = MessageTypeParser.parseMessageType(
       "message m { required int64 ts (TIMESTAMP(NANOS,false)); }")
     val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(new Path(path), new Configuration()))
@@ -101,7 +101,7 @@ class QTableSpec extends AnyFunSuite {
   }
 
   test("other layouts take Spark's own read: missing path, no data file, subdirectories") {
-    val dir = Files.createTempDirectory("qtable_other").toString
+    val dir = TestSpark.tempDir("qtable_other")
     intercept[AnalysisException](Q.table(spark, dir, "missing"))
     Files.createDirectory(java.nio.file.Paths.get(s"$dir/empty.parquet"))
     assert(Q.footerSchema(spark, s"$dir/empty.parquet").isEmpty)

@@ -27,8 +27,7 @@ class RecodeRuleSpec extends AnyFunSuite {
     * that carries the rewrite. */
   private def parquetBacked(df: org.apache.spark.sql.DataFrame, tag: String)
       : org.apache.spark.sql.DataFrame = {
-    val p = s"${sys.props("java.io.tmpdir")}/graft_recodespec_${tag}_" +
-      s"${ProcessHandle.current().pid()}"
+    val p = TestSpark.tempDir(s"graft_recodespec_$tag") + "/t"
     df.write.mode("overwrite").parquet(p)
     spark.read.parquet(p)
   }

@@ -92,7 +92,7 @@ class RetrievalSpec extends AnyFunSuite {
   }
 
   test("indexed probe ≡ direct bm25TopK (same rows, same scores, same ranks)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_inv_eq").toString
+    val dir = TestSpark.tempDir("graft_inv_eq")
     Retrieval.writeInvertedIndex(corpusDf, "doc_id", "text", dir, buckets = 4)
     val queryTerms = qt((100L, "cat"), (100L, "mat"), (101L, "dog"), (101L, "log"))
     val direct = Retrieval.bm25TopK(corpusDf, queryTerms, "doc_id", "text", k = 10)
@@ -105,8 +105,8 @@ class RetrievalSpec extends AnyFunSuite {
 
   test("append face: build(A) then append(B) ≡ build(A ∪ B) — df/avgdl stay exact") {
     val (a, b) = corpus.splitAt(3)
-    val dirInc = java.nio.file.Files.createTempDirectory("graft_inv_inc").toString
-    val dirFull = java.nio.file.Files.createTempDirectory("graft_inv_full").toString
+    val dirInc = TestSpark.tempDir("graft_inv_inc")
+    val dirFull = TestSpark.tempDir("graft_inv_full")
     Retrieval.writeInvertedIndex(a.toDF("doc_id", "text"), "doc_id", "text", dirInc, buckets = 4)
     Retrieval.appendToInvertedIndex(b.toDF("doc_id", "text"), "doc_id", "text", dirInc, buckets = 4)
     Retrieval.writeInvertedIndex(corpusDf, "doc_id", "text", dirFull, buckets = 4)
@@ -117,7 +117,7 @@ class RetrievalSpec extends AnyFunSuite {
     val (inc, full) = (run(dirInc), run(dirFull))
     assert(inc == full)
     // appending CHANGED df/avgdl vs the A-only index — prove the probe saw it
-    val aOnly = java.nio.file.Files.createTempDirectory("graft_inv_aonly").toString
+    val aOnly = TestSpark.tempDir("graft_inv_aonly")
     Retrieval.writeInvertedIndex(a.toDF("doc_id", "text"), "doc_id", "text", aOnly, buckets = 4)
     assert(run(aOnly) != full)
     CacheRegistry.unpersistAll()
@@ -132,7 +132,7 @@ class RetrievalSpec extends AnyFunSuite {
     val df = docs.toDF("doc_id", "text")
     val queries = Retrieval.queryTermsFromText(
       df.where($"doc_id" % 10 === 0), "doc_id", "text", 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft_inv_rand").toString
+    val dir = TestSpark.tempDir("graft_inv_rand")
     Retrieval.writeInvertedIndex(df, "doc_id", "text", dir, buckets = 8)
     val direct = Retrieval.bm25TopK(df, queries, "doc_id", "text", k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
@@ -152,7 +152,7 @@ class RetrievalSpec extends AnyFunSuite {
     val ref = referenceScores(corpus, Map(9L -> Seq("cat")))
     assert(pruned.map(_._2) == ref.keySet.map(_._2))
     for ((q, d, s, _) <- pruned) assert(s == round9(ref((q, d))))
-    val dir = java.nio.file.Files.createTempDirectory("graft_inv_prune").toString
+    val dir = TestSpark.tempDir("graft_inv_prune")
     Retrieval.writeInvertedIndex(corpusDf, "doc_id", "text", dir, buckets = 4)
     val prunedIdx = Retrieval.bm25TopKIndexed(spark, dir, queryTerms, k = 10,
       buckets = 4, maxDfFraction = 0.4)

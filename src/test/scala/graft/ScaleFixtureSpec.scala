@@ -17,7 +17,7 @@ class ScaleFixtureSpec extends AnyFunSuite {
   }
 
   test("ScaleFixture: 10 distinct multi-file copies of the id tables, the rest unchanged") {
-    val out = Files.createTempDirectory("scale-fixture").toString
+    val out = TestSpark.tempDir("scale-fixture")
     ScaleFixture.build(spark, src, out)
     assert(tables(out) == tables(src))
 

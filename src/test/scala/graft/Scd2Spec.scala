@@ -102,7 +102,7 @@ class Scd2Spec extends AnyFunSuite {
   test("plan: applyChanges adds exactly one window (the rebuilt branch); history only filters") {
     // materialized dim (parquet-backed, as in production) so the plan shows
     // what happens to EXISTING history: reads + filters + joins, no Window
-    val dir = java.nio.file.Files.createTempDirectory("scd2dim").toString
+    val dir = TestSpark.tempDir("scd2dim")
     Scd2.fromChangeLog(log, "k", "ts", "seq").write.mode("overwrite").parquet(dir)
     val dim = spark.read.parquet(dir)
     val inc = Seq((1L, 40L, 11L, "d")).toDF("k", "ts", "seq", "attr")

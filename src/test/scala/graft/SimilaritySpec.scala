@@ -68,7 +68,7 @@ class SimilaritySpec extends AnyFunSuite {
     // the 100 TB layout claim made concrete: assign lists, write
     // partitioned by list_id, read back with a probe filter — the scan
     // must show PartitionFilters, i.e. a probe touches nprobe/nlist files
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = TestSpark.tempDir("graft_ivf")
     val assigned = Similarity.withHyperplaneBuckets(vecs, "embedding", 2, 4)
       .withColumnRenamed("bucket", "list_id")
     assigned.write.mode("overwrite").partitionBy("list_id").parquet(dir)
@@ -298,7 +298,7 @@ class SimilaritySpec extends AnyFunSuite {
       .toSeq.sortBy(t => (t._1, t._4))
 
   test("ivfTopKIndexed: index-at-rest result equals the in-memory IVF") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString
+    val dir = TestSpark.tempDir("graft_ivf_idx")
     Similarity.writeIvfIndex(vecs, "vec_id", "embedding", dir, nlist = Some(3))
     val queries = vecs.where(col("vec_id") === 0)
     val mem = canonTopK(Similarity.ivfTopK(vecs, queries, "vec_id", "embedding",
@@ -310,7 +310,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("writeIvfIndex with k-means centroids: quality path equals the in-memory trained IVF") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_km").toString
+    val dir = TestSpark.tempDir("graft_ivf_km")
     // ONE training run serves both faces: Lloyd centroid values are
     // shuffle-order dependent (the s4 rows-only rationale), so comparing
     // two independent trainings bit-for-bit would be latently flaky
@@ -328,7 +328,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("lshTopKIndexed: bucket-partitioned index equals the in-memory LSH") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_idx").toString
+    val dir = TestSpark.tempDir("graft_lsh_idx")
     Similarity.writeLshIndex(vecs, "vec_id", "embedding", dir, planes = 4, dims = 4)
     val queries = vecs.where(col("vec_id") === 0)
     val mem = canonTopK(Similarity.lshTopK(vecs, queries, "vec_id", "embedding",
@@ -340,7 +340,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("appendToIvfIndex: build(A) + append(B) answers like build(A ∪ B) under A's quantizer") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_app").toString
+    val dir = TestSpark.tempDir("graft_ivf_app")
     val a = vecs.where(col("vec_id") <= 2)
     val b = vecs.where(col("vec_id") > 2)
     Similarity.writeIvfIndex(a, "vec_id", "embedding", dir, nlist = Some(2))
@@ -349,7 +349,7 @@ class SimilaritySpec extends AnyFunSuite {
     val cents = spark.read.parquet(s"$dir/centroids")
       .orderBy(col("cid")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val full = java.nio.file.Files.createTempDirectory("graft_ivf_full").toString
+    val full = TestSpark.tempDir("graft_ivf_full")
     Similarity.writeIvfIndex(vecs, "vec_id", "embedding", full,
       centroids = Some((cents.map(_._1), cents.map(_._2))))
     val queries = vecs.where(col("vec_id") === 0)
@@ -362,11 +362,11 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("appendToLshIndex: incremental build equals the one-shot build") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_app").toString
+    val dir = TestSpark.tempDir("graft_lsh_app")
     Similarity.writeLshIndex(vecs.where(col("vec_id") <= 2), "vec_id", "embedding",
       dir, planes = 4, dims = 4)
     Similarity.appendToLshIndex(vecs.where(col("vec_id") > 2), "vec_id", "embedding", dir)
-    val full = java.nio.file.Files.createTempDirectory("graft_lsh_full").toString
+    val full = TestSpark.tempDir("graft_lsh_full")
     Similarity.writeLshIndex(vecs, "vec_id", "embedding", full, planes = 4, dims = 4)
     val queries = vecs.where(col("vec_id") === 0)
     val inc = canonTopK(Similarity.lshTopKIndexed(spark, dir, queries,
@@ -378,7 +378,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("writeIvfIndex refuses an empty corpus instead of writing a partial index") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_empty").toString
+    val dir = TestSpark.tempDir("graft_ivf_empty")
     intercept[IllegalArgumentException] {
       Similarity.writeIvfIndex(vecs.where(col("vec_id") < 0),
         "vec_id", "embedding", dir, nlist = Some(3))

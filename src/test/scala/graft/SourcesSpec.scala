@@ -21,7 +21,7 @@ class SourcesSpec extends AnyFunSuite {
     StructField("y", DoubleType)))
 
   private def writeCsv(rows: String): String = {
-    val dir = Files.createTempDirectory("graft_csv")
+    val dir = java.nio.file.Paths.get(TestSpark.tempDir("graft_csv"))
     Files.writeString(dir.resolve("data.csv"), rows)
     dir.toString
   }
@@ -68,7 +68,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("JSON lines: type-mismatched cells null out, garbage lines captured not fatal") {
-    val dir = Files.createTempDirectory("graft_json")
+    val dir = java.nio.file.Paths.get(TestSpark.tempDir("graft_json"))
     Files.writeString(dir.resolve("data.json"),
       """{"label":"A","x":1.5,"y":2.0}
         |{"label":"B","x":"not a number","y":3.0}
@@ -88,7 +88,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("partitioned parquet sink enables partition pruning on read") {
-    val dir = Files.createTempDirectory("graft_parq").toString + "/t"
+    val dir = TestSpark.tempDir("graft_parq") + "/t"
     import spark.implicits._
     Sources.writePartitioned(
       Seq(("A", 1.0), ("B", 2.0), ("A", 3.0)).toDF("k", "v"), dir, Seq("k"))
@@ -99,7 +99,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("training-shard sink: one file per shard, pos-ordered within it, prunable") {
-    val dir = Files.createTempDirectory("graft_shards").toString + "/t"
+    val dir = TestSpark.tempDir("graft_shards") + "/t"
     import spark.implicits._
     val sharded = graft.pipeline.TrainingPrep.shuffleShard(
       (0L until 200L).toDF("doc_id"), "doc_id", nShards = 4)
@@ -123,8 +123,8 @@ class SourcesSpec extends AnyFunSuite {
 
   test("compact: many small files become the computed target count, data identical") {
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_small").toString
-    val dstDir = java.nio.file.Files.createTempDirectory("graft_compacted").toString
+    val srcDir = TestSpark.tempDir("graft_small")
+    val dstDir = TestSpark.tempDir("graft_compacted")
     val data = (0L until 2000L).map(i => (i, s"row$i")).toDF("id", "v")
     data.repartition(64).write.mode("overwrite").parquet(srcDir) // 64 tiny files
     def parquetFiles(d: String) =
@@ -142,7 +142,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("readParquetMergeSchema: columns added over time come back, null before they existed") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_evolve").toString
+    val dir = TestSpark.tempDir("graft_evolve")
     Seq((1L, "a")).toDF("id", "v").write.mode("append").parquet(dir)
     Seq((2L, "b", 9.5)).toDF("id", "v", "score").write.mode("append").parquet(dir)
     val merged = Sources.readParquetMergeSchema(spark, dir)
@@ -184,7 +184,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("ORC round trip: rows identical, predicate pushed into the ORC scan") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = TestSpark.tempDir("graft_orc")
     val data = (1L to 200L).map(i => (i, s"doc$i", i % 7)).toDF("id", "t", "v")
     Sources.writeOrc(data, dir)
     val back = Sources.readOrc(spark, dir)

@@ -74,7 +74,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming from a real file source: windowedEventAgg over incrementally arriving parquet") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_stream_src").toString
+    val dir = TestSpark.tempDir("graft_stream_src")
     val schema = "ts LONG, event_type STRING, value DOUBLE"
     // first micro-batch of files on disk before the stream starts
     Seq((ns(10), "click", 1.0), (ns(20), "click", 2.0))
@@ -332,7 +332,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming ANN ingest: embeddings stream into the bucketed at-rest layout, probes prune") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_ann").toString
+    val dir = TestSpark.tempDir("graft_stream_ann")
     val source = MemoryStream[(Long, Array[Float])]
     val bucketed = graft.similarity.Similarity.withHyperplaneBuckets(
       source.toDF().toDF("vec_id", "embedding"), "embedding", planes = 2, dims = 4)

@@ -2,11 +2,13 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -15,6 +17,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 /** Shared session for all specs (one JVM per `sbt test` run). */
 object TestSpark {
   lazy val spark: SparkSession = {
+    deleteTempDirsAtExit
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
@@ -27,10 +30,17 @@ object TestSpark {
     s
   }
 
-  // directories made by tempDir, deleted when the test JVM exits
+  // directories made by tempDir, and the artifacts queries wrote for this
+  // JVM (`Q.tmpArtifactPath`: graft_<tag>_<pid>_...), deleted when the test
+  // JVM exits
   private val tempDirs = new ConcurrentLinkedQueue[File]()
-  private lazy val deleteTempDirsAtExit: Unit =
-    sys.addShutdownHook(tempDirs.forEach(d => deleteRecursively(d))): Unit
+  private lazy val deleteTempDirsAtExit: Unit = sys.addShutdownHook {
+    tempDirs.forEach(d => deleteRecursively(d))
+    val artifact = s"_${ProcessHandle.current().pid()}_"
+    Option(new File(sys.props("java.io.tmpdir")).listFiles()).foreach(_.foreach { f =>
+      if (f.getName.startsWith("graft_") && f.getName.contains(artifact)) deleteRecursively(f)
+    })
+  }: Unit
 
   private def deleteRecursively(f: File): Unit = {
     if (f.isDirectory && !Files.isSymbolicLink(f.toPath))
@@ -93,23 +103,51 @@ object TestSpark {
   /** Jobs started while `body` runs, under a job group of its own so that
     * jobs from anywhere else never count. */
   def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"job-count-${java.util.UUID.randomUUID()}"
     val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
+    listened(group => new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job count")
+        if (ofGroup(e.properties, group)) jobs.incrementAndGet()
+    })(body)
+    jobs.get()
+  }
+
+  /** Shuffle records read by each task of every stage that reads a
+    * shuffle, one entry per stage in submission order, while `body` runs
+    * under a job group of its own. A reduce stage's empty partitions read
+    * 0 records but still count as tasks. */
+  def shuffleReads(body: => Unit): Seq[Seq[Long]] = {
+    val stages = new ConcurrentLinkedQueue[Int]()
+    val reads = new ConcurrentHashMap[Int, ConcurrentLinkedQueue[Long]]()
+    listened(group => new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ofGroup(e.properties, group) && e.stageInfo.parentIds.nonEmpty) {
+          reads.putIfAbsent(e.stageInfo.stageId, new ConcurrentLinkedQueue[Long]())
+          stages.add(e.stageInfo.stageId)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        for (q <- Option(reads.get(e.stageId)); m <- Option(e.taskMetrics))
+          q.add(m.shuffleReadMetrics.recordsRead)
+    })(body)
+    stages.asScala.toSeq.map(id => reads.get(id).asScala.toSeq)
+  }
+
+  private def ofGroup(props: java.util.Properties, group: String): Boolean =
+    Option(props).exists(_.getProperty("spark.jobGroup.id") == group)
+
+  /** Runs `body` under a fresh job group with the listener made for that
+    * group added, and waits until the listener has seen every event. */
+  private def listened(listener: String => SparkListener)(body: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val group = s"listened-${java.util.UUID.randomUUID()}"
+    val l = listener(group)
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "listened")
     try {
       body
       ListenerBusDrain(sc)
-      jobs.get()
     } finally {
       sc.clearJobGroup()
-      sc.removeSparkListener(listener)
+      sc.removeSparkListener(l)
     }
   }
 }

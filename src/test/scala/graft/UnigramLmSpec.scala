@@ -93,7 +93,7 @@ class UnigramLmSpec extends AnyFunSuite {
       .map { case (w, ws) => (w, ws.size.toLong) }.toSeq
     val model = UnigramLm.trainLocal(words, vocabSize = 12,
       seedSize = 50, maxPieceLen = 4)
-    val path = java.nio.file.Files.createTempDirectory("unigram_artifact").toString + "/model"
+    val path = TestSpark.tempDir("unigram_artifact") + "/model"
     UnigramLm.saveModel(spark, model, path)
     val loaded = UnigramLm.loadModel(spark, path)
     // full Piece equality: the probs recomputed from persisted counts

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -51,8 +49,8 @@ class ZOrderSpec extends AnyFunSuite {
     val data = spark.range(n).select(
       (col("id") * 2654435761L % 1024).as("x"), // decorrelated from y
       (col("id") % 1024).as("y"))
-    val zDir = Files.createTempDirectory("graft_zorder").toString
-    val linDir = Files.createTempDirectory("graft_linear").toString
+    val zDir = TestSpark.tempDir("graft_zorder")
+    val linDir = TestSpark.tempDir("graft_linear")
     ZOrder.writeZOrdered(data, zDir, Seq("x", "y"), bits = 8, numFiles = 16)
     data.orderBy(col("x")).coalesce(1).repartitionByRange(16, col("x"))
       .sortWithinPartitions(col("x")).write.mode("overwrite").parquet(linDir)
@@ -106,7 +104,7 @@ class ZOrderSpec extends AnyFunSuite {
     val data = spark.range(1024).select(
       col("id").as("x"),
       when(col("id") % 8 === 0, lit(null)).otherwise(col("id")).as("y"))
-    val dir = Files.createTempDirectory("graft_zorder_null").toString
+    val dir = TestSpark.tempDir("graft_zorder_null")
     ZOrder.writeZOrdered(data, dir, Seq("x", "y"), bits = 6, numFiles = 8)
     val back = spark.read.parquet(dir)
     assert(back.count() == 1024 && back.where(col("y").isNull).count() == 128)
